@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spatialdata_spark.session import broadcast_if_single_host
+
 # ---------------------------------------------------------------------------
 # shared synthetic spatial mapping (Spark + SQL must stay in lockstep)
 # ---------------------------------------------------------------------------
@@ -58,6 +60,12 @@ def _schema_key(path: str) -> tuple:
     except OSError:
         return (path, 0, 0)
 
+
+def _table_key(sf_dir: str, name: str) -> tuple:
+    """File identity of a base table: every plan memo derived from the
+    table keys on it, so a file regenerated in-process is re-read."""
+    return _schema_key(f"{sf_dir}/{name}.parquet")
+
 # sessions whose defensive conf (UTC timezone, nanos-as-long) has been
 # applied: each conf.set is a py4j round trip, paid once per session
 # instead of once per _read/_events call (WeakSet so a stopped session
@@ -77,7 +85,7 @@ _CONF_APPLIED: "weakref.WeakSet" = weakref.WeakSet()
 _PLAN_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
-def _plan_memo(spark: SparkSession, key: str, build) -> DataFrame:
+def _plan_memo(spark: SparkSession, key, build) -> DataFrame:
     per_session = _PLAN_MEMO.setdefault(spark, {})
     df = per_session.get(key)
     if df is None:
@@ -131,19 +139,6 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _bcast(df: DataFrame) -> DataFrame:
-    """Broadcast hint gated on a local master (same contract as
-    pipeline/dedup.py): part/supplier/user-dimension sides scale with the
-    data, so under test/bench local[32] the hint skips the shuffle, while
-    on a real cluster the plan stays un-hinted and AQE picks the join
-    strategy from runtime stats (a 100 TB part table must NOT broadcast).
-    Fixed-cardinality dims (nation=25, region=5, 1-row aggregates) keep
-    an unconditional F.broadcast at the call sites."""
-    if df.sparkSession.sparkContext.master.startswith("local"):
-        return F.broadcast(df)
-    return df
-
-
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events has a TIMESTAMP(NANOS) parquet column, which Spark rejects
     by default; read nanos as long and truncate to microseconds (the
@@ -163,7 +158,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
         return df
 
     # file identity in the memo key: see _read
-    return _plan_memo(spark, ("events", _schema_key(f"{sf_dir}/events.parquet")), build)
+    return _plan_memo(spark, ("events", _table_key(sf_dir, "events")), build)
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -171,7 +166,7 @@ def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the D suffix keeps 1000.0 a DOUBLE literal, identical to F.lit)
     return _plan_memo(
         spark,
-        f"points:{sf_dir}",
+        ("points", _table_key(sf_dir, "lineitem")),
         lambda: _read(spark, sf_dir, "lineitem").selectExpr(
             "(l_extendedprice / 1000.0D) AS x",
             "l_quantity AS y",
@@ -194,7 +189,7 @@ def _circles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return circles_to_shapes(c)
 
-    return _plan_memo(spark, f"circles:{sf_dir}", build)
+    return _plan_memo(spark, ("circles", _table_key(sf_dir, "customer")), build)
 
 
 DEC = "DECIMAL(18,2)"
@@ -286,8 +281,8 @@ def q03_shipping(spark, sf_dir):
     cust = _read(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = _read(spark, sf_dir, "orders")
     li = _read(spark, sf_dir, "lineitem")
-    ord2 = orders.join(_bcast(cust), cust["c_custkey"] == orders["o_custkey"])
-    joined = li.join(_bcast(ord2), ord2["o_orderkey"] == li["l_orderkey"])
+    ord2 = orders.join(cust, cust["c_custkey"] == orders["o_custkey"])
+    joined = li.join(broadcast_if_single_host(ord2), ord2["o_orderkey"] == li["l_orderkey"])
     rev = F.col("l_extendedprice").cast(DEC) * (F.lit(1).cast(DEC) - F.col("l_discount").cast(DEC))
     return (
         joined.groupBy("l_orderkey")
@@ -327,12 +322,12 @@ def q05_local_supplier(spark, sf_dir):
     dims = nation.join(F.broadcast(region), region["r_regionkey"] == nation["n_regionkey"])
     cust2 = cust.join(F.broadcast(dims), dims["n_nationkey"] == cust["c_nationkey"])
     ord2 = (
-        orders.join(_bcast(cust2), cust2["c_custkey"] == orders["o_custkey"])
+        orders.join(broadcast_if_single_host(cust2), cust2["c_custkey"] == orders["o_custkey"])
         .select("o_orderkey", "n_name", "n_nationkey")
     )
     joined = (
-        li.join(_bcast(ord2), ord2["o_orderkey"] == li["l_orderkey"])
-        .join(_bcast(supp), (li["l_suppkey"] == supp["s_suppkey"]) & (supp["s_nationkey"] == F.col("n_nationkey")))
+        li.join(broadcast_if_single_host(ord2), ord2["o_orderkey"] == li["l_orderkey"])
+        .join(supp, (li["l_suppkey"] == supp["s_suppkey"]) & (supp["s_nationkey"] == F.col("n_nationkey")))
     )
     return joined.groupBy("n_name").agg(F.sum(rev).cast("double").alias("revenue"))
 
@@ -419,8 +414,8 @@ def q10_returned_items(spark, sf_dir):
     # broadcasting the 600k-row lineitem projection (guide §3.1).
     # Inner-join reordering with exact-DECIMAL aggregation.
     cust2 = cust.join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
-    ord2 = orders.join(_bcast(cust2), cust2["c_custkey"] == orders["o_custkey"])
-    joined = li.join(_bcast(ord2), ord2["o_orderkey"] == li["l_orderkey"])
+    ord2 = orders.join(broadcast_if_single_host(cust2), cust2["c_custkey"] == orders["o_custkey"])
+    joined = li.join(broadcast_if_single_host(ord2), ord2["o_orderkey"] == li["l_orderkey"])
     return joined.groupBy("c_custkey", "c_name", "c_acctbal", "n_name").agg(
         F.sum(rev).cast("double").alias("revenue")
     )
@@ -449,7 +444,7 @@ def q14_promo_effect(spark, sf_dir):
     )
     part = _read(spark, sf_dir, "part")
     rev = F.col("l_extendedprice").cast(DEC) * (F.lit(1).cast(DEC) - F.col("l_discount").cast(DEC))
-    joined = li.join(_bcast(part), li["l_partkey"] == part["p_partkey"])
+    joined = li.join(part, li["l_partkey"] == part["p_partkey"])
     agg = joined.agg(
         F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast(DEC)))
         .cast("double")
@@ -530,7 +525,7 @@ def q19_discounted_revenue(spark, sf_dir):
     (TPC-H Q19 shape, adapted to this schema's brands/sizes)."""
     li = _read(spark, sf_dir, "lineitem")
     part = _read(spark, sf_dir, "part")
-    joined = li.join(_bcast(part), li["l_partkey"] == part["p_partkey"])
+    joined = li.join(part, li["l_partkey"] == part["p_partkey"])
     q = F.col("l_quantity")
     s = F.col("p_size")
     b = F.col("p_brand")
@@ -566,8 +561,8 @@ def q16_parts_supplier_relationship(spark, sf_dir):
     bad = _read(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         F.col("s_suppkey").alias("l_suppkey")
     )
-    links = li.join(_bcast(bad), "l_suppkey", "left_anti")
-    joined = links.join(_bcast(part), links["l_partkey"] == part["p_partkey"])
+    links = li.join(bad, "l_suppkey", "left_anti")
+    joined = links.join(part, links["l_partkey"] == part["p_partkey"])
     return (
         joined.groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
@@ -659,8 +654,8 @@ def q02_min_cost_supplier(spark, sf_dir):
     nation = _read(spark, sf_dir, "nation")
     region = _read(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     joined = (
-        best.join(_bcast(part), best["l_partkey"] == part["p_partkey"])
-        .join(_bcast(supp), best["l_suppkey"] == supp["s_suppkey"])
+        best.join(part, best["l_partkey"] == part["p_partkey"])
+        .join(supp, best["l_suppkey"] == supp["s_suppkey"])
         .join(F.broadcast(nation), supp["s_nationkey"] == nation["n_nationkey"])
         .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
     )
@@ -705,8 +700,8 @@ def q09_product_profit(spark, sf_dir):
         F.lit(1).cast(DEC) - F.col("l_discount").cast(DEC)
     ) - F.col("p_retailprice").cast(DEC) * F.col("l_quantity").cast(DEC) * F.lit(0.8).cast(DEC)
     joined = (
-        li.join(_bcast(part), li["l_partkey"] == part["p_partkey"])
-        .join(_bcast(supp), li["l_suppkey"] == supp["s_suppkey"])
+        li.join(part, li["l_partkey"] == part["p_partkey"])
+        .join(supp, li["l_suppkey"] == supp["s_suppkey"])
         .join(F.broadcast(nation), supp["s_nationkey"] == nation["n_nationkey"])
         .join(orders, li["l_orderkey"] == orders["o_orderkey"])
     )
@@ -742,7 +737,7 @@ def q11_important_stock(spark, sf_dir):
     region = _read(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     val = F.col("l_extendedprice").cast(DEC) * (F.lit(1).cast(DEC) - F.col("l_discount").cast(DEC))
     scoped = (
-        li.join(_bcast(supp), li["l_suppkey"] == supp["s_suppkey"])
+        li.join(supp, li["l_suppkey"] == supp["s_suppkey"])
         .join(F.broadcast(nation), supp["s_nationkey"] == nation["n_nationkey"])
         .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
     )
@@ -813,7 +808,7 @@ def q20_excess_suppliers(spark, sf_dir):
     )
     part = _read(spark, sf_dir, "part").filter(F.col("p_name").startswith("b"))
     ps = (
-        li.join(_bcast(part), li["l_partkey"] == part["p_partkey"])
+        li.join(part, li["l_partkey"] == part["p_partkey"])
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum("l_quantity").alias("ps_qty"))
     )
@@ -825,7 +820,7 @@ def q20_excess_suppliers(spark, sf_dir):
     supp = _read(spark, sf_dir, "supplier")
     nation = _read(spark, sf_dir, "nation")
     return (
-        supp_ids.join(_bcast(supp), supp_ids["l_suppkey"] == supp["s_suppkey"])
+        supp_ids.join(supp, supp_ids["l_suppkey"] == supp["s_suppkey"])
         .join(F.broadcast(nation), supp["s_nationkey"] == nation["n_nationkey"])
         .select("s_name", "n_name")
     )
@@ -869,7 +864,7 @@ def q21_waiting_supplier(spark, sf_dir):
     return (
         waiting.groupBy("late_supp")
         .agg(F.count(F.lit(1)).alias("numwait"))
-        .join(_bcast(supp), F.col("late_supp") == supp["s_suppkey"])
+        .join(supp, F.col("late_supp") == supp["s_suppkey"])
         .select("s_name", "numwait")
     )
 
@@ -961,7 +956,7 @@ def q08_market_share(spark, sf_dir):
     li = _read(spark, sf_dir, "lineitem")
     vol = F.col("l_extendedprice").cast(DEC) * (F.lit(1).cast(DEC) - F.col("l_discount").cast(DEC))
     joined = (
-        li.join(_bcast(part), li["l_partkey"] == part["p_partkey"])
+        li.join(part, li["l_partkey"] == part["p_partkey"])
         .join(supp, li["l_suppkey"] == supp["s_suppkey"])
         .join(orders, li["l_orderkey"] == orders["o_orderkey"])
         .join(cust, orders["o_custkey"] == cust["c_custkey"])
@@ -1066,7 +1061,7 @@ def q17_small_quantity(spark, sf_dir):
 
     li = _read(spark, sf_dir, "lineitem")
     part = _read(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#2")
-    joined = li.join(_bcast(part), li["l_partkey"] == part["p_partkey"])
+    joined = li.join(part, li["l_partkey"] == part["p_partkey"])
     w = Window.partitionBy("l_partkey")
     flagged = joined.withColumn("__avg_qty", F.avg("l_quantity").over(w))
     small = flagged.filter(F.col("l_quantity") < 0.2 * F.col("__avg_qty"))
@@ -1980,7 +1975,7 @@ def _vrect_shapes(spark, sf_dir):
         )
         return boxes_to_shapes(part)
 
-    return _plan_memo(spark, f"vrects:{sf_dir}", build)
+    return _plan_memo(spark, ("vrects", _table_key(sf_dir, "part")), build)
 
 
 def _by_boxes_shapes(spark):
@@ -2181,7 +2176,7 @@ def ag_fractions_value(spark, sf_dir):
     # fixture computes from the key anyway (tools/rescan_audit.py)
     values = _plan_memo(
         spark,
-        f"vrects_val:{sf_dir}",
+        ("vrects_val", _table_key(sf_dir, "part")),
         lambda: _vrect_shapes(spark, sf_dir).withColumn("val", F.col("shape_id") % 7 * 1.0),
     )
     by = _by_boxes_shapes(spark)
@@ -2251,7 +2246,7 @@ def ag_zonal_image(spark, sf_dir):
     # the circle-aggregation cell cover.  Runtime lineitem scans 2 -> 1.
     img = _plan_memo(
         spark,
-        f"ag_zonal_img:{sf_dir}",
+        ("ag_zonal_img", _table_key(sf_dir, "lineitem")),
         lambda: (
             _read(spark, sf_dir, "lineitem")
             .groupBy(
@@ -2541,7 +2536,7 @@ IMG_SQL = (
 def _img_long(spark, sf_dir):
     return _plan_memo(
         spark,
-        f"img_long:{sf_dir}",
+        ("img_long", _table_key(sf_dir, "lineitem")),
         lambda: (
             _read(spark, sf_dir, "lineitem")
             .groupBy((F.col("l_orderkey") % 100).alias("y"), F.col("l_linenumber").cast("long").alias("x"))
@@ -2562,7 +2557,7 @@ def _img_tiles(spark, sf_dir):
 
     return _plan_memo(
         spark,
-        f"img_tiles:{sf_dir}",
+        ("img_tiles", _table_key(sf_dir, "lineitem")),
         lambda: long_to_tiles(_img_long(spark, sf_dir), _img_meta()),
     )
 
@@ -3407,7 +3402,7 @@ def pl_cluster_purity(spark, sf_dir):
     exemplars = [[float(x) for x in r["embedding"]] for r in ex_rows]
     assigned = ivf_exemplar_assign(emb.filter(F.col("vec_id") > 8), exemplars)
     lab = emb.select("vec_id", "label")
-    cl = assigned.join(_bcast(lab), "vec_id").groupBy("cell", "label").agg(
+    cl = assigned.join(lab, "vec_id").groupBy("cell", "label").agg(
         F.count(F.lit(1)).alias("cnt")
     )
     # cell size and the majority row share one partitioning: an
@@ -4467,8 +4462,8 @@ FROM documents
 def pl_dup_spans(spark, sf_dir):
     """Duplicated-substring spans (the exact-substring-dedup cut list):
     every char position emits a 62-bit two-channel rolling gram hash;
-    hashes occurring >1 time corpus-wide survive a broadcast-gated
-    semi-join; a per-document window merges overlapping gram intervals
+    hashes occurring >1 time corpus-wide survive a semi-join;
+    a per-document window merges overlapping gram intervals
     into maximal spans.  The oracle replays the identical integer hash
     arithmetic, so parity is value-exact including any (~2^-62) hash
     collisions."""
@@ -4597,7 +4592,7 @@ def pl_unigram_lm(spark, sf_dir):
     """Mean negative log-likelihood per doc under the corpus's own
     add-one-smoothed unigram LM (the CCNet-style cheap quality filter).
     Token counts aggregate map-side to a vocabulary-sized table that
-    joins back broadcast-gated; corpus constants are a 1-row cross
+    joins back; corpus constants are a 1-row cross
     join.  ROUND(6) absorbs ln() last-ulp and mean-order differences."""
     from spatialdata_spark.pipeline.textstats import unigram_lm_score
 
@@ -4621,7 +4616,7 @@ GROUP BY 1
 def pl_idf_keywords(spark, sf_dir):
     """Top-3 TF-IDF keywords per document (tf * ln(N/df), token-asc
     tiebreak) — per-doc keyword extraction, the complement of BM25's
-    fixed seed terms.  Document frequencies broadcast-gated; the
+    fixed seed terms.  Document frequencies join back; the
     top-k window partitions by DOCUMENT (maximally fine-grained, no
     reducer hotspot at any corpus size)."""
     from spatialdata_spark.pipeline.textstats import idf_keywords
@@ -4911,7 +4906,7 @@ def pl_bpe_train(spark, sf_dir):
 def pl_bpe_encode(spark, sf_dir):
     """Encode-time BPE token counting under the merges learned by
     pl_bpe_train: per-doc word multiset joins the merged word table
-    (vocabulary-sized, broadcast-gated); tokens per word = symbol count
+    (vocabulary-sized); tokens per word = symbol count
     of the merged sequence."""
     from spatialdata_spark.pipeline.bpe import bpe_token_counts, bpe_train
 
@@ -5196,7 +5191,7 @@ def pl_boilerplate(spark, sf_dir):
     occurring verbatim in >= 3 distinct documents are dropped and the
     survivors reassembled in order.  Distinct-doc counting is two
     map-side-combinable aggregations (never a window); only the
-    flagged vocabulary joins back (broadcast-gated)."""
+    flagged vocabulary joins back."""
     from spatialdata_spark.pipeline.filters import boilerplate_remove
 
     return boilerplate_remove(
@@ -5523,8 +5518,6 @@ def pl_kmv_distinct(spark, sf_dir):
         .groupBy("source")
         .agg(F.countDistinct("__t").cast("long").alias("true_distinct"))
     )
-    if spark.sparkContext.master.startswith("local"):
-        exact = F.broadcast(exact)
     return sk.join(exact, "source")
 
 
@@ -5631,8 +5624,6 @@ def pl_hll_distinct(spark, sf_dir):
         .groupBy("source")
         .agg(F.countDistinct("__t").cast("long").alias("true_distinct"))
     )
-    if spark.sparkContext.master.startswith("local"):
-        exact = F.broadcast(exact)
     return sk.join(exact, "source")
 
 
@@ -5953,7 +5944,7 @@ GROUP BY 1
 def pl_bigram_lm(spark, sf_dir):
     """Corpus-trained add-one bigram LM: per-document mean negative
     log-likelihood (CCNet quality ladder, one rung above the unigram
-    score).  Vocabulary-sized count tables, broadcast-gated joins."""
+    score).  Vocabulary-sized count tables joined back."""
     from spatialdata_spark.pipeline.textstats import bigram_lm_score
 
     return bigram_lm_score(_read(spark, sf_dir, "documents"))
@@ -6790,7 +6781,7 @@ FROM embeddings GROUP BY 1
 def q_order_gap(spark, sf_dir):
     """Repeat-order cadence: day gaps between a customer's consecutive
     orders, percentiled per market segment — customer-partitioned lag
-    window (integer day gaps), broadcast-gated dimension join, exact
+    window (integer day gaps), one dimension join, exact
     percentile == quantile_cont on DOUBLE."""
     from pyspark.sql.window import Window
 
@@ -6803,8 +6794,6 @@ def q_order_gap(spark, sf_dir):
             F.to_date("o_orderdate"), F.lag(F.to_date("o_orderdate")).over(w)
         ).cast("long"),
     ).filter(F.col("gap_days").isNotNull())
-    if spark.sparkContext.master.startswith("local"):
-        c = F.broadcast(c)
     j = g.join(c, g["o_custkey"] == c["c_custkey"])
     return j.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).cast("long").alias("n_gaps"),
@@ -6838,7 +6827,7 @@ GROUP BY 1
 def st_funnel_time(spark, sf_dir):
     """Time-to-convert: signup -> first subsequent purchase per user,
     global gap percentiles (microsecond-exact gaps) — two first-touch
-    aggregations and one user-keyed broadcast-gated join; no window
+    aggregations and one user-keyed join; no window
     over the event stream."""
     ev = _read(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -6847,8 +6836,6 @@ def st_funnel_time(spark, sf_dir):
         .groupBy("user_id")
         .agg(F.min(us).alias("su_us"))
     )
-    if spark.sparkContext.master.startswith("local"):
-        su = F.broadcast(su)
     pu = (
         ev.filter(F.col("event_type") == "purchase")
         .select("user_id", us.alias("pu_us"))
@@ -7102,10 +7089,6 @@ def q_revenue_running(spark, sf_dir):
     o = _read(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = _read(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = _read(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    if spark.sparkContext.master.startswith("local"):
-        o = F.broadcast(o)
-        c = F.broadcast(c)
-        n = F.broadcast(n)
     rev = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
@@ -7754,7 +7737,7 @@ def st_retention(spark, sf_dir):
     scan — the standard retention-triangle query."""
     ev = _read(spark, sf_dir, "events")
     first = ev.groupBy("user_id").agg(F.to_date(F.min("ts")).alias("cohort_day"))
-    joined = ev.join(_bcast(first), "user_id").withColumn(
+    joined = ev.join(first, "user_id").withColumn(
         "day_offset", F.datediff(F.to_date("ts"), F.col("cohort_day"))
     )
     return (
@@ -9187,7 +9170,7 @@ def pl_embed_outliers(spark, sf_dir):
     """Per-label centroid-distance outlier scores over the embedding
     corpus: exact int64 n-scaled centroid arithmetic (n*c = sum, no
     division until the end), so the squared distances replay bit-exact
-    in SQL.  Model-sized centroid table, broadcast-gated join."""
+    in SQL.  Model-sized centroid table joined back."""
     from spatialdata_spark.pipeline.clustering import embed_outliers
 
     return embed_outliers(_read(spark, sf_dir, "embeddings"))
@@ -9874,7 +9857,7 @@ def pl_stupid_backoff(spark, sf_dir):
     """Held-out Stupid Backoff bigram LM scoring (Brants et al. 2007):
     train the count tables on the even-doc_id half, score the odd half
     so the 0.4-weighted unigram backoff branch actually fires.  Two
-    vocabulary-sized count tables, broadcast-gated joins, a 1-row
+    vocabulary-sized count tables joined back, a 1-row
     total, one per-document mean — no probability normalization pass
     (scores, not probabilities, is the published point)."""
     from spatialdata_spark.pipeline.textstats import stupid_backoff_score
@@ -11093,7 +11076,7 @@ def q_revenue_growth(spark, sf_dir):
     )
     monthly = (
         li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(_bcast(cust), orders["o_custkey"] == cust["c_custkey"])
+        .join(cust, orders["o_custkey"] == cust["c_custkey"])
         .join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
         .groupBy(
             F.col("n_name"),
@@ -11158,7 +11141,7 @@ def q_promo_share(spark, sf_dir):
         F.lit(1).cast(DEC) - F.col("l_discount").cast(DEC)
     )
     monthly = (
-        li.join(_bcast(part), li["l_partkey"] == part["p_partkey"])
+        li.join(part, li["l_partkey"] == part["p_partkey"])
         .groupBy(F.date_format("l_shipdate", "yyyy-MM").alias("month"))
         .agg(
             F.sum(
@@ -12101,9 +12084,8 @@ def st_event_transitions(spark, sf_dir):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Dict order matters: the correctness driver oracles the FIRST 50
-    # entries, and a key's position is set by its FIRST occurrence (the
-    # tail below repeats some keys — harmless no-ops).  Round-15 head,
-    # mechanically per the rotation rule:
+    # entries; each key appears once (tests/test_registry_keys.py).
+    # Round-15 head, mechanically per the rotation rule:
     #   (1) new registrations: NONE (optimization round — no features);
     #   (2) queries executing code modified in r14/r15 — the set the
     #       r14 verdict flagged as unverified (its head froze BEFORE the
@@ -12213,8 +12195,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sq_raster_rotated": sq_raster_rotated,
         "sq_raster_3d": sq_raster_3d,
         "pl_semantic_dedup": pl_semantic_dedup,
-        # --- the displaced round-14 head (re-listed so every key stays
-        # registered; duplicates further down are no-ops) ---
+        # --- the displaced round-14 head ---
         "q_promo_share": q_promo_share,
         "q_order_priority": q_order_priority,
         "q_idle_customers": q_idle_customers,
@@ -12265,8 +12246,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "st_anomaly_mad": st_anomaly_mad,
         "q_customer_ltv_deciles": q_customer_ltv_deciles,
         "q_revenue_running": q_revenue_running,
-        # --- the displaced round-13 head (re-listed so every key stays
-        # registered; duplicates further down are no-ops) ---
+        # --- the displaced round-13 head ---
         "q_rfm_segments": q_rfm_segments,
         "pl_spearman_corr": pl_spearman_corr,
         "pl_chao1_richness": pl_chao1_richness,
@@ -12281,7 +12261,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pl_cooccur_pmi": pl_cooccur_pmi,
         "pl_source_overlap": pl_source_overlap,
         "pl_span_cut": pl_span_cut,
-        "pl_minhash_recall": pl_minhash_recall,
         "pl_simhash_recall": pl_simhash_recall,
         "pl_ndcg": pl_ndcg,
         "pl_sq_int8": pl_sq_int8,
@@ -12302,7 +12281,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pl_dsir_weights": pl_dsir_weights,
         "pl_heaps_curve": pl_heaps_curve,
         "pl_embed_dedup": pl_embed_dedup,
-        "ag_fractions_value": ag_fractions_value,
         "pl_rouge_pairs": pl_rouge_pairs,
         "q11_important_stock": q11_important_stock,
         "q12_priority_lines": q12_priority_lines,
@@ -12310,46 +12288,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q21_waiting_supplier": q21_waiting_supplier,
         "q_cube_revenue": q_cube_revenue,
         "q_pivot_revenue": q_pivot_revenue,
-        "rt_zonal_quantiles": rt_zonal_quantiles,
-        "rv_rasterize_polyfill": rv_rasterize_polyfill,
         "st_anomaly": st_anomaly,
         "st_cum_dau": st_cum_dau,
         "st_funnel": st_funnel,
         "st_gap_fill": st_gap_fill,
         "st_retention": st_retention,
-        # --- historical tail below: first-occurrence keeps the rest of
-        # the registry complete; duplicates are no-ops ---
-        "pl_bigram_entropy": pl_bigram_entropy,
-        "pl_bloom_decon": pl_bloom_decon,
-        "pl_bpe_encode": pl_bpe_encode,
-        "pl_bpe_train": pl_bpe_train,
-        "pl_burstiness": pl_burstiness,
-        "pl_c4_rules": pl_c4_rules,
-        "pl_cdc_chunks": pl_cdc_chunks,
-        "pl_cms_topk": pl_cms_topk,
-        "pl_containment": pl_containment,
-        "pl_embed_pool": pl_embed_pool,
-        "pl_gopher_rules": pl_gopher_rules,
-        "pl_gram_matrix": pl_gram_matrix,
-        "pl_hapax_ratio": pl_hapax_ratio,
-        "pl_hash_split": pl_hash_split,
-        "pl_hll_distinct": pl_hll_distinct,
-        "pl_kmv_distinct": pl_kmv_distinct,
-        "pl_label_fstat": pl_label_fstat,
-        "pl_lang_temperature": pl_lang_temperature,
-        "pl_len_hist": pl_len_hist,
-        "pl_ngram_novelty": pl_ngram_novelty,
-        "pl_norm_hist": pl_norm_hist,
-        "pl_para_dedup": pl_para_dedup,
+        # --- historical tail: the rest of the registry ---
         # --- round-12 registrations (displaced from the head by the
-        # r13 rotation; first occurrence here keeps them registered) ---
+        # r13 rotation) ---
         "q_revenue_growth": q_revenue_growth,
         "pl_cvm_lengths": pl_cvm_lengths,
         "st_weekday_profile": st_weekday_profile,
         "pl_theil_index": pl_theil_index,
         "pl_mutual_info": pl_mutual_info,
-        # --- round-11 head keys below keep the registry complete
-        # (duplicates are no-ops).  Historical r11 rotation rationale:
+        # --- round-11 head keys not placed above.  Historical r11
+        # rotation rationale:
         # the three r11-new queries; q_assoc_rules + pl_ppr_seeds
         # (persist-audit fixes; the 2-consumer cases _copurchase_edges
         # and pl_wcc were audited and deliberately left bare — see
@@ -12370,50 +12323,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pl_image_neardup": pl_image_neardup,
         # --- (3a) backfill: all 26 r4-checked rows (oldest) ---
         "pl_ivf_probe": pl_ivf_probe,
-        "pl_knn_cosine": pl_knn_cosine,
         "pl_language_id": pl_language_id,
         "pl_lsh_topk": pl_lsh_topk,
         "pl_minhash_cc": pl_minhash_cc,
         "pl_minhash_expr": pl_minhash_expr,
         "pl_multimodal_features": pl_multimodal_features,
-        "pl_ngram_jaccard": pl_ngram_jaccard,
         "pl_quality_score": pl_quality_score,
         "pl_resize_images": pl_resize_images,
         "pl_simhash": pl_simhash,
         "pl_simhash_neardup": pl_simhash_neardup,
         "pl_text_stats": pl_text_stats,
         "pl_token_count": pl_token_count,
-        "rt_affine_resample": rt_affine_resample,
-        "rt_export_tiles": rt_export_tiles,
-        "rt_halo_boxsum": rt_halo_boxsum,
-        "rt_unpad_extent": rt_unpad_extent,
-        "rt_zonal_tiles": rt_zonal_tiles,
-        "sq_multipart_shapes": sq_multipart_shapes,
-        "sq_polygon_clip_holes": sq_polygon_clip_holes,
         "st_distinct_users_daily": st_distinct_users_daily,
         "st_session_native": st_session_native,
         "st_sliding": st_sliding,
         "st_topk_per_user": st_topk_per_user,
         "st_value_quantiles": st_value_quantiles,
         # --- (3b) backfill: all 14 named r5 rows + rv_to_circles ---
-        "ag_fractions_concave": ag_fractions_concave,
-        "pl_bm25": pl_bm25,
         "pl_chunk_overlap": pl_chunk_overlap,
         "pl_quota_cap": pl_quota_cap,
         "pl_stratified_sample": pl_stratified_sample,
         "rq_filter_var": rq_filter_var,
         "rq_get_values_obsm": rq_get_values_obsm,
-        "rt_bbox_tiles": rt_bbox_tiles,
-        "rt_bbox_tiles_3d": rt_bbox_tiles_3d,
-        "rt_map_tiles": rt_map_tiles,
-        "rt_pyramid_sum": rt_pyramid_sum,
-        "rt_zonal_3d": rt_zonal_3d,
-        "rv_rasterize_bins": rv_rasterize_bins,
-        "rv_relabel": rv_relabel,
-        "rv_to_circles": rv_to_circles,
         # ===== round-11 driver head ends here (first 50) =====
-        # --- round-10 head keys not retained above keep the registry
-        # complete from here down (duplicates are no-ops) ---
+        # --- round-10 head keys not placed above ---
         "pl_mcc": pl_mcc,
         "pl_wcc": pl_wcc,
         "pl_triangles": pl_triangles,
@@ -12429,49 +12362,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pl_dup_profile": pl_dup_profile,
         "pl_kripp": pl_kripp,
         "st_ewma": st_ewma,
-        "pl_modularity": pl_modularity,
-        "st_cramers_drift": st_cramers_drift,
-        "ag_points_by_circles_sum": ag_points_by_circles_sum,
-        "ag_points_by_circles_mean": ag_points_by_circles_mean,
-        "ag_points_by_circles_max": ag_points_by_circles_max,
-        "ag_points_by_darts": ag_points_by_darts,
-        "ag_points_categorical": ag_points_categorical,
         "q01_pricing_summary": q01_pricing_summary,
-        "q03_shipping": q03_shipping,
         "q04_order_priority": q04_order_priority,
-        "q05_local_supplier": q05_local_supplier,
         "q06_forecasting": q06_forecasting,
         "q07_volume_shipping": q07_volume_shipping,
         "q08_market_share": q08_market_share,
-        "q10_returned_items": q10_returned_items,
         "q13_customer_distribution": q13_customer_distribution,
         "q14_promo_effect": q14_promo_effect,
         "q15_top_supplier": q15_top_supplier,
         "q16_parts_supplier_relationship": q16_parts_supplier_relationship,
         "q17_small_quantity": q17_small_quantity,
-        "q18_large_volume": q18_large_volume,
         "q19_discounted_revenue": q19_discounted_revenue,
         "q22_global_sales_opportunity": q22_global_sales_opportunity,
         "q_rollup_revenue": q_rollup_revenue,
         "pl_cosine_pairs": pl_cosine_pairs,
         "pl_dedup_exact": pl_dedup_exact,
-        "pl_embed_dedup": pl_embed_dedup,
         "pl_fingerprint": pl_fingerprint,
         "pl_frame_sample": pl_frame_sample,
         "pl_ivf_exact": pl_ivf_exact,
-        # --- round-9 head (keys keep first-occurrence position) ---
+        # --- round-9 head keys not placed above ---
         # --- (1) new in round 9 ---
-        "rt_dataset_tiles": rt_dataset_tiles,
         "pl_kneser_ney": pl_kneser_ney,
-        "pl_image_dhash": pl_image_dhash,
-        "pl_image_neardup": pl_image_neardup,
         "pl_brier": pl_brier,
-        "st_cramers_drift": st_cramers_drift,
-        "pl_ndcg": pl_ndcg,
         # --- (2) code/oracle modified this round ---
-        "pl_modularity": pl_modularity,
         "pl_kcore": pl_kcore,
-        "pl_graph_stats": pl_graph_stats,
         "pl_kappa": pl_kappa,
         "pl_ks_lengths": pl_ks_lengths,
         "pl_confusion": pl_confusion,
@@ -12480,7 +12394,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pl_label_prop": pl_label_prop,
         "pl_hop_dist": pl_hop_dist,
         "pl_pagerank": pl_pagerank,
-        "pl_ppr_seeds": pl_ppr_seeds,
         # --- (3) rest of the 2f2bdae set ---
         "st_scd2": st_scd2,
         "st_psi_drift": st_psi_drift,
@@ -12497,27 +12410,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rq_join_left_exclusive": rq_join_left_exclusive,
         "rq_join_right": rq_join_right,
         "rq_join_right_exclusive": rq_join_right_exclusive,
-        "sq_bbox_3d": sq_bbox_3d,
-        "sq_bbox_identity": sq_bbox_identity,
-        "sq_bbox_rotation": sq_bbox_rotation,
-        "sq_bbox_scale": sq_bbox_scale,
-        "sq_bbox_shapes": sq_bbox_shapes,
-        "sq_multibox": sq_multibox,
-        "sq_multibox_rotated": sq_multibox_rotated,
-        "sq_polygon_clip": sq_polygon_clip,
-        "sq_polygon_concave": sq_polygon_concave,
-        "sq_polygon_points": sq_polygon_points,
-        "sq_polygon_shapes": sq_polygon_shapes,
-        "sq_raster_rotated": sq_raster_rotated,
         "st_moving_avg": st_moving_avg,
-        "ag_centroids_labels": ag_centroids_labels,
-        "ag_fractions": ag_fractions,
-        "ag_fractions_value": ag_fractions_value,
-        "ag_points_by_circles_count": ag_points_by_circles_count,
         # --- r8 head (keys already placed above keep their position;
         # the rest follow in r8 order) ---
         "pl_zipf_slope": pl_zipf_slope,
-        "pl_distinct_ngrams": pl_distinct_ngrams,
         "pl_encoding_quality": pl_encoding_quality,
         "pl_script_profile": pl_script_profile,
         "pl_key_skew": pl_key_skew,
@@ -12525,254 +12421,48 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pl_hard_negatives": pl_hard_negatives,
         "pl_nb_score": pl_nb_score,
         "pl_auc_rank": pl_auc_rank,
-        "pl_calibration": pl_calibration,
         "pl_hdr_quantiles": pl_hdr_quantiles,
         "pl_phrase_search": pl_phrase_search,
         "pl_multi_phrase": pl_multi_phrase,
-        "pl_label_prop": pl_label_prop,
-        "st_scd2": st_scd2,
         "pl_bpe_fertility": pl_bpe_fertility,
-        "pl_minhash_recall": pl_minhash_recall,
-        "pl_stupid_backoff": pl_stupid_backoff,
-        "pl_chi2_tokens": pl_chi2_tokens,
-        "pl_ks_lengths": pl_ks_lengths,
-        "st_psi_drift": st_psi_drift,
-        "pl_simhash_recall": pl_simhash_recall,
-        "pl_triangles": pl_triangles,
-        "pl_graph_stats": pl_graph_stats,
-        "pl_link_pred": pl_link_pred,
-        "pl_rrf_hybrid": pl_rrf_hybrid,
-        "pl_target_encode": pl_target_encode,
-        "pl_woe_iv": pl_woe_iv,
         "pl_auc_by_source": pl_auc_by_source,
-        "pl_rank_corr": pl_rank_corr,
-        "pl_random_walks": pl_random_walks,
-        "pl_kcore": pl_kcore,
-        "pl_hop_dist": pl_hop_dist,
-        "pl_confusion": pl_confusion,
-        "pl_kappa": pl_kappa,
-        "pl_modularity": pl_modularity,
         "pl_lift": pl_lift,
-        "pl_ppr_seeds": pl_ppr_seeds,
-        "pl_hits": pl_hits,
         "pl_bootstrap_ci": pl_bootstrap_ci,
         # --- re-check: oracle SUM cast to BIGINT this round (hash-red r7
         # was a DuckDB HUGEINT->float64 fetch dtype, values were equal) ---
-        "pl_pagerank": pl_pagerank,
         # --- modified since last driver check: minhash persist rework r5
         # (last check r4); kmeans/knn last checked r6 ---
-        "pl_minhash_dedup": pl_minhash_dedup,
         "pl_kmeans": pl_kmeans,
         "pl_knn_classify": pl_knn_classify,
         # --- stale greens: r2/r3-checked aggregate family + TPC-H head ---
-        "ag_extent": ag_extent,
-        "ag_zonal_image": ag_zonal_image,
-        "rv_rasterize_count": rv_rasterize_count,
-        "rv_rasterize_cat": rv_rasterize_cat,
-        "rv_rasterize_circle_fill": rv_rasterize_circle_fill,
-        "ag_points_by_boxes": ag_points_by_boxes,
-        "ag_points_categorical": ag_points_categorical,
-        "ag_points_by_circles_count": ag_points_by_circles_count,
-        "ag_points_by_circles_sum": ag_points_by_circles_sum,
-        "ag_points_by_circles_mean": ag_points_by_circles_mean,
-        "ag_points_by_circles_max": ag_points_by_circles_max,
-        "ag_points_by_darts": ag_points_by_darts,
-        "ag_fractions": ag_fractions,
-        "ag_fractions_value": ag_fractions_value,
-        "ag_centroids_labels": ag_centroids_labels,
-        "q01_pricing_summary": q01_pricing_summary,
-        "q03_shipping": q03_shipping,
-        "q04_order_priority": q04_order_priority,
         # --- stale greens: r3-checked spatial/relational query rows ---
-        "sq_polygon_points": sq_polygon_points,
-        "sq_polygon_concave": sq_polygon_concave,
-        "sq_bbox_shapes": sq_bbox_shapes,
-        "sq_polygon_shapes": sq_polygon_shapes,
-        "rq_join_left": rq_join_left,
-        "rq_join_inner_element": rq_join_inner_element,
-        "rq_join_left_exclusive": rq_join_left_exclusive,
-        "rq_join_right": rq_join_right,
-        "rq_join_right_exclusive": rq_join_right_exclusive,
-        "rq_get_values_xlong": rq_get_values_xlong,
-        "rq_filter_by_table": rq_filter_by_table,
-        "rq_element_instances": rq_element_instances,
         # (the round-9 head ended here; superseded by the r10 head)
         # --- round-7 head (all driver-green r7) ---
-        "pl_curation_funnel": pl_curation_funnel,
-        "pl_token_entropy": pl_token_entropy,
-        "pl_jsd_sources": pl_jsd_sources,
-        "st_wau_mau": st_wau_mau,
-        "pl_bloom_decon": pl_bloom_decon,
-        "pl_cms_topk": pl_cms_topk,
-        "pl_gram_matrix": pl_gram_matrix,
-        "st_topn_window": st_topn_window,
-        "pl_sent_stats": pl_sent_stats,
-        "pl_c4_rules": pl_c4_rules,
-        "pl_ngram_novelty": pl_ngram_novelty,
-        "pl_bigram_lm": pl_bigram_lm,
-        "pl_source_overlap": pl_source_overlap,
-        "pl_hll_distinct": pl_hll_distinct,
-        "pl_winnow": pl_winnow,
-        "pl_cdc_chunks": pl_cdc_chunks,
-        "pl_dsir_weights": pl_dsir_weights,
-        "st_props_json": st_props_json,
-        "pl_embed_pool": pl_embed_pool,
-        "pl_score_norm": pl_score_norm,
-        "pl_gopher_rules": pl_gopher_rules,
-        "pl_containment": pl_containment,
-        "pl_kmv_distinct": pl_kmv_distinct,
-        "pl_para_dedup": pl_para_dedup,
-        "pl_lang_temperature": pl_lang_temperature,
-        "st_cohort_matrix": st_cohort_matrix,
-        "pl_burstiness": pl_burstiness,
-        "pl_cooccur_pmi": pl_cooccur_pmi,
-        "st_inter_event": st_inter_event,
-        "pl_len_hist": pl_len_hist,
-        "pl_label_fstat": pl_label_fstat,
-        "st_markov_transitions": st_markov_transitions,
-        "pl_vocab_coverage": pl_vocab_coverage,
-        "q_top_parts_per_supplier": q_top_parts_per_supplier,
-        "pl_hapax_ratio": pl_hapax_ratio,
-        "pl_norm_hist": pl_norm_hist,
-        "q_order_gap": q_order_gap,
-        "st_funnel_time": st_funnel_time,
-        "st_anomaly_mad": st_anomaly_mad,
-        "q_customer_ltv_deciles": q_customer_ltv_deciles,
-        "pl_bigram_entropy": pl_bigram_entropy,
-        "pl_rouge_pairs": pl_rouge_pairs,
-        "q_revenue_running": q_revenue_running,
-        "pl_heaps_curve": pl_heaps_curve,
-        "pl_hash_split": pl_hash_split,
         "pl_pca": pl_pca,
-        "pl_bpe_train": pl_bpe_train,
-        "pl_bpe_encode": pl_bpe_encode,
-        "pl_semantic_dedup": pl_semantic_dedup,
         # --- cumulative greens ---
-        "q05_local_supplier": q05_local_supplier,
-        "q06_forecasting": q06_forecasting,
-        "q07_volume_shipping": q07_volume_shipping,
-        "q08_market_share": q08_market_share,
-        "q10_returned_items": q10_returned_items,
-        "q13_customer_distribution": q13_customer_distribution,
-        "q14_promo_effect": q14_promo_effect,
-        "q15_top_supplier": q15_top_supplier,
-        "q16_parts_supplier_relationship": q16_parts_supplier_relationship,
-        "q17_small_quantity": q17_small_quantity,
-        "q18_large_volume": q18_large_volume,
-        "q19_discounted_revenue": q19_discounted_revenue,
-        "q22_global_sales_opportunity": q22_global_sales_opportunity,
-        "q_rollup_revenue": q_rollup_revenue,
-        "st_moving_avg": st_moving_avg,
-        "sq_bbox_identity": sq_bbox_identity,
-        "sq_bbox_3d": sq_bbox_3d,
-        "sq_bbox_scale": sq_bbox_scale,
-        "sq_bbox_rotation": sq_bbox_rotation,
-        "sq_multibox": sq_multibox,
-        "sq_multibox_rotated": sq_multibox_rotated,
-        "sq_raster_rotated": sq_raster_rotated,
-        "sq_polygon_clip": sq_polygon_clip,
         # displaced to the round-9 head: the two remaining r3-checked
         # rq_ rows, then rotation continues by oldest-check-first
-        "rq_filter_labels": rq_filter_labels,
-        "rq_concat_tables": rq_concat_tables,
         "pl_shard_shuffle": pl_shard_shuffle,
         "pl_interleave": pl_interleave,
-        "pl_ppl_buckets": pl_ppl_buckets,
-        "q_cube_revenue": q_cube_revenue,
-        "st_rolling_window": st_rolling_window,
         "pl_boilerplate": pl_boilerplate,
         "pl_weighted_sample": pl_weighted_sample,
-        "st_gap_fill": st_gap_fill,
-        "st_cum_dau": st_cum_dau,
-        "q_pivot_revenue": q_pivot_revenue,
-        "pl_unigram_lm": pl_unigram_lm,
-        "pl_idf_keywords": pl_idf_keywords,
-        "pl_dedup_keep_best": pl_dedup_keep_best,
         "pl_tfidf_pairs": pl_tfidf_pairs,
         "pl_dup_spans": pl_dup_spans,
-        "pl_span_cut": pl_span_cut,
-        "pl_lev_neardup": pl_lev_neardup,
         "pl_mix_epochs": pl_mix_epochs,
-        "rv_rasterize_polyfill": rv_rasterize_polyfill,
-        "ag_points_by_labels": ag_points_by_labels,
-        "st_sessionize": st_sessionize,
-        "st_tumbling": st_tumbling,
         "pl_repetition": pl_repetition,
         "pl_pii_redact": pl_pii_redact,
         "pl_decontaminate": pl_decontaminate,
-        "pl_sq_int8": pl_sq_int8,
-        "pl_pq_adc": pl_pq_adc,
         "pl_dedup_cross": pl_dedup_cross,
         "pl_vocab_topk": pl_vocab_topk,
-        "pl_ann_recall": pl_ann_recall,
         "pl_pack_blocks": pl_pack_blocks,
         "pl_corpus_stats": pl_corpus_stats,
-        "rt_zonal_quantiles": rt_zonal_quantiles,
-        "st_funnel": st_funnel,
-        "st_retention": st_retention,
-        "st_anomaly": st_anomaly,
         "pl_audio_energy": pl_audio_energy,
         "pl_video_decode": pl_video_decode,
         "pl_cluster_purity": pl_cluster_purity,
         "q02_min_cost_supplier": q02_min_cost_supplier,
         "q09_product_profit": q09_product_profit,
-        "q11_important_stock": q11_important_stock,
-        "q12_priority_lines": q12_priority_lines,
-        "q20_excess_suppliers": q20_excess_suppliers,
-        "q21_waiting_supplier": q21_waiting_supplier,
-        "ag_fractions_concave": ag_fractions_concave,
-        "pl_stratified_sample": pl_stratified_sample,
-        "pl_quota_cap": pl_quota_cap,
         "st_asof_attrib": st_asof_attrib,
         "st_interval_conversions": st_interval_conversions,
-        "pl_bm25": pl_bm25,
-        "pl_chunk_overlap": pl_chunk_overlap,
-        "rv_to_circles": rv_to_circles,
-        "rv_to_polygons": rv_to_polygons,
-        "rv_relabel": rv_relabel,
-        "rv_rasterize_bins": rv_rasterize_bins,
-        "rv_transform_points": rv_transform_points,
-        "rv_transform_shapes": rv_transform_shapes,
-        "rt_map_tiles": rt_map_tiles,
-        "rt_bbox_tiles": rt_bbox_tiles,
-        "rt_bbox_tiles_3d": rt_bbox_tiles_3d,
-        "sq_raster_3d": sq_raster_3d,
-        "rt_zonal_3d": rt_zonal_3d,
-        "rq_get_values_obsm": rq_get_values_obsm,
-        "rq_filter_var": rq_filter_var,
-        "rt_pyramid_sum": rt_pyramid_sum,
-        "rt_halo_boxsum": rt_halo_boxsum,
-        "rt_zonal_tiles": rt_zonal_tiles,
-        "rt_unpad_extent": rt_unpad_extent,
-        "rt_affine_resample": rt_affine_resample,
-        "rt_export_tiles": rt_export_tiles,
-        "pl_dedup_exact": pl_dedup_exact,
-        "pl_text_stats": pl_text_stats,
-        "pl_fingerprint": pl_fingerprint,
-        "pl_knn_cosine": pl_knn_cosine,
-        "pl_cosine_pairs": pl_cosine_pairs,
-        "pl_ivf_exact": pl_ivf_exact,
-        "pl_ivf_probe": pl_ivf_probe,
-        "pl_quality_score": pl_quality_score,
-        "pl_minhash_expr": pl_minhash_expr,
-        "pl_minhash_cc": pl_minhash_cc,
-        "pl_language_id": pl_language_id,
-        "pl_lsh_topk": pl_lsh_topk,
-        "pl_embed_dedup": pl_embed_dedup,
-        "pl_simhash": pl_simhash,
-        "pl_simhash_neardup": pl_simhash_neardup,
-        "pl_ngram_jaccard": pl_ngram_jaccard,
-        "pl_multimodal_features": pl_multimodal_features,
-        "pl_resize_images": pl_resize_images,
-        "pl_frame_sample": pl_frame_sample,
-        "st_session_native": st_session_native,
-        "sq_multipart_shapes": sq_multipart_shapes,
-        "sq_polygon_clip_holes": sq_polygon_clip_holes,
-        "st_topk_per_user": st_topk_per_user,
-        "st_sliding": st_sliding,
-        "st_distinct_users_daily": st_distinct_users_daily,
-        "st_value_quantiles": st_value_quantiles,
-        "pl_token_count": pl_token_count,
     }
 
 

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spatialdata_spark import session
 from spatialdata_spark.session import construction_locked
 
 AGG_FUNCS = {"sum": F.sum, "mean": F.avg, "count": F.count, "min": F.min, "max": F.max}
@@ -197,7 +198,7 @@ def aggregate_points_by_circles(
     h = float(cell_size)
     spark = points.sparkSession
     par = spark.sparkContext.defaultParallelism
-    local = spark.sparkContext.master.startswith("local")
+    local = session.single_host(spark)
 
     shapes.createOrReplaceTempView("__apc_shapes")
     points.createOrReplaceTempView("__apc_points")
@@ -416,7 +417,7 @@ def grid_join_points_shapes(
         cell_size = _estimate_cell_size(shapes)
     cs = float(cell_size)
     spark = points.sparkSession
-    if spark.sparkContext.master.startswith("local"):
+    if session.single_host(spark):
         # single-row-group local inputs scan as one task; spread both
         # sides so the candidate join fans out on all cores (the
         # cell-key hash also satisfies the join's distribution if the
@@ -587,7 +588,7 @@ WHERE (v_maxx >= b_minx) AND (v_minx <= b_maxx) AND (v_maxy >= b_miny) AND (v_mi
   AND ({hit})"""
         )
 
-    if spark.sparkContext.master.startswith("local"):
+    if session.single_host(spark):
         # see grid_join_points_shapes: spread single-task local scans —
         # the polygon Python refine runs downstream and the fan-out is
         # load-bearing for the Arrow stage.

@@ -268,9 +268,8 @@ def bpe_token_counts(
 ) -> DataFrame:
     """Encode-time token counting: per-document BPE token totals under
     the trained merges.  The per-doc word multiset joins the merged
-    word table (vocabulary-sized → broadcast-gated); tokens per word =
-    symbol count of the merged sequence."""
-    spark = docs.sparkSession
+    word table (vocabulary-sized); tokens per word = symbol count of
+    the merged sequence."""
     doc_words = (
         docs.filter(F.length(F.trim(F.col(text_col))) > 0)
         .select(
@@ -286,8 +285,6 @@ def bpe_token_counts(
     lut = wf_merged.select(
         "w", F.size(F.split(F.trim(F.col("seq")), "  ")).alias("n_syms")
     )
-    if spark.sparkContext.master.startswith("local"):
-        lut = F.broadcast(lut)
     return (
         doc_words.join(lut, "w")
         .groupBy(id_col)
@@ -308,8 +305,8 @@ def bpe_fertility(
     the same text; mT5/XLM-R rebalance exactly this).
 
     Same shape as :func:`bpe_token_counts`: the per-group word multiset
-    LEFT-joins the vocabulary-sized merged word table (broadcast-gated)
-    and reduces to one row per group — exact integers until the two
+    LEFT-joins the vocabulary-sized merged word table and reduces to
+    one row per group — exact integers until the two
     final divisions.  Words absent from ``wf_merged`` (held-out /
     cross-corpus input) are NOT silently dropped: they are excluded
     from the ratio sums (their segmentation is unknown) but surfaced
@@ -318,7 +315,6 @@ def bpe_fertility(
     Output: ``(group, n_words, n_tokens, n_chars, n_oov_words,
     tokens_per_word, chars_per_token)``, 6 dp.
     """
-    spark = docs.sparkSession
     gw = (
         docs.filter(F.length(F.trim(F.col(text_col))) > 0)
         .select(
@@ -336,8 +332,6 @@ def bpe_fertility(
         F.size(F.split(F.trim(F.col("seq")), "  ")).cast("long").alias("n_syms"),
         F.length("w").cast("long").alias("n_chars_w"),
     )
-    if spark.sparkContext.master.startswith("local"):
-        lut = F.broadcast(lut)
     agg = (
         gw.join(lut, "w", "left")
         .groupBy("__g")

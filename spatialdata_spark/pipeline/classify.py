@@ -26,6 +26,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spatialdata_spark import session
+
 __all__ = [
     "auc_rank",
     "brier_decomposition",
@@ -103,7 +105,6 @@ def nb_score(
 
     Output: ``(id, *passthrough, n_tokens, llr_mean)``, 6 dp.
     """
-    spark = docs.sparkSession
     toks = docs.select(
         F.col(id_col).alias("__id"),
         *[F.col(c) for c in passthrough],
@@ -111,10 +112,7 @@ def nb_score(
             F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
         ).alias("token"),
     ).filter(F.col("token") != "")
-    m = model
-    if spark.sparkContext.master.startswith("local"):
-        m = F.broadcast(m)
-    joined = toks.join(m, "token", "left").crossJoin(F.broadcast(totals))
+    joined = toks.join(model, "token", "left").crossJoin(F.broadcast(totals))
     llr = F.log(
         (F.coalesce(F.col("c1"), F.lit(0)) + 1.0) / (F.col("n1") + F.col("v"))
     ) - F.log(
@@ -405,7 +403,7 @@ def target_encode_kfold(
             (F.col("__s") / F.col("__n")).alias("__prior"),
         )
     )
-    if spark.sparkContext.master.startswith("local"):
+    if session.single_host(spark):
         oof = F.broadcast(oof)
     pw = F.lit(int(prior_weight))
     return (

@@ -47,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spatialdata_spark import session
+
 __all__ = [
     "quantize_long",
     "kmeans_lloyd",
@@ -440,8 +442,6 @@ def semantic_dedup_kmeans(
             "cluster", "blk", F.col("id").alias("id_b"), "pos",
             F.col("val").alias("vb"),
         )
-        if spark.sparkContext.master.startswith("local"):
-            b = F.broadcast(b)
         dots = (
             a.join(b, ["cluster", "blk", "pos"])
             .filter(F.col("id_a") < F.col("id_b"))
@@ -451,8 +451,6 @@ def semantic_dedup_kmeans(
         n2 = withc.groupBy("id").agg(
             F.sum(F.col("val") * F.col("val")).alias("n2")
         )
-        if spark.sparkContext.master.startswith("local"):
-            n2 = F.broadcast(n2)
         dup = (
             dots.join(
                 n2.select(F.col("id").alias("id_a"), F.col("n2").alias("na2")),
@@ -470,7 +468,7 @@ def semantic_dedup_kmeans(
             .select(F.col("id_b").alias(id_col))
             .distinct()
         )
-    if spark.sparkContext.master.startswith("local"):
+    if session.single_host(spark):
         dup = F.broadcast(dup)
     return (
         embeddings.join(dup, id_col, "left_anti")
@@ -496,7 +494,6 @@ def knn_classify(
     the vote by ``(-count, label)`` — no float, no tie ambiguity.
     Brute force O(n_test * n_train) by stated contract (the parity
     baseline the ANN recall harness measures against)."""
-    spark = embeddings.sparkSession
     qv = embeddings.select(
         F.col(id_col).alias("id"),
         F.col(label_col).alias("label"),
@@ -515,8 +512,6 @@ def knn_classify(
         F.col("label").alias("train_label"),
         F.col("qv").alias("rv"),
     )
-    if spark.sparkContext.master.startswith("local"):
-        train = F.broadcast(train)
     # shallow HOF (one zip_with + one aggregate) stays codegen-friendly;
     # integer sums are order-independent so any evaluation order is exact
     dist = F.aggregate(
@@ -819,8 +814,8 @@ def embed_outliers(
 
     Plan: one map-side explode to (group, pos) long format; the
     centroid-sum table is (n_groups x dim)-sized with map-side
-    combine; the join back is broadcast-gated (model-sized at any
-    corpus scale); one per-vector aggregation.  int64 bound: |n*x - s|
+    combine; the joined-back table is model-sized at any corpus
+    scale; one per-vector aggregation.  int64 bound: |n*x - s|
     <= 2*n*q*max|x|, so the per-vector squared sum is <=
     4*dim*q^2*n^2 — ~2*10^6 rows per group at dim=64/q=100.  Beyond
     that, swap the n-scaled form for DECIMAL(38) intermediates or a
@@ -829,7 +824,6 @@ def embed_outliers(
 
     Output: ``(id, group, d2)`` with ``d2`` rounded to 6 dp.
     """
-    spark = embeddings.sparkSession
     longv = embeddings.select(
         F.col(id_col).alias("__id"),
         F.col(group_col).alias("__grp"),
@@ -846,8 +840,6 @@ def embed_outliers(
     )
     # n is constant per group; keep it on every (group, pos) row so the
     # join stays single-key model-sized.
-    if spark.sparkContext.master.startswith("local"):
-        cent = F.broadcast(cent)
     diff = longv.join(cent, ["__grp", "pos"]).select(
         "__id",
         "__grp",
@@ -891,7 +883,6 @@ def hard_negatives(
     Output: ``(anchor, anchor_label, negative, neg_label, d2)`` with
     ``d2`` in original (unquantized) units, 6 dp.
     """
-    spark = embeddings.sparkSession
     qv = embeddings.select(
         F.col(id_col).alias("id"),
         F.col(label_col).alias("label"),
@@ -910,8 +901,6 @@ def hard_negatives(
         F.col("label").alias("__nlab"),
         F.col("qv").alias("bv"),
     )
-    if spark.sparkContext.master.startswith("local"):
-        b = F.broadcast(b)
     d2 = F.aggregate(
         F.zip_with(F.col("av"), F.col("bv"), lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("long"),

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from spatialdata_spark import session
 from spatialdata_spark.session import construction_locked
 
 _MERSENNE = (1 << 61) - 1
@@ -307,7 +308,7 @@ def ngram_jaccard_join(
     reference-free MinHash path (see ``minhash_lsh_candidates``).
     """
     spark = docs.sparkSession
-    if spark.sparkContext.master.startswith("local"):
+    if session.single_host(spark):
         # single-row-group local inputs scan as one task; the shingle
         # HOF expression below is the heavy stage, so spread it first
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
@@ -395,7 +396,7 @@ def ngram_containment_pairs(
     ``(id_a, id_b, n_shared, n_grams_a)``.
     """
     spark = docs.sparkSession
-    if spark.sparkContext.master.startswith("local"):
+    if session.single_host(spark):
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
     words = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda x: x != "")
     doc_sh = docs.select(F.col(id_col).alias("_id"), words.alias("_w")).select(
@@ -423,8 +424,6 @@ def ngram_containment_pairs(
         .filter(F.col("_df") <= int(max_gram_df))
         .select("g")
     )
-    if spark.sparkContext.master.startswith("local"):
-        keep = F.broadcast(keep)
     capped = exploded.join(keep, "g", "left_semi")
     a = capped.select(F.col("_id").alias("id_a"), "g")
     b = capped.select(F.col("_id").alias("id_b"), "g")
@@ -657,7 +656,7 @@ def minhash_band_candidates(
     """
     rows_per_band = max(1, num_hashes // num_bands)
     spark = docs.sparkSession
-    local = spark.sparkContext.master.startswith("local")
+    local = session.single_host(spark)
     # project to the two columns the signature needs BEFORE any shuffle:
     # the repartition (and on a cluster, the scan itself) then moves only
     # (id, text), never the documents table's other columns
@@ -725,7 +724,7 @@ def minhash_band_candidates_sql(
     rows_per_band = max(1, num_hashes // num_bands)
     a, b = _hash_params(num_hashes, seed)
     spark = docs.sparkSession
-    if spark.sparkContext.master.startswith("local"):
+    if session.single_host(spark):
         # single-row-group local inputs scan as one task; the shingle
         # expression is the heavy stage, so spread it first
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
@@ -750,13 +749,6 @@ def minhash_band_candidates_sql(
         F.col(id_col), F.posexplode(band_arrays).alias("band", "sig")
     )
     l, r = bands.alias("l"), bands.alias("r")
-    # local (test/bench) scale: the band table is num_bands rows per doc
-    # and fits comfortably in one executor, so broadcasting one side
-    # skips the two-sided shuffle of the self-join entirely; on a
-    # cluster the un-hinted plan is kept and AQE picks the strategy
-    # from runtime stats (billions of docs must NOT broadcast).
-    if spark.sparkContext.master.startswith("local"):
-        r = F.broadcast(r)
     return (
         l.join(
             r,
@@ -962,7 +954,7 @@ def levenshtein_neardup(
         "id_r",
     )
 
-    local = docs.sparkSession.sparkContext.master.startswith("local")
+    local = session.single_host(docs.sparkSession)
     if local:
         idx = F.broadcast(idx)
     pair_ids = (
@@ -1020,7 +1012,7 @@ def dedup_keep_best(
     )
     comp = connected_components(cand, "id_a", "id_b")
     spark = docs.sparkSession
-    if spark.sparkContext.master.startswith("local"):
+    if session.single_host(spark):
         comp = F.broadcast(comp)
     labeled = (
         docs.select(F.col(id_col), F.length(F.col(text_col)).alias("__len"))
@@ -1064,9 +1056,9 @@ def duplicate_spans(
     position emits one 62-bit rolling-hash (two independent 31-bit
     polynomial channels combined — the SQL-replayable shingle machinery
     of the MinHash path, so the oracle is value-exact); hashes seen
-    more than once form a vocabulary-sized set joined back
-    broadcast-gated; a per-document window merges surviving positions
-    whose gram intervals overlap into maximal spans.  Work is linear in
+    more than once form a vocabulary-sized set joined back; a
+    per-document window merges surviving positions whose gram
+    intervals overlap into maximal spans.  Work is linear in
     corpus characters, the window is keyed by document (no hotspot).
 
     Output: ``(doc_id, span_start, span_len, n_grams)`` with 1-based
@@ -1097,7 +1089,7 @@ def duplicate_spans(
         )
 
     spark = docs.sparkSession
-    if spark.sparkContext.master.startswith("local"):
+    if session.single_host(spark):
         # single-row-group local inputs scan as one task; spread the
         # Arrow kernel first (same contract as minhash)
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
@@ -1108,8 +1100,6 @@ def duplicate_spans(
     dup = grams.groupBy("__h").agg(F.count(F.lit(1)).alias("__n")).filter(
         F.col("__n") > 1
     ).select("__h")
-    if docs.sparkSession.sparkContext.master.startswith("local"):
-        dup = F.broadcast(dup)
     marked = grams.join(dup, "__h").select(id_col, "__pos")
     w = Window.partitionBy(id_col).orderBy("__pos")
     spans = (
@@ -1187,7 +1177,7 @@ def remove_duplicate_spans(
 
     spark = docs.sparkSession
     src = docs
-    if spark.sparkContext.master.startswith("local"):
+    if session.single_host(spark):
         src = src.repartition(spark.sparkContext.defaultParallelism)
     grams = src.select(
         F.col(id_col),
@@ -1213,8 +1203,6 @@ def remove_duplicate_spans(
         .filter(F.col("__n") > 1)
         .select("__h", "__first")
     )
-    if spark.sparkContext.master.startswith("local"):
-        dup_first = F.broadcast(dup_first)
     cuts = (
         grams.join(dup_first, "__h")
         .filter(
@@ -1266,12 +1254,8 @@ def remove_duplicate_spans(
     # ONE text pass: base LEFT JOIN the (cached, span-sized) kept-
     # segment rows — a document with no cuts gets the NULL-keyed row,
     # whose piece is the whole text, so the old separate pass-through
-    # join is gone.  The span side is broadcast-hinted on local
-    # masters; on a cluster the un-hinted join on the id is the right
-    # plan — AQE decides.
+    # join is gone.  AQE picks the join strategy on the id.
     cutrows = mid.unionByName(tail)
-    if spark.sparkContext.master.startswith("local"):
-        cutrows = F.broadcast(cutrows)
     start = F.coalesce(F.col("__ks"), F.lit(1))
     pieces = (
         base.join(cutrows, id_col, "left")
@@ -1415,10 +1399,6 @@ def minhash_recall(
     sizes = sh.groupBy("__d").agg(F.count(F.lit(1)).cast("long").alias("__n"))
     a = sh.select(F.col("__d").alias("id_a"), "__h")
     b = sh.select(F.col("__d").alias("id_b"), "__h")
-    if spark.sparkContext.master.startswith("local"):
-        # eval-slice contract: the ground-truth side fits; on a cluster
-        # the shingle equi-join shuffles on __h (the intended scale plan)
-        b = F.broadcast(b)
     inter = (
         a.join(b, "__h")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -1427,9 +1407,6 @@ def minhash_recall(
     )
     sa = sizes.select(F.col("__d").alias("id_a"), F.col("__n").alias("__na"))
     sb = sizes.select(F.col("__d").alias("id_b"), F.col("__n").alias("__nb"))
-    if spark.sparkContext.master.startswith("local"):
-        sa = F.broadcast(sa)
-        sb = F.broadcast(sb)
     true_pairs = (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
@@ -1454,7 +1431,7 @@ def minhash_recall(
         seed=seed,
     ).select("id_a", "id_b").persist()
     cand_probe = cand
-    if spark.sparkContext.master.startswith("local"):
+    if session.single_host(spark):
         # candidate pairs are near-dup-count-sized, orders below the
         # corpus; on a cluster AQE picks the semi-join strategy
         cand_probe = F.broadcast(cand_probe)
@@ -1524,7 +1501,7 @@ def simhash_recall(
     cand = simhash_near_duplicates(
         fps, max_hamming=max_hamming, id_col=id_col
     ).select("id_a", "id_b")
-    if fps.sparkSession.sparkContext.master.startswith("local"):
+    if session.single_host(fps.sparkSession):
         cand = F.broadcast(cand)
     hit = true_pairs.join(cand, ["id_a", "id_b"], "left_semi")
     n_true = true_pairs.agg(F.count(F.lit(1)).cast("long").alias("n_true"))

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spatialdata_spark import session
+
 
 def word_tokens(text_col: str = "text"):
     """Lowercased whitespace tokens of a text column (expression)."""
@@ -377,8 +379,8 @@ def boilerplate_remove(
     Distributed shape: segments explode narrow on the document; the
     distinct-document count is two map-side-combinable aggregations
     (``(seg, doc)`` dedup, then per-seg count — never a window); only
-    the *flagged* vocabulary joins back (broadcast on local masters,
-    AQE's call on a cluster — at corpus scale the boilerplate set is
+    the *flagged* vocabulary joins back (AQE picks the join strategy —
+    at corpus scale the boilerplate set is
     vocabulary-sized, orders smaller than the corpus); reassembly is
     one per-document aggregation over sorted structs.  At 100 TB the
     exact distinct count swaps for the same two-stage shape with the
@@ -408,8 +410,6 @@ def boilerplate_remove(
         .filter(F.col("__d") >= int(min_docs))
         .select("__seg", F.lit(1).alias("__b"))
     )
-    if docs.sparkSession.sparkContext.master.startswith("local"):
-        boiler = F.broadcast(boiler)
     marked = segs.join(boiler, "__seg", "left")
     kept = F.when(
         F.col("__b").isNull(), F.struct(F.col("__i").alias("i"), F.col("__seg").alias("s"))
@@ -451,8 +451,8 @@ def paragraph_dedup(
     survivor set replays bit-exactly in SQL.
 
     Shape: segments explode narrow; one aggregation keyed by the
-    segment builds the canonical table (vocabulary-sized, joins back
-    broadcast-gated on local masters / AQE's call on a cluster);
+    segment builds the canonical table (vocabulary-sized, joins back;
+    AQE picks the join strategy);
     reassembly is one per-document sorted-struct aggregation — the
     ``boilerplate_remove`` plan with a keep-first rule instead of a
     df threshold."""
@@ -472,8 +472,6 @@ def paragraph_dedup(
         "__code", F.col(id_col).cast("long") * F.lit(1 << 20) + F.col("__i")
     )
     canon = segs.groupBy("__seg").agg(F.min("__code").alias("__first"))
-    if docs.sparkSession.sparkContext.master.startswith("local"):
-        canon = F.broadcast(canon)
     marked = segs.join(canon, "__seg")
     kept = F.when(
         F.col("__code") == F.col("__first"),
@@ -828,7 +826,7 @@ def dsir_weights(
             + F.log((F.col("__nr") + m).cast("double"))
         ).alias("__lr"),
     )
-    if docs.sparkSession.sparkContext.master.startswith("local"):
+    if session.single_host(docs.sparkSession):
         lr_tbl = F.broadcast(lr_tbl)
     doc_bkt = bucketed.groupBy(id_col, "__bkt").agg(
         F.count(F.lit(1)).cast("long").alias("__cnt")
@@ -912,8 +910,8 @@ def ngram_novelty(
 
     Plan: one distinct (doc, gram) explode; first-owner is a single
     map-side-combinable MIN per gram (the result is gram-VOCABULARY-
-    sized, not corpus-sized); the join back is broadcast-gated (on a
-    cluster AQE decides); one per-document aggregation.  Documents
+    sized, not corpus-sized); AQE picks the join-back strategy; one
+    per-document aggregation.  Documents
     with fewer than ``n`` tokens emit no row.
     """
     grams = (
@@ -924,8 +922,6 @@ def ngram_novelty(
         .distinct()
     )
     first = grams.groupBy("__g").agg(F.min("__d").alias("__first"))
-    if docs.sparkSession.sparkContext.master.startswith("local"):
-        first = F.broadcast(first)
     return (
         grams.join(first, "__g")
         .groupBy("__d")

@@ -22,14 +22,13 @@ Design notes (the repo's standing exactness contract):
   table is scanned k times but never re-shuffled: see the frontier
   contract below.
 * **The frontier contract (who moves per round).**  Two physical
-  strategies, selected by :func:`_broadcast_frontier`:
+  strategies, selected by :func:`spatialdata_spark.session.single_host`:
 
-  - *broadcast* (local masters by default): the node-sized
-    frontier/rank table broadcasts into each round's join — zero
-    exchanges anywhere, right while a single machine holds the graph.
-  - *co-partitioned* (cluster masters, or forced via the
-    ``spatialdata.graph.broadcastFrontier=false`` conf): the edge-side
-    table is hash-partitioned by its per-round join key ONCE
+  - *broadcast* (one host): the node-sized frontier/rank table
+    broadcasts into each round's join — zero exchanges anywhere, right
+    while a single machine holds the graph.
+  - *co-partitioned* (a cluster): the edge-side table is
+    hash-partitioned by its per-round join key ONCE
     (``repartition(key)`` + persist — or skipped entirely when the
     caller passes ``pre_partitioned=True`` over a table bucketed with
     :func:`spatialdata_spark.sources.bucketing.write_bucketed`), so
@@ -46,21 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: conf key selecting the per-round join strategy for iterative ops
-BROADCAST_FRONTIER_CONF = "spatialdata.graph.broadcastFrontier"
-
-
-def _broadcast_frontier(spark) -> bool:
-    """True → broadcast the node-sized frontier per round (the local-
-    master default); False → the co-partitioned path (cluster default):
-    edge tables are hash-partitioned by their per-round join key once
-    and persisted, so iteration joins are exchange-free on the edge
-    side.  Force either path with the ``spatialdata.graph.
-    broadcastFrontier`` conf (``auto`` | ``true`` | ``false``)."""
-    mode = str(spark.conf.get(BROADCAST_FRONTIER_CONF, "auto")).lower()
-    if mode == "auto":
-        return spark.sparkContext.master.startswith("local")
-    return mode == "true"
+from spatialdata_spark import session
 
 
 def _co_partition(df: DataFrame, key: str) -> DataFrame:
@@ -151,7 +136,7 @@ def pagerank(
     making round 1 exchange-free on the edge side too.
     """
     spark = edges.sparkSession
-    bcast = _broadcast_frontier(spark)
+    bcast = session.single_host(spark)
     e = edges.select(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
@@ -243,7 +228,7 @@ def label_propagation(
     Returns ``(node, label)`` after ``k`` rounds.
     """
     spark = edges.sparkSession
-    bcast = _broadcast_frontier(spark)
+    bcast = session.single_host(spark)
     e = edges.select(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
@@ -391,7 +376,7 @@ def triangle_count(
     und = _canonical_und(edges, src_col, dst_col, pre_partitioned)
     deg = _degrees(und).persist()
     spark = edges.sparkSession
-    bcast = _broadcast_frontier(spark)
+    bcast = session.single_host(spark)
     bdeg = F.broadcast(deg) if bcast else deg
     keyed = (
         und.join(bdeg.select(F.col("node").alias("u"), F.col("degree").alias("__du")), "u")
@@ -498,7 +483,7 @@ def graph_stats(
         triangle_count(und, "u", "v", pre_partitioned=True)
         .agg((F.sum("n_triangles") / 3).cast("long").alias("n_triangles"))
     )
-    bcast = _broadcast_frontier(spark)
+    bcast = session.single_host(spark)
     bdeg = F.broadcast(deg) if bcast else deg
     both = und.union(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
     if not bcast:
@@ -583,7 +568,7 @@ def link_prediction(
     und = _canonical_und(edges, src_col, dst_col, pre_partitioned).persist()
     deg = _degrees(und).persist()
     spark = edges.sparkSession
-    bcast = _broadcast_frontier(spark)
+    bcast = session.single_host(spark)
     bdeg = F.broadcast(deg) if bcast else deg
     apex_ok = bdeg.filter(F.col("degree") <= int(max_degree)).select(
         F.col("node").alias("w")
@@ -674,7 +659,7 @@ def random_walks(
         .persist()
     )
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("deg")).persist()
-    bdeg = F.broadcast(deg) if _broadcast_frontier(spark) else deg
+    bdeg = F.broadcast(deg) if session.single_host(spark) else deg
     m31 = 2147483648
     knuth = 2654435761
     starts = deg.select(F.col("node").alias("start")).crossJoin(
@@ -768,7 +753,7 @@ def kcore_rounds(
     bounded-round superset contract).
     """
     spark = edges.sparkSession
-    bcast = _broadcast_frontier(spark)
+    bcast = session.single_host(spark)
     kc = int(k_core)
     if kc < 1:
         raise ValueError(f"kcore_rounds: k_core must be >= 1 (got {kc})")
@@ -854,7 +839,7 @@ def hop_distances(
     exchange is inherent and amortized over all rounds.)
     """
     spark = edges.sparkSession
-    bcast = _broadcast_frontier(spark)
+    bcast = session.single_host(spark)
     und = undirected_edges(edges, src_col, dst_col)
     adj = (
         und.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
@@ -921,14 +906,14 @@ def modularity(
     disagreeing in value; integers cannot.)  Consumers wanting the
     float divide by 1e6.
 
-    Plan: one broadcast-gated label join per edge endpoint (labels are
-    the node-sized table), one conditional count for ``in_c``, one
-    community-sized rollup for ``deg_c`` — the edge table is scanned
-    once.  ``pre_partitioned=True`` declares ``edges`` is already the
+    Plan: one label join per edge endpoint (labels are the node-sized
+    table; AQE picks the join strategy), one conditional count for
+    ``in_c``, one community-sized rollup for ``deg_c`` — the edge table
+    is scanned once.  ``pre_partitioned=True`` declares ``edges`` is already the
     canonical undirected list bucketed by ``src_col`` (see
     :func:`_canonical_und`): the normalizing distinct is skipped and
     the first label join reuses the bucket layout edge-side
-    exchange-free in the cluster (non-broadcast) path — the second
+    exchange-free when the labels do not broadcast — the second
     (keyed ``v``) is the one unavoidable edge-sized exchange, the
     family's documented two-endpoint-join shape.  Un-bucketed input
     gets NO explicit repartition: modularity scans the edges once, so
@@ -939,14 +924,11 @@ def modularity(
     Output: one row ``(m, q_num, q_den, modularity_e6)``; NULL
     modularity_e6 for an empty edge set.
     """
-    spark = edges.sparkSession
     dec = "decimal(38,0)"
     und = _canonical_und(edges, src_col, dst_col, pre_partitioned)
     lab = labels.select(
         F.col(node_col).cast("long").alias("__n"), F.col(label_col).alias("__l")
     )
-    bcast = _broadcast_frontier(spark)
-    blab = F.broadcast(lab) if bcast else lab
     # persist: the labeled edge list (2 label columns only) feeds the
     # m/in_c aggregate AND the community-degree rollup — un-cached,
     # the old union-of-two-projections shape replayed the whole
@@ -955,8 +937,8 @@ def modularity(
     # PER-CALL ACCUMULATION (the _approx_rank_bins contract):
     # LRU-reclaimed; clearCache() reclaims eagerly.
     j = (
-        und.join(blab.select(F.col("__n").alias("u"), F.col("__l").alias("__lu")), "u")
-        .join(blab.select(F.col("__n").alias("v"), F.col("__l").alias("__lv")), "v")
+        und.join(lab.select(F.col("__n").alias("u"), F.col("__l").alias("__lu")), "u")
+        .join(lab.select(F.col("__n").alias("v"), F.col("__l").alias("__lv")), "v")
         .select("__lu", "__lv")
         .persist()
     )
@@ -1048,7 +1030,7 @@ def pagerank_weighted(
     ``pre_partitioned=True`` declares the input already src-bucketed.
     """
     spark = edges.sparkSession
-    bcast = _broadcast_frontier(spark)
+    bcast = session.single_host(spark)
     e = edges.select(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
@@ -1106,7 +1088,7 @@ def pagerank_weighted(
     tele = tele.persist()
     for _ in range(int(k)):
         r = ranks.select(F.col("node").alias("src"), "rank_fp")
-        if _broadcast_frontier(spark):
+        if session.single_host(spark):
             r = F.broadcast(r)
         contrib = (
             ed.join(r, "src")
@@ -1114,7 +1096,7 @@ def pagerank_weighted(
             .groupBy("dst")
             .agg(F.sum("__c").alias("__in"))
         )
-        if _broadcast_frontier(spark):
+        if session.single_host(spark):
             contrib = F.broadcast(contrib)
         ranks = (
             nodes.join(tele, "node", "left")
@@ -1167,7 +1149,7 @@ def hits(
     Returns ``(node, hub_fp, auth_fp)`` as int64 in ``[0, scale]``.
     """
     spark = edges.sparkSession
-    bcast = _broadcast_frontier(spark)
+    bcast = session.single_host(spark)
     dec = "decimal(38,0)"
     e = edges.select(
         F.col(src_col).cast("long").alias("src"),

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from spatialdata_spark import session
 from spatialdata_spark.session import construction_locked
 
 
@@ -378,11 +379,6 @@ def embedding_cosine_dedup(
     bucketed = bucket_fn(embeddings, num_planes, None, 42, id_col, vec_col, planes=planes).persist()
     a = bucketed.select("bucket", F.col(id_col).alias("id_a"), F.col(vec_col).cast("array<double>").alias("va"))
     b = bucketed.select("bucket", F.col(id_col).alias("id_b"), F.col(vec_col).cast("array<double>").alias("vb"))
-    if embeddings.sparkSession.sparkContext.master.startswith("local"):
-        # test/bench scale fits one executor: broadcast skips the
-        # two-sided bucket shuffle; cluster plans stay un-hinted (AQE
-        # picks the strategy — billions of vectors must NOT broadcast)
-        b = F.broadcast(b)
     sim = _dot_expr(F.col("va"), F.col("vb")) / (_norm_expr(F.col("va")) * _norm_expr(F.col("vb")))
     dup_ids = (
         a.join(b, "bucket")
@@ -392,7 +388,7 @@ def embedding_cosine_dedup(
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )
-    if embeddings.sparkSession.sparkContext.master.startswith("local"):
+    if session.single_host(embeddings.sparkSession):
         dup_ids = F.broadcast(dup_ids)
     # the keep-side anti-join deliberately reads the RAW input (the
     # bucketed table carries only (id, vec, bucket) — the output
@@ -748,8 +744,6 @@ def multiprobe_topk(
     cand = a.join(b, "bucket").filter(F.col("id_a") != F.col("id_b")).select("id_a", "id_b").distinct()
     va = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).cast("array<double>").alias("va"))
     vb = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).cast("array<double>").alias("vb"))
-    if embeddings.sparkSession.sparkContext.master.startswith("local"):
-        va, vb = F.broadcast(va), F.broadcast(vb)
     sim = _dot_expr(F.col("va"), F.col("vb")) / (_norm_expr(F.col("va")) * _norm_expr(F.col("vb")))
     scored = cand.join(va, "id_a").join(vb, "id_b").select("id_a", "id_b", sim.alias("cosine"))
     w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.col("id_b"))

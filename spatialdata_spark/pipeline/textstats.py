@@ -9,6 +9,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spatialdata_spark import session
+
 # tiny per-language stopword lists for the n-gram/stopword heuristic
 _STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "for", "with", "was"],
@@ -236,8 +238,8 @@ def unigram_lm_score(
     table, so the model-build pass scans the corpus ONCE (the
     pre-persist form ran a separate totals explode: 3 corpus scans per
     nll evaluation, tools/rescan_audit.py) — the counts joined back
-    broadcast-gated (on a cluster AQE decides — a 100 TB crawl's
-    vocabulary may outgrow a broadcast), corpus constants as a 1-row
+    (AQE picks the strategy — a 100 TB crawl's vocabulary may outgrow
+    a broadcast), corpus constants as a 1-row
     cross join, then a per-document mean with map-side combine.  Two
     corpus passes total: model build + scoring — the structural floor
     for score-corpus-under-its-own-model without a corpus-sized cache.
@@ -259,9 +261,6 @@ def unigram_lm_score(
     totals = counts.agg(
         F.sum("__c").alias("__T"), F.count(F.lit(1)).alias("__V")
     )
-    spark = docs.sparkSession
-    if spark.sparkContext.master.startswith("local"):
-        counts = F.broadcast(counts)
     # alias-qualified refs: an unqualified __T would trip Spark's
     # ambiguous-reference check after the crossJoin
     scored = tok.join(counts, "__t").crossJoin(F.broadcast(totals.alias("tot")))
@@ -325,7 +324,7 @@ def idf_keywords(
 
     Plan: token explode -> (doc, token) counts with map-side combine;
     document frequencies are a second aggregation over the tf table
-    (vocabulary-sized) joined back broadcast-gated; the corpus size is
+    (vocabulary-sized) joined back; the corpus size is
     a 1-row cross join; a per-document window takes the top k.  The
     window key is the document — maximally fine-grained, so no reducer
     hotspot at any corpus size.
@@ -355,9 +354,6 @@ def idf_keywords(
     tf = tok.groupBy(id_col, "__t").agg(F.count(F.lit(1)).alias("__tf")).persist()
     n_docs = tf.agg(F.count_distinct(F.col(id_col)).alias("__n"))
     df = tf.groupBy("__t").agg(F.count(F.lit(1)).alias("__df"))
-    spark = docs.sparkSession
-    if spark.sparkContext.master.startswith("local"):
-        df = F.broadcast(df)
     score = F.col("__tf") * F.log(F.col("__n").cast("double") / F.col("__df"))
     w = Window.partitionBy(id_col).orderBy(score.desc(), F.col("__t").asc())
     return (
@@ -393,7 +389,7 @@ def tfidf_cosine_pairs(
     the capped vocabulary the computation is exact.
 
     Plan: tf per (doc, token) with map-side combine; df as a
-    vocabulary-sized aggregate joined back broadcast-gated; norms per
+    vocabulary-sized aggregate joined back; norms per
     document (map-side combine); the candidate self-join is an
     equi-join ON THE TOKEN, so pair generation is Σ per-token-df² with
     df ≤ max_df — bounded blocks, never corpus².  Output:
@@ -411,9 +407,6 @@ def tfidf_cosine_pairs(
     df = tf.groupBy("__t").agg(F.count(F.lit(1)).alias("__df")).filter(
         F.col("__df") <= max_df
     )
-    spark = docs.sparkSession
-    if spark.sparkContext.master.startswith("local"):
-        df = F.broadcast(df)
     w = (
         tf.join(df, "__t")
         .crossJoin(F.broadcast(n_docs))
@@ -430,8 +423,6 @@ def tfidf_cosine_pairs(
     norms = w.groupBy(id_col).agg(F.sqrt(F.sum(F.col("__w") * F.col("__w"))).alias("__norm"))
     l = w.select(F.col(id_col).alias("id_a"), F.col("__t"), F.col("__w").alias("__wa"))
     r = w.select(F.col(id_col).alias("id_b"), F.col("__t"), F.col("__w").alias("__wb"))
-    if spark.sparkContext.master.startswith("local"):
-        r = F.broadcast(r)
     dots = (
         l.join(r, "__t")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -440,8 +431,6 @@ def tfidf_cosine_pairs(
     )
     na = norms.select(F.col(id_col).alias("id_a"), F.col("__norm").alias("__na"))
     nb = norms.select(F.col(id_col).alias("id_b"), F.col("__norm").alias("__nb"))
-    if spark.sparkContext.master.startswith("local"):
-        na, nb = F.broadcast(na), F.broadcast(nb)
     return (
         dots.join(na, "id_a")
         .join(nb, "id_b")
@@ -726,7 +715,7 @@ def bigram_lm_score(
     the bigram table, unigram table, and the V constant all derive
     from the cache (the pre-persist form ran separate explodes — 4
     corpus scans per evaluation, tools/rescan_audit.py).  The scoring
-    pass joins back broadcast-gated; corpus constants ride a 1-row
+    pass joins back; corpus constants ride a 1-row
     cross join; the final per-document mean combines map-side.  Two
     corpus passes total — the score-under-own-model floor.  Documents
     with fewer than two tokens emit no row (no bigram, no likelihood).
@@ -762,10 +751,6 @@ def bigram_lm_score(
     totals = cnt.filter(~F.col("__g").contains(" ")).agg(
         F.count(F.lit(1)).alias("__V")
     )
-    spark = docs.sparkSession
-    if spark.sparkContext.master.startswith("local"):
-        c2 = F.broadcast(c2)
-        c1 = F.broadcast(c1)
     scored = (
         bg.join(c2, "__g")
         .join(c1, "__a")
@@ -832,15 +817,10 @@ def kmv_source_overlap(
         .select("__g", "__h")
         .persist()
     )
-    local = docs.sparkSession.sparkContext.master.startswith("local")
-    if local:
-        sk = F.broadcast(sk)
     srcs = sk.select(F.col("__g").alias("s1")).distinct()
     pairs = srcs.crossJoin(
         srcs.select(F.col("s1").alias("s2"))
     ).filter(F.col("s1") < F.col("s2"))
-    if local:
-        pairs = F.broadcast(pairs)
     ra = pairs.join(
         sk.select(F.col("__g").alias("s1"), F.col("__h").alias("h")), "s1"
     ).select("s1", "s2", "h", F.lit(1).alias("i1"), F.lit(0).alias("i2"))
@@ -1054,9 +1034,8 @@ def jsd_sources(
     (source x vocabulary) matrix.  Bits-free (nats), 6 dp.
 
     Plan: one corpus count table and one per-source count table (both
-    vocabulary-sized, map-side combine), a broadcast-gated equi-join
-    between them, scalar totals on a 1-row cross join, one per-source
-    aggregation.
+    vocabulary-sized, map-side combine), an equi-join between them,
+    scalar totals on a 1-row cross join, one per-source aggregation.
 
     Output: ``(group, n_tokens, jsd)`` — JSD in [0, ln 2].
     """
@@ -1087,10 +1066,6 @@ def jsd_sources(
     )
     totals = sc.agg(F.sum("__cs").cast("long").alias("__N"))
     stot = sc.groupBy("__g").agg(F.sum("__cs").cast("long").alias("__Ns"))
-    spark = docs.sparkSession
-    if spark.sparkContext.master.startswith("local"):
-        cc = F.broadcast(cc)
-        stot = F.broadcast(stot)
     j = (
         sc.join(cc, "__tok")
         .join(stot, "__g")
@@ -1178,7 +1153,7 @@ def curation_funnel(
     pb = perplexity_buckets(docs, text_col=text_col, id_col=id_col).select(
         id_col, "bucket"
     )
-    if docs.sparkSession.sparkContext.master.startswith("local"):
+    if session.single_host(docs.sparkSession):
         dmin = F.broadcast(dmin)
         pb = F.broadcast(pb)
     j = g.join(dmin, "__digest").join(pb, id_col, "left")
@@ -1718,7 +1693,7 @@ def stupid_backoff_score(
     PERSISTED, distinct-gram-sized — the pre-persist form ran separate
     bigram/unigram/totals explodes: 5 corpus scans per evaluation,
     tools/rescan_audit.py); the context, continuation, and N tables
-    all derive from the cache; broadcast-gated joins, 1-row constants,
+    all derive from the cache; vocabulary-sized joins, 1-row constants,
     map-side-combining per-document mean.  Two corpus passes total.
     PER-CALL ACCUMULATION (the _approx_rank_bins contract) on the
     gram-count persist: LRU-reclaimed; clearCache() reclaims eagerly.
@@ -1758,11 +1733,6 @@ def stupid_backoff_score(
     c1 = cu.select(F.col("__t2").alias("__a"), F.col("__cu").alias("__c1"))
     cb = cu.select(F.col("__t2").alias("__b"), F.col("__cu").alias("__cb"))
     totals = cu.agg(F.sum("__cu").alias("__N"))
-    spark = docs.sparkSession
-    if spark.sparkContext.master.startswith("local"):
-        c2 = F.broadcast(c2)
-        c1 = F.broadcast(c1)
-        cb = F.broadcast(cb)
     scored = (
         bg.join(c2, "__g", "left")
         .join(c1, "__a")
@@ -1818,7 +1788,7 @@ def kneser_ney_score(
 
     Plan: all four statistic tables are vocabulary-/type-sized with
     map-side combine (``n1p``/``ctx`` share one aggregation over the
-    bigram-type table), broadcast-gated joins, a 1-row type total —
+    bigram-type table), joins between them, a 1-row type total —
     the corpus is scanned once per side and never shuffles.
     """
     from .filters import word_ngrams, word_tokens
@@ -1850,15 +1820,8 @@ def kneser_ney_score(
     )
     n1b = c2.groupBy("__b").agg(F.count(F.lit(1)).alias("__n1b"))
     n1tot = c2.agg(F.count(F.lit(1)).alias("__nt"))
-    spark = docs.sparkSession
-    if spark.sparkContext.master.startswith("local"):
-        c2j = F.broadcast(c2)
-        ctx = F.broadcast(ctx)
-        n1b = F.broadcast(n1b)
-    else:
-        c2j = c2
     scored = (
-        bg.join(c2j, ["__a", "__b"], "left")
+        bg.join(c2, ["__a", "__b"], "left")
         .join(ctx, "__a", "left")
         .join(n1b, "__b")
         .crossJoin(F.broadcast(n1tot))

@@ -14,7 +14,8 @@ import functools
 import os
 import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # Serializes plan CONSTRUCTION for operators that register fixed-name
 # session-global temp views and resolve them in the same call
@@ -38,6 +39,27 @@ def construction_locked(fn):
             return fn(*args, **kwargs)
 
     return wrapper
+
+
+def single_host(spark: SparkSession) -> bool:
+    """True when the session runs on one host (a ``local[...]`` master),
+    so its inputs fit one machine.  This is the only place that decision
+    is made: the operators whose local plan differs (a fan-out
+    ``repartition`` over single-task scans, a broadcast hint on a side
+    that scales with the data) ask it here, and on a cluster they keep
+    the un-hinted plan AQE sizes from runtime stats.  Callers look it up
+    as ``session.single_host(...)``, so patching this attribute gives
+    every operator the cluster plan."""
+    return spark.sparkContext.master.startswith("local")
+
+
+def broadcast_if_single_host(df: DataFrame) -> DataFrame:
+    """Broadcast hint on a dimension side that scales with the data:
+    on one host it skips the shuffle; on a cluster the plan stays
+    un-hinted and AQE picks the join strategy (a 100 TB part table must
+    NOT broadcast).  Fixed-cardinality dims keep an unconditional
+    ``F.broadcast`` at their call sites."""
+    return F.broadcast(df) if single_host(df.sparkSession) else df
 
 
 def get_spark(app_name: str = "spatialdata-spark", cores: int | None = None) -> SparkSession:
@@ -77,14 +99,19 @@ def get_spark(app_name: str = "spatialdata-spark", cores: int | None = None) -> 
         # triggers on CPython 3.11 (see sitecustomize.py).  On a real
         # cluster the library is shipped to executors anyway
         # (--py-files / image); this keeps local workers equivalent.
-        .config(
-            "spark.executorEnv.PYTHONPATH",
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        )
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
         .getOrCreate()
     )
     _invalidate_udf_caches_on_new_context(spark)
     return spark
+
+
+def _worker_pythonpath() -> str:
+    """The caller's PYTHONPATH with the library root appended (a user's
+    own entries keep precedence and are not dropped)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    user = os.environ.get("PYTHONPATH", "")
+    return os.pathsep.join(p for p in (user, root) if p)
 
 
 # SparkContext id the keyed-factory UDF caches were built against.

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from spatialdata_spark import session
 from spatialdata_spark.sources.bucketing import read_bucketed, write_bucketed
 
 
@@ -58,7 +59,7 @@ def test_bucketed_data_is_plain_parquet(spark, tmp_path, bucketed_pair):
     assert df.count() == 200
 
 
-def test_bucketed_edges_feed_pagerank_pre_partitioned(spark, tmp_path):
+def test_bucketed_edges_feed_pagerank_pre_partitioned(spark, tmp_path, monkeypatch):
     """The full 100 TB iterative-graph recipe end-to-end: edges written
     ONCE with write_bucketed(src), read back, fed to pagerank in the
     co-partitioned frontier mode with pre_partitioned=True — values
@@ -86,7 +87,7 @@ def test_bucketed_edges_feed_pagerank_pre_partitioned(spark, tmp_path):
         edges, "b_edges", str(tmp_path / "edges"), buckets=8, bucket_cols="src"
     )
     try:
-        spark.conf.set(G.BROADCAST_FRONTIER_CONF, "false")
+        monkeypatch.setattr(session, "single_host", lambda s: False)
         calls = []
         real = G._co_partition
         G._co_partition = lambda df, key: calls.append(key) or real(df, key)
@@ -100,11 +101,10 @@ def test_bucketed_edges_feed_pagerank_pre_partitioned(spark, tmp_path):
         assert calls == []  # the op trusted the bucketing
         assert rows == expected
     finally:
-        spark.conf.set(G.BROADCAST_FRONTIER_CONF, "auto")
         spark.sql("DROP TABLE IF EXISTS b_edges")
 
 
-def test_bucketed_undirected_edges_feed_triangles_pre_partitioned(spark, tmp_path):
+def test_bucketed_undirected_edges_feed_triangles_pre_partitioned(spark, tmp_path, monkeypatch):
     """The edge⋈edge family's 100 TB recipe end-to-end: the CANONICAL
     undirected edge list written ONCE with write_bucketed(u), read
     back, fed to triangle_count / graph_stats / link_prediction with
@@ -134,7 +134,7 @@ def test_bucketed_undirected_edges_feed_triangles_pre_partitioned(spark, tmp_pat
         canon, "b_und", str(tmp_path / "und"), buckets=8, bucket_cols="u"
     )
     try:
-        spark.conf.set(G.BROADCAST_FRONTIER_CONF, "false")
+        monkeypatch.setattr(session, "single_host", lambda s: False)
         real = G.undirected_edges
         calls = []
         G.undirected_edges = lambda df, s="src", d="dst": calls.append(1) or real(df, s, d)
@@ -161,6 +161,5 @@ def test_bucketed_undirected_edges_feed_triangles_pre_partitioned(spark, tmp_pat
         assert got_gs == expected["gs"]
         assert got_lp == expected["lp"]
     finally:
-        spark.conf.set(G.BROADCAST_FRONTIER_CONF, "auto")
         spark.sql("DROP TABLE IF EXISTS b_und")
         spark.catalog.clearCache()

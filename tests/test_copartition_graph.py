@@ -1,10 +1,10 @@
 """The co-partitioned iterative-graph path (the 100 TB frontier
-contract): with ``spatialdata.graph.broadcastFrontier=false`` the
-edge-side table of every iterative op is hash-partitioned by its
-per-round join key ONCE (explicit partition count + eager
-materialization, so the cached plan's partitioning is FINAL), and
-every per-iteration join is exchange-free on the edge side — only the
-node-sized frontier moves.
+contract): with ``session.single_host`` patched to ``False`` (the
+cluster plan) the edge-side table of every iterative op is
+hash-partitioned by its per-round join key ONCE (explicit partition
+count + eager materialization, so the cached plan's partitioning is
+FINAL), and every per-iteration join is exchange-free on the edge
+side — only the node-sized frontier moves.
 
 Two guarantees, both checked here:
 
@@ -34,8 +34,8 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from spatialdata_spark import session  # noqa: E402
 from spatialdata_spark.pipeline.graph import (  # noqa: E402
-    BROADCAST_FRONTIER_CONF,
     graph_stats,
     hits,
     hop_distances,
@@ -61,7 +61,7 @@ def _random_edges(spark, seed=7, n=40, m=120):
 
 
 @pytest.fixture()
-def cluster_mode(spark):
+def cluster_mode(spark, monkeypatch):
     saved = {
         "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
             "spark.sql.autoBroadcastJoinThreshold"
@@ -70,12 +70,11 @@ def cluster_mode(spark):
             "spark.sql.adaptive.autoBroadcastJoinThreshold", "-1"
         ),
     }
-    spark.conf.set(BROADCAST_FRONTIER_CONF, "false")
+    monkeypatch.setattr(session, "single_host", lambda s: False)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     spark.catalog.clearCache()
     yield spark
-    spark.conf.set(BROADCAST_FRONTIER_CONF, "auto")
     for k, v in saved.items():
         spark.conf.set(k, v)
     spark.catalog.clearCache()
@@ -152,13 +151,13 @@ def _assert_edge_side_exchange_free(df, marker: str):
             raise AssertionError(f"edge-side exchange on path: {path}")
 
 
-def test_copartitioned_path_matches_broadcast_path(spark, cluster_mode):
+def test_copartitioned_path_matches_broadcast_path(spark, cluster_mode, monkeypatch):
     e = _random_edges(spark)
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
     wgt = sym.withColumn("weight", (F.col("src") % 3 + 1).cast("long"))
 
-    spark.conf.set(BROADCAST_FRONTIER_CONF, "true")
+    monkeypatch.setattr(session, "single_host", lambda s: True)
     expected = {
         "pagerank": _rows(pagerank(sym, k=3)),
         "lpa": _rows(label_propagation(sym, k=3)),
@@ -170,7 +169,7 @@ def test_copartitioned_path_matches_broadcast_path(spark, cluster_mode):
         "gs": _rows(graph_stats(e)),
         "lp": _rows(link_prediction(e, top_n=20)),
     }
-    spark.conf.set(BROADCAST_FRONTIER_CONF, "false")
+    monkeypatch.setattr(session, "single_host", lambda s: False)
     assert _rows(pagerank(sym, k=3)) == expected["pagerank"]
     assert _rows(label_propagation(sym, k=3)) == expected["lpa"]
     assert _rows(kcore_rounds(e, k_core=3, rounds=3)) == expected["kcore"]

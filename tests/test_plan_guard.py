@@ -13,18 +13,24 @@ Checked on a representative subset (fast — plans only, nothing runs):
   not in the registry.)
 * the identity bbox fast path pushes its range predicates into the
   parquet scan,
-* expression-only pipelines keep Python out of the plan.
+* expression-only pipelines keep Python out of the plan,
+* the cluster plan: every registry query whose plan
+  ``session.single_host`` changes is also planned with it patched to
+  ``False``, and that plan must differ and still match its oracle.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
+from spatialdata_spark import session  # noqa: E402
+from tests.parity import compare, duckdb_conn  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 
@@ -390,3 +396,82 @@ def test_expression_paths_have_no_python(plans):
         if any(tok in plans[n][0] for tok in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "FlatMapGroupsInPandas"))
     ]
     assert not offenders, offenders
+
+
+# registry queries whose plan on one host differs from the cluster plan
+# (the session.single_host gates they reach change it at this scale)
+SINGLE_HOST_SHAPED = [
+    "q03_shipping",
+    "q05_local_supplier",
+    "q10_returned_items",
+    "ag_points_by_circles_count",
+    "ag_points_by_circles_sum",
+    "ag_points_by_circles_mean",
+    "ag_points_by_circles_max",
+    "ag_points_categorical",
+    "ag_points_by_darts",
+    "ag_fractions_concave",
+    "ag_points_by_boxes",
+    "sq_multipart_shapes",
+    "pl_ngram_jaccard",
+    "pl_minhash_dedup",
+    "pl_minhash_recall",
+    "pl_minhash_expr",
+    "pl_dedup_keep_best",
+    "pl_semantic_dedup",
+    "pl_containment",
+    "pl_curation_funnel",
+    "pl_span_cut",
+    "pl_dup_spans",
+    "pl_simhash_recall",
+    "pl_lev_neardup",
+    "pl_target_encode",
+    "pl_dsir_weights",
+    "pl_embed_dedup",
+    "pl_ppr_seeds",
+    "pl_pagerank",
+    "pl_label_prop",
+    "pl_hop_dist",
+    "pl_hits",
+    "pl_kcore",
+    "pl_triangles",
+    "pl_graph_stats",
+    "pl_link_pred",
+]
+
+
+def _operator_tree(df) -> list[tuple]:
+    """The initial physical plan, cached stages included, as one
+    (depth, operator, exchange partitioning) entry per node: join
+    strategies and exchanges, no expression or stage ids."""
+    tree = df._jdf.queryExecution().executedPlan().treeString()
+    nodes = []
+    for line in tree.splitlines():
+        m = re.match(r"([\s:+\-|]*)(?:\*\(\d+\) )?(\w+)(?: (\w+))?", line)
+        if m and m.group(2):
+            part = m.group(3) if m.group(2) == "Exchange" else None
+            nodes.append((len(m.group(1)), m.group(2), part))
+    return nodes
+
+
+@pytest.fixture()
+def empty_cache(spark):
+    # a materialized cache carries exact size stats, with which AQE may
+    # broadcast the side a single-host hint would: plan from none
+    spark.catalog.clearCache()
+    yield spark
+    spark.catalog.clearCache()
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata not present")
+@pytest.mark.parametrize("name", SINGLE_HOST_SHAPED)
+def test_cluster_plan_differs_and_matches_oracle(empty_cache, monkeypatch, name):
+    spark = empty_cache
+    build = entrymod.queries()[name]
+    local = _operator_tree(build(spark, SF_DIR))
+    monkeypatch.setattr(session, "single_host", lambda s: False)
+    df = build(spark, SF_DIR)
+    assert _operator_tree(df) != local, f"{name}: cluster plan equals the single-host plan"
+    oracle = duckdb_conn(SF_DIR).execute(entrymod.oracle_sql()[name]).fetchdf()
+    ok, msg = compare(df.toPandas(), oracle)
+    assert ok, f"{name} (cluster plan): {msg}"

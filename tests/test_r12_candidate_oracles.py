@@ -1,47 +1,8 @@
-"""Cross-engine rehearsal for the five r12 registrations — now pinned
-against the REGISTERED oracles (round 11 banked these with draft SQL in
-this file; round 12 moved the SQL verbatim into
-``__spark_entry__.oracle_sql()``, and this test keeps the two-SF
-cross-engine check alive while also pinning that registration happened:
-a missing key or a drifted oracle fails here before the driver sees it).
-"""
+"""Cross-engine check of the rows registered in round 12 (see
+``tests/candidate_oracles.py``)."""
 
-from __future__ import annotations
-
-import os
-import sys
-
-import pytest
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tests.parity import compare, duckdb_conn  # noqa: E402
+from candidate_oracles import registered_cross_engine
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
-R12_KEYS = [
-    "q_revenue_growth",
-    "pl_cvm_lengths",
-    "st_weekday_profile",
-    "pl_theil_index",
-    "pl_mutual_info",
-]
-
-
-@pytest.mark.parametrize("name", R12_KEYS)
-@pytest.mark.parametrize("sf_dir", SF_DIRS)
-def test_r12_registration_cross_engine(spark, name, sf_dir):
-    import __spark_entry__ as em
-
-    q = em.queries()
-    o = em.oracle_sql()
-    assert name in q, f"{name} missing from queries()"
-    assert name in o, f"{name} missing from oracle_sql()"
-    # (the head-50 membership assertion was r12-only: these rows
-    # rotated out of the driver head at r13 per the rotation rule, but
-    # stay registered with their oracles pinned here)
-    sdf = q[name](spark, sf_dir).toPandas()
-    con = duckdb_conn(sf_dir)
-    odf = con.execute(o[name]).fetchdf()
-    ok, msg = compare(sdf, odf)
-    assert ok, f"{name} @ {sf_dir}: {msg}"
+test_r12_registration_cross_engine = registered_cross_engine("r12", SF_DIRS)

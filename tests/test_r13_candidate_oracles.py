@@ -1,48 +1,8 @@
-"""Cross-engine rehearsal for the six r13 registrations — now pinned
-against the REGISTERED oracles (round 12 banked these with draft SQL in
-this file; round 13 moved the SQL verbatim into
-``__spark_entry__.oracle_sql()``, and this test keeps the two-SF
-cross-engine check alive while also pinning that registration happened:
-a missing key or a drifted oracle fails here before the driver sees it).
-"""
+"""Cross-engine check of the rows registered in round 13 (see
+``tests/candidate_oracles.py``)."""
 
-from __future__ import annotations
-
-import os
-import sys
-
-import pytest
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tests.parity import compare, duckdb_conn  # noqa: E402
+from candidate_oracles import registered_cross_engine
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
-R13_KEYS = [
-    "q_rfm_segments",
-    "pl_spearman_corr",
-    "pl_chao1_richness",
-    "st_mann_kendall",
-    "pl_vocab_overlap",
-    "pl_length_quantiles",
-]
-
-
-@pytest.mark.parametrize("name", R13_KEYS)
-@pytest.mark.parametrize("sf_dir", SF_DIRS)
-def test_r13_registration_cross_engine(spark, name, sf_dir):
-    import __spark_entry__ as em
-
-    q = em.queries()
-    o = em.oracle_sql()
-    assert name in q, f"{name} missing from queries()"
-    assert name in o, f"{name} missing from oracle_sql()"
-    # (the head-50 membership assertion was r13-only: these rows
-    # rotated out of the driver head at r14 per the rotation rule, but
-    # stay registered with their oracles pinned here)
-    sdf = q[name](spark, sf_dir).toPandas()
-    con = duckdb_conn(sf_dir)
-    odf = con.execute(o[name]).fetchdf()
-    ok, msg = compare(sdf, odf)
-    assert ok, f"{name} @ {sf_dir}: {msg}"
+test_r13_registration_cross_engine = registered_cross_engine("r13", SF_DIRS)

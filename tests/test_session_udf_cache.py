@@ -6,6 +6,8 @@ a stale handle (r15 ADVICE item)."""
 
 from __future__ import annotations
 
+import os
+
 import spatialdata_spark.session as S
 from spatialdata_spark.operators import raster
 
@@ -71,3 +73,13 @@ def test_module_level_udf_placeholder_reset_on_context_change():
     finally:
         udf_obj._judf_placeholder = None
         S._UDF_CACHE_CTX[0] = saved
+
+
+def test_worker_pythonpath_keeps_user_entries(monkeypatch):
+    """get_spark puts the library root on the Python workers' path
+    after the caller's own PYTHONPATH entries, never in their place."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(S.__file__)))
+    monkeypatch.setenv("PYTHONPATH", os.pathsep.join(["user-libs", "more-libs"]))
+    assert S._worker_pythonpath().split(os.pathsep) == ["user-libs", "more-libs", root]
+    monkeypatch.delenv("PYTHONPATH")
+    assert S._worker_pythonpath() == root

@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+from spatialdata_spark import session  # noqa: E402
 from spatialdata_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -84,7 +85,6 @@ def main(max_mult: int = 8, only: list[str] | None = None) -> None:
     )
     from spatialdata_spark.pipeline.dedup import rouge_recall_pairs
     from spatialdata_spark.pipeline.graph import (
-        BROADCAST_FRONTIER_CONF,
         graph_stats,
         hits,
         hop_distances,
@@ -466,11 +466,12 @@ def main(max_mult: int = 8, only: list[str] | None = None) -> None:
 
     def _copart(fn):
         # force the cluster (co-partitioned frontier) path for one case
-        spark.conf.set(BROADCAST_FRONTIER_CONF, "false")
+        single_host = session.single_host
+        session.single_host = lambda s: False
         try:
             return fn()
         finally:
-            spark.conf.set(BROADCAST_FRONTIER_CONF, "auto")
+            session.single_host = single_host
 
     def _heaps_curve_of(d):
         # mirrors pl_heaps_curve over a replicated docs frame (the
