@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spatialdata_spark import session
-from spatialdata_spark.session import construction_locked
 
 AGG_FUNCS = {"sum": F.sum, "mean": F.avg, "count": F.count, "min": F.min, "max": F.max}
 
@@ -155,7 +154,6 @@ def _circle_cell_cover(circles_slim: DataFrame, h: float) -> DataFrame:
     )
 
 
-@construction_locked
 def aggregate_points_by_circles(
     points: DataFrame,
     shapes: DataFrame,
@@ -179,14 +177,15 @@ def aggregate_points_by_circles(
     computed as total_sum/total_count so results are bit-identical to a
     direct per-point aggregation for integer-valued doubles.
 
-    Plan construction is CONSOLIDATED into temp views + three
-    ``spark.sql`` parses (r15, guide §5-driver): the former DataFrame-op
-    chain cost ~800 py4j round trips ≈ 0.3-0.45 s of driver time per
-    action; the SQL text below reproduces the exact same expressions
-    (same literals via ``{x!r}D``, same operation order, same hints) so
-    the physical plan — and every result bit — is unchanged.  The plan
-    shape itself is documented inline; the r14 A/B numbers justifying
-    each hint are in OPTIMIZATION_r14.md.
+    Plan construction is CONSOLIDATED into two ``spark.sql`` parses
+    that bind their input frames as arguments (r15, guide §5-driver):
+    the former DataFrame-op chain cost ~800 py4j round trips ≈
+    0.3-0.45 s of driver time per action; the SQL text below
+    reproduces the exact same expressions (same literals via
+    ``{x!r}D``, same operation order, same hints) so the physical plan
+    — and every result bit — is unchanged.  The plan shape itself is
+    documented inline; the r14 A/B numbers justifying each hint are in
+    OPTIMIZATION_r14.md.
     """
     if agg_func not in AGG_FUNCS:
         raise ValueError(f"agg_func {agg_func!r}; supported: {sorted(AGG_FUNCS)}")
@@ -200,8 +199,15 @@ def aggregate_points_by_circles(
     par = spark.sparkContext.defaultParallelism
     local = session.single_host(spark)
 
-    shapes.createOrReplaceTempView("__apc_shapes")
-    points.createOrReplaceTempView("__apc_points")
+    # Inputs bind as ``spark.sql`` arguments, whose views are dropped
+    # after analysis — and dropping a view uncaches any cached plan it
+    # matches.  So neither a caller's frame nor the persisted cover is
+    # ever bound as it is, only frames computed from them (the first
+    # projection, the cover's two filters), which match no cache entry.
+    # The doubled braces in the f-strings below are the placeholders.
+    circ = shapes.selectExpr(
+        "shape_id", "((minx + maxx) / 2) AS ccx", "((miny + maxy) / 2) AS ccy", "radius AS r"
+    )
 
     # --- the cell cover (see _circle_cell_cover for the geometry):
     # circles project to (ccx, ccy, r), explode to covering grid cells,
@@ -226,8 +232,7 @@ FROM (
     SELECT *, explode(sequence(floor((ccy - r) / {hs}), floor((ccy + r) / {hs}))) AS __qy
     FROM (
       SELECT *, explode(sequence(floor((ccx - r) / {hs}), floor((ccx + r) / {hs}))) AS __qx
-      FROM (SELECT {spread}shape_id, ((minx + maxx) / 2) AS ccx, ((miny + maxy) / 2) AS ccy, radius AS r
-            FROM __apc_shapes)
+      FROM (SELECT {spread}* FROM {{circ}})
     )
   )
   WHERE (({dxn} * {dxn}) + ({dyn} * {dyn})) <= (r * r)
@@ -235,8 +240,7 @@ FROM (
     # persist: the cover feeds both the full-cell and boundary branches;
     # without it the explode subtree is computed twice per action
     # (MEMORY_AND_DISK, slim rows ∝ dim side — safe at scale, ~20% win)
-    cells = spark.sql(cells_sql).persist()
-    cells.createOrReplaceTempView("__apc_cells")
+    cells = spark.sql(cells_sql, circ=circ).persist()
 
     categorical = value_col is not None and dict(points.dtypes).get(value_col) == "string"
     vq = f"`{value_col}`" if value_col else None
@@ -255,17 +259,10 @@ FROM (
         # category now forms its own group — standard SQL GROUP BY
         # semantics, matching the DuckDB oracle — where the old
         # dictionary inner-join silently dropped those points.
-        pt_sql = (
-            f"SELECT x, y, {vq} AS __code, "
-            f"floor(x / {h!r}D) AS __qx, floor(y / {h!r}D) AS __qy "
-            f"FROM __apc_points"
-        )
+        keep = ["x", "y", f"{vq} AS __code"]
     else:
-        keep = "x, y" + (f", {vq}" if value_col and value_col not in ("x", "y") else "")
-        pt_sql = (
-            f"SELECT {keep}, floor(x / {h!r}D) AS __qx, floor(y / {h!r}D) AS __qy "
-            f"FROM __apc_points"
-        )
+        keep = ["x", "y"] + ([vq] if value_col and value_col not in ("x", "y") else [])
+    pt = points.selectExpr(*keep, f"floor(x / {h!r}D) AS __qx", f"floor(y / {h!r}D) AS __qy")
 
     # partial-aggregation schema shared by the full-cell and boundary paths
     if value_col is None or categorical:
@@ -333,21 +330,20 @@ FROM (
     # that AQE's byte-based coalescing is the right owner.
     repi = f"/*+ REPARTITION({par}, __qx, __qy) */ " if local else ""
     main_sql = f"""
-WITH pt AS ({pt_sql}),
-ca AS (SELECT __qx, __qy{ck}, {partial} FROM pt GROUP BY __qx, __qy{ck}),
+WITH ca AS (SELECT __qx, __qy{ck}, {partial} FROM {{pt}} GROUP BY __qx, __qy{ck}),
 fp AS (
   SELECT shape_id{ck}, {fp_combine}
   FROM (
     SELECT {bhint}f.shape_id, {ca_cols}
-    FROM (SELECT shape_id, __qx, __qy FROM __apc_cells WHERE __full) f
+    FROM (SELECT shape_id, __qx, __qy FROM {{full}}) f
     JOIN ca ON f.__qx = ca.__qx AND f.__qy = ca.__qy
   )
   GROUP BY shape_id{ck}
 ),
 bp AS (
   SELECT /*+ SHUFFLE_HASH(bc) */ {bp_keys}, {partial}
-  FROM (SELECT {repi}* FROM pt) pt
-  JOIN (SELECT {repi}shape_id, ccx, ccy, r, __qx, __qy FROM __apc_cells WHERE NOT __full) bc
+  FROM (SELECT {repi}* FROM {{pt}}) pt
+  JOIN (SELECT {repi}shape_id, ccx, ccy, r, __qx, __qy FROM {{edge}}) bc
     ON pt.__qx = bc.__qx AND pt.__qy = bc.__qy
   WHERE (((pt.x - bc.ccx) * (pt.x - bc.ccx)) + ((pt.y - bc.ccy) * (pt.y - bc.ccy))) <= (bc.r * bc.r)
   GROUP BY bc.shape_id{ck}
@@ -357,7 +353,7 @@ FROM (SELECT * FROM fp UNION ALL SELECT * FROM bp)
 GROUP BY shape_id{ck}"""
     if categorical:
         main_sql = f"SELECT by_id, n, __code AS category FROM ({main_sql}\n)"
-    return spark.sql(main_sql)
+    return spark.sql(main_sql, pt=pt, full=cells.where("__full"), edge=cells.where("NOT __full"))
 
 
 def _estimate_cell_size(shapes: DataFrame) -> float:
@@ -497,7 +493,6 @@ def _shape_kinds(df: DataFrame) -> frozenset[str]:
     return frozenset(r[0] for r in df.select("kind").distinct().collect())
 
 
-@construction_locked
 def grid_join_shapes_shapes(
     values: DataFrame,
     by: DataFrame,
@@ -527,28 +522,33 @@ def grid_join_shapes_shapes(
         by_kinds = _shape_kinds(by)
     exprable_kinds = values_kinds <= {"box", "point"} and by_kinds <= {"box", "point"}
 
+    css = f"{cs!r}D"
+
+    def cells(df: DataFrame, p: str) -> DataFrame:
+        return (
+            df.selectExpr(
+                f"shape_id AS {p}_id", f"kind AS {p}_kind", f"wkb AS {p}_wkb",
+                f"minx AS {p}_minx", f"miny AS {p}_miny", f"maxx AS {p}_maxx",
+                f"maxy AS {p}_maxy", f"radius AS {p}_radius",
+            )
+            .selectExpr("*", f"explode(sequence(floor({p}_minx / {css}), floor({p}_maxx / {css}))) AS __cx")
+            .selectExpr("*", f"explode(sequence(floor({p}_miny / {css}), floor({p}_maxy / {css}))) AS __cy")
+        )
+
     if exprable_kinds:
         # Expression-only pairs (box/circle): the whole candidate join +
-        # exact refine is ONE spark.sql parse over two temp views (r15,
-        # guide §5-driver — the Column-tree construction of this branch
-        # cost ~0.3 s of py4j round trips per action; the SQL reproduces
-        # the identical expressions).  No local round-robin spread here:
-        # the refine is a codegen filter, and the two spread exchanges
-        # (each with the retry-safety pre-sort, guide §2.5) cost more
-        # than the single-task evaluation saves (r14 A/B on
-        # ag_fractions).
-        values.createOrReplaceTempView("__gjs_values")
-        by.createOrReplaceTempView("__gjs_by")
-        css = f"{cs!r}D"
-
-        def cells_sql(view: str, p: str) -> str:
-            return (
-                f"SELECT *, explode(sequence(floor({p}_miny / {css}), floor({p}_maxy / {css}))) AS __cy\n"
-                f"  FROM (SELECT *, explode(sequence(floor({p}_minx / {css}), floor({p}_maxx / {css}))) AS __cx\n"
-                f"        FROM (SELECT shape_id AS {p}_id, kind AS {p}_kind, wkb AS {p}_wkb,\n"
-                f"                     minx AS {p}_minx, miny AS {p}_miny, maxx AS {p}_maxx,\n"
-                f"                     maxy AS {p}_maxy, radius AS {p}_radius FROM {view}))"
-            )
+        # exact refine is ONE spark.sql parse over the two cell covers
+        # (r15, guide §5-driver — the Column-tree construction of this
+        # branch cost ~0.3 s of py4j round trips per action; the SQL
+        # reproduces the identical expressions).  The covers, not the
+        # caller's frames, are what spark.sql binds: it drops each bound
+        # view after analysis, and dropping a view uncaches a cached
+        # plan it matches — a bare frame, or its all-column rename,
+        # would evict a caller's persisted input.  No local round-robin
+        # spread here: the refine is a codegen filter, and the two
+        # spread exchanges (each with the retry-safety pre-sort, guide
+        # §2.5) cost more than the single-task evaluation saves (r14
+        # A/B on ag_fractions).
 
         # circle centers (for kind='point' rows bbox is center±radius)
         vcx = "((v_minx + v_maxx) / 2)"
@@ -581,11 +581,13 @@ def grid_join_shapes_shapes(
             f"""
 SELECT v_id, v_kind, v_wkb, v_minx, v_miny, v_maxx, v_maxy, v_radius,
        b_id, b_kind, b_wkb, b_minx, b_miny, b_maxx, b_maxy, b_radius
-FROM ({cells_sql("__gjs_values", "v")}) v
-JOIN ({cells_sql("__gjs_by", "b")}) b USING (__cx, __cy)
+FROM {{v}} v
+JOIN {{b}} b USING (__cx, __cy)
 WHERE (v_maxx >= b_minx) AND (v_minx <= b_maxx) AND (v_maxy >= b_miny) AND (v_miny <= b_maxy)
   AND ((floor(greatest(v_minx, b_minx) / {css}) = __cx) AND (floor(greatest(v_miny, b_miny) / {css}) = __cy))
-  AND ({hit})"""
+  AND ({hit})""",
+            v=cells(values, "v"),
+            b=cells(by, "b"),
         )
 
     if session.single_host(spark):
@@ -595,22 +597,6 @@ WHERE (v_maxx >= b_minx) AND (v_minx <= b_maxx) AND (v_maxy >= b_miny) AND (v_mi
         par = spark.sparkContext.defaultParallelism
         values = values.repartition(par)
         by = by.repartition(par)
-
-    def cells(df: DataFrame, prefix: str) -> DataFrame:
-        return (
-            df.select(
-                F.col("shape_id").alias(f"{prefix}_id"),
-                F.col("kind").alias(f"{prefix}_kind"),
-                F.col("wkb").alias(f"{prefix}_wkb"),
-                F.col("minx").alias(f"{prefix}_minx"),
-                F.col("miny").alias(f"{prefix}_miny"),
-                F.col("maxx").alias(f"{prefix}_maxx"),
-                F.col("maxy").alias(f"{prefix}_maxy"),
-                F.col("radius").alias(f"{prefix}_radius"),
-            )
-            .withColumn("__cx", F.explode(F.sequence(F.floor(F.col(f"{prefix}_minx") / cs), F.floor(F.col(f"{prefix}_maxx") / cs))))
-            .withColumn("__cy", F.explode(F.sequence(F.floor(F.col(f"{prefix}_miny") / cs), F.floor(F.col(f"{prefix}_maxy") / cs))))
-        )
 
     v = cells(values, "v")
     b = cells(by, "b")

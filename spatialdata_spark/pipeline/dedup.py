@@ -28,7 +28,6 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from spatialdata_spark import session
-from spatialdata_spark.session import construction_locked
 
 _MERSENNE = (1 << 61) - 1
 
@@ -278,7 +277,6 @@ def minhash_dedup(
     return docs.join(drop, id_col, "left_anti")
 
 
-@construction_locked
 def ngram_jaccard_join(
     docs: DataFrame,
     text_col: str = "text",
@@ -318,8 +316,14 @@ def ngram_jaccard_join(
     # exact same expressions (split/filter tokenizer, sequence+transform
     # shingler with the chr(30) separator, CASE fallback, double-cast
     # Jaccard), so the physical plan and every result bit are unchanged.
+    # The parses bind their inputs as arguments, and spark.sql drops
+    # each bound view after analysis, uncaching any cached plan it
+    # matches: neither the caller's docs nor the persisted shingle
+    # table is bound as it is, only projections computed from them.
     sep = "\x1e"
-    docs.createOrReplaceTempView("__ngj_docs")
+    words = docs.selectExpr(
+        f"`{id_col}` AS _id", f"filter(split(`{text_col}`, '\\\\s+'), x -> x != '') AS _w"
+    )
     grams = ", ".join(f"element_at(_w, i + {j + 1})" for j in range(n))
     # materialization barrier: the interpreted HOF shingle expression is
     # consumed by four branches (a, b, and both size lookups); without
@@ -332,18 +336,17 @@ SELECT _id,
             THEN array_distinct(transform(sequence(0, size(_w) - {n}),
                                           i -> concat_ws('{sep}', {grams})))
             ELSE CAST(array() AS array<string>) END AS _sh
-FROM (SELECT `{id_col}` AS _id, filter(split(`{text_col}`, '\\\\s+'), x -> x != '') AS _w
-      FROM __ngj_docs)"""
+FROM {{words}}""",
+        words=words,
     ).persist()
-    doc_sh.createOrReplaceTempView("__ngj_sh")
     if max_shingle_freq is not None:
         exploded_cte = f"""
-  SELECT e._id, e.g FROM (SELECT _id, explode(_sh) AS g FROM __ngj_sh) e
-  LEFT SEMI JOIN (SELECT g FROM (SELECT _id, explode(_sh) AS g FROM __ngj_sh)
+  SELECT e._id, e.g FROM {{shingles}} e
+  LEFT SEMI JOIN (SELECT g FROM {{shingles}}
                   GROUP BY g HAVING COUNT(1) <= {int(max_shingle_freq)}) k
   ON e.g = k.g"""
     else:
-        exploded_cte = "SELECT _id, explode(_sh) AS g FROM __ngj_sh"
+        exploded_cte = "SELECT * FROM {shingles}"
     return spark.sql(
         f"""
 WITH exploded AS ({exploded_cte}),
@@ -353,7 +356,7 @@ inter AS (
   WHERE a._id < b._id
   GROUP BY a._id, b._id
 ),
-sizes AS (SELECT _id, size(_sh) AS n_sh FROM __ngj_sh)
+sizes AS (SELECT * FROM {{sizes}})
 SELECT id_a, id_b, jaccard
 FROM (
   SELECT inter.id_a, inter.id_b,
@@ -362,7 +365,9 @@ FROM (
   FROM inter JOIN sizes sa ON inter.id_a = sa._id
              JOIN sizes sb ON inter.id_b = sb._id
 )
-WHERE jaccard >= {threshold!r}D"""
+WHERE jaccard >= {threshold!r}D""",
+        shingles=doc_sh.selectExpr("_id", "explode(_sh) AS g"),
+        sizes=doc_sh.selectExpr("_id", "size(_sh) AS n_sh"),
     )
 
 
@@ -635,7 +640,6 @@ def _minhash_sig_udf(num_hashes: int, shingle_k: int, seed: int):
     return _sig
 
 
-@construction_locked
 def minhash_band_candidates(
     docs: DataFrame,
     text_col: str = "text",
@@ -678,9 +682,14 @@ def minhash_band_candidates(
         f"slice(sig, {i * rows_per_band + 1}, {rows_per_band})"
         for i in range(num_hashes // rows_per_band)
     )
-    minh.createOrReplaceTempView("__mh_minh")
-    bands = spark.sql(
-        f"SELECT {iq}, t.band, t.sig FROM __mh_minh "
+    # The parses bind the signature table, which computes a column and
+    # so matches no cache entry; spark.sql drops each bound view after
+    # analysis, uncaching any cached plan it matches, so the persisted
+    # band table is never bound itself: the self-join re-derives both
+    # sides from the same text, and the cache manager substitutes the
+    # persisted copy.
+    bands_sql = (
+        f"SELECT {iq}, t.band, t.sig FROM {{minh}} "
         f"LATERAL VIEW posexplode(array({slices})) t AS band, sig"
     )
     # persist the band table: the self-join consumes it twice (build +
@@ -689,14 +698,14 @@ def minhash_band_candidates(
     # cached rows are (id, band, sig) triples, ~200 bytes/doc, far below
     # the text they index, and MEMORY_AND_DISK spills instead of OOMing
     # on a cluster.  Spark's LRU eviction reclaims it after the query.
-    bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
-    bands.createOrReplaceTempView("__mh_bands")
+    spark.sql(bands_sql, minh=minh).persist(StorageLevel.MEMORY_AND_DISK)
     bhint = "/*+ BROADCAST(r) */ " if local else ""
     return spark.sql(
         f"SELECT {bhint}l.{iq} AS id_a, r.{iq} AS id_b, COUNT(1) AS n_bands\n"
-        f"FROM __mh_bands l JOIN __mh_bands r\n"
+        f"FROM ({bands_sql}) l JOIN ({bands_sql}) r\n"
         f"  ON l.band = r.band AND l.sig = r.sig AND l.{iq} < r.{iq}\n"
-        f"GROUP BY l.{iq}, r.{iq}"
+        f"GROUP BY l.{iq}, r.{iq}",
+        minh=minh,
     )
 
 

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spatialdata_spark import session
-from spatialdata_spark.session import construction_locked
 
 
 def _dot_expr(a, b):
@@ -50,7 +49,6 @@ def cosine_topk_query(
     )
 
 
-@construction_locked
 def cosine_topk_subquery(
     embeddings: DataFrame,
     query: DataFrame,
@@ -69,26 +67,28 @@ def cosine_topk_subquery(
     cosine values match the literal-array path bit-for-bit; only the
     query-norm summation order differs from the old numpy norm (one
     ulp at most — callers ranking on cosine should have margins far
-    above that, as the brute-force corpus here does)."""
-    spark = embeddings.sparkSession
-    embeddings.createOrReplaceTempView("__ctq_emb")
-    query.createOrReplaceTempView("__ctq_query")
-    return spark.sql(
+    above that, as the brute-force corpus here does).
+
+    The parse binds the corpus cross-joined with the query vector, not
+    the caller's frames: spark.sql drops each bound view after
+    analysis, and dropping a view uncaches any cached plan it matches,
+    so a bare ``embeddings`` or ``query`` would evict the caller's
+    persisted copy."""
+    q = query.selectExpr(
+        f"CAST(`{vec_col}` AS array<double>) AS __qv",
+        f"sqrt(aggregate(transform(CAST(`{vec_col}` AS array<double>), x -> x * x), 0.0D, (acc, v) -> acc + v)) AS __qn",
+    )
+    return embeddings.sparkSession.sql(
         f"""
-WITH q AS (
-  SELECT CAST(`{vec_col}` AS array<double>) AS __qv,
-         sqrt(aggregate(transform(CAST(`{vec_col}` AS array<double>), x -> x * x),
-                        0.0D, (acc, v) -> acc + v)) AS __qn
-  FROM __ctq_query
-)
-SELECT /*+ BROADCAST(q) */ `{id_col}`,
+SELECT `{id_col}`,
        aggregate(zip_with(CAST(`{vec_col}` AS array<double>), __qv, (x, y) -> x * y),
                  0.0D, (acc, v) -> acc + v)
        / (sqrt(aggregate(transform(CAST(`{vec_col}` AS array<double>), x -> x * x),
                0.0D, (acc, v) -> acc + v)) * __qn) AS cosine
-FROM __ctq_emb CROSS JOIN q
+FROM {{pairs}}
 ORDER BY cosine DESC, `{id_col}`
-LIMIT {int(k)}"""
+LIMIT {int(k)}""",
+        pairs=embeddings.crossJoin(q.hint("broadcast")),
     )
 
 

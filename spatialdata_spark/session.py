@@ -10,35 +10,10 @@ the DuckDB oracle (duckdb timestamps are UTC-naive).
 
 from __future__ import annotations
 
-import functools
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# Serializes plan CONSTRUCTION for operators that register fixed-name
-# session-global temp views and resolve them in the same call
-# (circle-aggregation, grid shapes-join, ngram/minhash dedup, knn
-# subquery): two threads interleaving registration and spark.sql()
-# analysis could silently resolve one thread's view names against the
-# other's data.  Once built, a DataFrame's analyzed plan is immutable
-# and safe to EXECUTE from any thread — only construction serializes.
-# Reentrant: composed operators (dedup_keep_best -> band candidates)
-# nest acquisitions.
-PLAN_CONSTRUCTION_LOCK = threading.RLock()
-
-
-def construction_locked(fn):
-    """Decorator: hold PLAN_CONSTRUCTION_LOCK for the duration of an
-    operator's plan construction (~100-300 ms driver-side)."""
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        with PLAN_CONSTRUCTION_LOCK:
-            return fn(*args, **kwargs)
-
-    return wrapper
 
 
 def single_host(spark: SparkSession) -> bool:

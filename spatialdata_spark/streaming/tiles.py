@@ -16,6 +16,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from spatialdata_spark.operators.raster import TILE_SCHEMA, RasterMeta
 
@@ -95,23 +96,26 @@ def streaming_tile_ingest(
     return tiles, meta
 
 
+# module-level: a pandas_udf created inside the operator re-pickles and
+# re-registers the function on every plan construction
+@F.pandas_udf(T.DoubleType())
+def _tile_sum(t):
+    import pandas as pd
+
+    return pd.Series([float(np.frombuffer(b, dtype=np.float64).sum()) for b in t])
+
+
+@F.pandas_udf(T.DoubleType())
+def _tile_max(t):
+    import pandas as pd
+
+    return pd.Series([float(np.frombuffer(b, dtype=np.float64).max()) for b in t])
+
+
 def streaming_tile_stats(tiles: DataFrame) -> DataFrame:
     """Running per-channel pixel statistics over the arriving tiles —
     the live-acquisition QC readout (sum / max / n tiles), a plain
     streaming aggregation with map-side partials."""
-
-    @F.pandas_udf("double")
-    def _tile_sum(t):
-        import pandas as pd
-
-        return pd.Series([float(np.frombuffer(b, dtype=np.float64).sum()) for b in t])
-
-    @F.pandas_udf("double")
-    def _tile_max(t):
-        import pandas as pd
-
-        return pd.Series([float(np.frombuffer(b, dtype=np.float64).max()) for b in t])
-
     per_tile = tiles.select("c", _tile_sum("tile").alias("s"), _tile_max("tile").alias("m"))
     return per_tile.groupBy("c").agg(
         F.sum("s").alias("pixel_sum"), F.max("m").alias("pixel_max"), F.count(F.lit(1)).alias("n_tiles")

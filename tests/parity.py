@@ -113,11 +113,9 @@ def run_parity(sf_dir: str, only: list[str] | None = None, float_tol: float = 0.
     from pyspark.sql.types import DecimalType
 
     # PIPELINED (r15 suite-runtime fix): DataFrames are CONSTRUCTED on
-    # this thread only — operators register fixed-name temp views and
-    # resolve them in the same call, so two constructions racing from
-    # different threads could cross-wire views; once built, a
-    # DataFrame's analyzed plan is immutable and safe to execute from
-    # any thread.  Each built plan is handed to a worker immediately so
+    # this thread in registry order; once built, a DataFrame's analyzed
+    # plan is immutable and safe to execute from any thread.  Each
+    # built plan is handed to a worker immediately so
     # execution (Spark action + DuckDB oracle + compare) overlaps the
     # remaining construction.  Each worker gets its own DuckDB cursor
     # over the shared connection (the documented thread-safe pattern).

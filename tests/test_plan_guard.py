@@ -327,9 +327,8 @@ def _live_shuffle_joins(df) -> int:
 
 @pytest.fixture(scope="module")
 def plans(spark):
-    # construct serially (operators resolve fixed-name temp views at
-    # build time), then materialize physical plans from a thread pool —
-    # planning is JVM-side py4j chatter that overlaps across threads
+    # construct serially, then materialize physical plans from a thread
+    # pool — planning is JVM-side py4j chatter that overlaps across threads
     # (r15 suite-runtime fix: ~93 s -> ~35 s fixture setup)
     from concurrent.futures import ThreadPoolExecutor
 

@@ -51,8 +51,9 @@ def test_registry_runtime_rescans(spark):
     even cross-family queries can silently satisfy a scan from a
     sibling's persist (ag_zonal_image's persisted aggregate is exactly
     the subtree under _img_long, which every rt_*/rv_* query compiles).
-    Scheme: construct each query serially (operators resolve fixed-name
-    temp views at build time) and watch CacheManager —
+    Scheme: construct each query serially (so every persist a
+    construction registers is attributed to that query) and watch
+    CacheManager —
 
     * a construction that REGISTERS a persist runs solo immediately and
       the cache is cleared, exactly the old per-query semantics;
