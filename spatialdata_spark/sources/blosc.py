@@ -1,4 +1,5 @@
-"""Pure-Python Blosc v1 chunk codec (decode + minimal encode).
+"""Blosc v1 chunk codec: the container in numpy, the streams in
+pyarrow's bundled codecs.
 
 The reference writes zarr rasters blosc-compressed by default
 (reference: src/spatialdata/_io/io_raster.py:350-384 —
@@ -6,7 +7,8 @@ The reference writes zarr rasters blosc-compressed by default
 so every real scverse-produced store on disk needs this codec to read.
 The container has no ``blosc``/``numcodecs`` C libraries; this module
 implements the *public Blosc chunk wire format* (c-blosc 1.x, also the
-payload format of the zarr v3 blosc codec) in stdlib + numpy:
+payload format of the zarr v3 blosc codec) and hands each inner stream
+to pyarrow's bundled codecs (libzstd, liblz4, snappy):
 
 Chunk layout (little-endian)::
 
@@ -24,11 +26,9 @@ Chunk layout (little-endian)::
     a stream stored verbatim has csize == its uncompressed size.
 
 Compressor codes: 0 blosclz, 1 lz4/lz4hc, 2 snappy, 3 zlib, 4 zstd.
-Supported here: **lz4** (pure-Python LZ4 block codec below), **zlib**
-(stdlib), **zstd** (pure-Python RFC 8878 decoder in
-``sources/zstd.py``, pinned against pyarrow's real libzstd), **snappy**
-(raw-block decoder below, pinned against pyarrow's real snappy) and
-the raw/memcpy path.  blosclz raises a clear error: its wire format
+Supported here: **lz4**, **zstd** and **snappy** (pyarrow's bundled
+codecs, see ``native_decompress``), **zlib** (stdlib) and the
+raw/memcpy path.  blosclz raises a clear error: its wire format
 changed across c-blosc releases and no reference implementation exists
 in this container to verify a reimplementation against.  Byte-shuffle
 is reversed with a numpy transpose; bit-shuffle raises for the same
@@ -47,6 +47,7 @@ import struct
 import zlib
 
 import numpy as np
+import pyarrow as pa
 
 _BLOSCLZ, _LZ4, _SNAPPY, _ZLIB, _ZSTD = 0, 1, 2, 3, 4
 _CODEC_NAMES = {_BLOSCLZ: "blosclz", _LZ4: "lz4", _SNAPPY: "snappy", _ZLIB: "zlib", _ZSTD: "zstd"}
@@ -58,175 +59,61 @@ FLAG_DONT_SPLIT = 0x10
 
 
 # ---------------------------------------------------------------------------
-# LZ4 block format (public spec: lz4_Block_format.md)
+# LZ4 / snappy / zstd streams: pyarrow's bundled libraries
 # ---------------------------------------------------------------------------
 
-
-def lz4_decompress(src: bytes, dst_size: int) -> bytes:
-    """Decode one LZ4 *block* (token / literals / offset / match runs)."""
-    src = bytes(src)
-    n = len(src)
-    dst = bytearray()
-    i = 0
-    while i < n:
-        token = src[i]
-        i += 1
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                b = src[i]
-                i += 1
-                lit += b
-                if b != 255:
-                    break
-        if lit:
-            dst += src[i : i + lit]
-            i += lit
-        if i >= n:
-            break  # last sequence carries no match
-        offset = src[i] | (src[i + 1] << 8)
-        i += 2
-        if offset == 0:
-            raise ValueError("corrupt LZ4 block: zero match offset")
-        mlen = token & 0xF
-        if mlen == 15:
-            while True:
-                b = src[i]
-                i += 1
-                mlen += b
-                if b != 255:
-                    break
-        mlen += 4
-        start = len(dst) - offset
-        if start < 0:
-            raise ValueError("corrupt LZ4 block: match before buffer start")
-        if offset >= mlen:
-            dst += dst[start : start + mlen]
-        else:
-            # overlapping match: the copy source grows as we write
-            for k in range(mlen):
-                dst.append(dst[start + k])
-    if len(dst) != dst_size:
-        raise ValueError(f"LZ4 block decoded to {len(dst)} bytes, expected {dst_size}")
-    return bytes(dst)
+_ARROW_CODECS = {"lz4": "lz4_raw", "snappy": "snappy", "zstd": "zstd"}
+_ZSTD_MAGIC = 0xFD2FB528
+_SKIPPABLE_MAGIC = 0x184D2A50  # low nibble free: 0x184D2A50-0x184D2A5F
 
 
-def lz4_compress(src: bytes) -> bytes:
-    """Minimal valid LZ4 block: one literal-only sequence.
-
-    Produces spec-conformant output any LZ4 decoder accepts (a block may
-    consist of a single final sequence with no match).  No compression is
-    attempted — this exists so blosc chunks we *write* are readable by
-    real blosc/numcodecs, and to build test fixtures for the decoder.
-    """
-    n = len(src)
-    out = bytearray()
-    if n < 15:
-        out.append(n << 4)
-    else:
-        out.append(0xF0)
-        rest = n - 15
-        while rest >= 255:
-            out.append(255)
-            rest -= 255
-        out.append(rest)
-    out += src
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Snappy raw block format (public spec: snappy format description)
-# ---------------------------------------------------------------------------
-
-
-def snappy_decompress(src: bytes) -> bytes:
-    """Decode one raw Snappy block (the format c-blosc's snappy codec
-    stores — not the framed variant): a varint uncompressed length, then
-    literal / 1-2-4-byte-offset copy elements.  Validated against
-    pyarrow's bundled real snappy in tests."""
-    src = bytes(src)
-    n = len(src)
-    # varint preamble
-    dst_size = 0
-    shift = 0
-    i = 0
-    while True:
-        if i >= n:
-            raise ValueError("corrupt snappy block: truncated length varint")
-        b = src[i]
-        i += 1
-        dst_size |= (b & 0x7F) << shift
+def _snappy_length(payload: bytes) -> int:
+    """The uncompressed length a raw snappy block declares in its varint
+    preamble."""
+    n = shift = 0
+    for b in payload[:5]:
+        n |= (b & 0x7F) << shift
         shift += 7
         if not b & 0x80:
-            break
-    dst = bytearray()
-    while i < n:
-        tag = src[i]
-        i += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            length = (tag >> 2) + 1
-            if length > 60:
-                nbytes = length - 60
-                length = int.from_bytes(src[i : i + nbytes], "little") + 1
-                i += nbytes
-            dst += src[i : i + length]
-            i += length
-            continue
-        if kind == 1:
-            length = ((tag >> 2) & 7) + 4
-            offset = ((tag >> 5) << 8) | src[i]
-            i += 1
-        elif kind == 2:
-            length = (tag >> 2) + 1
-            offset = src[i] | (src[i + 1] << 8)
-            i += 2
-        else:
-            length = (tag >> 2) + 1
-            offset = int.from_bytes(src[i : i + 4], "little")
-            i += 4
-        start = len(dst) - offset
-        if offset == 0 or start < 0:
-            raise ValueError("corrupt snappy block: bad copy offset")
-        if offset >= length:
-            dst += dst[start : start + length]
-        else:  # overlapping copy: source grows as we write
-            for k in range(length):
-                dst.append(dst[start + k])
-    if len(dst) != dst_size:
-        raise ValueError(f"snappy block decoded to {len(dst)} bytes, expected {dst_size}")
-    return bytes(dst)
+            return n
+    raise ValueError("corrupt snappy block: bad length varint")
 
 
-def snappy_compress(src: bytes) -> bytes:
-    """Minimal valid Snappy block: the length varint + literal elements.
+def native_decompress(cname: str, payload: bytes, size: int) -> bytes:
+    """Decode one raw LZ4 block, raw snappy block or zstd frame sequence
+    with pyarrow's bundled library to exactly ``size`` bytes.
 
-    Spec-conformant output any snappy decoder accepts (pinned against
-    pyarrow's real snappy in tests); exists for writing interoperable
-    chunks and building decoder fixtures."""
-    src = bytes(src)
-    n = len(src)
-    out = bytearray()
-    v = n
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        out.append(b | (0x80 if v else 0))
-        if not v:
-            break
-    pos = 0
-    while pos < n:
-        length = min(n - pos, 1 << 16)
-        if length <= 60:
-            out.append((length - 1) << 2)
-        else:
-            enc = length - 1
-            nbytes = (enc.bit_length() + 7) // 8
-            out.append((59 + nbytes) << 2)
-            out += enc.to_bytes(nbytes, "little")
-        out += src[pos : pos + length]
-        pos += length
-    return bytes(out)
+    Asked for more bytes than an LZ4 or snappy stream holds, pyarrow pads
+    the output with uninitialized memory, so the size is checked first:
+    snappy's declared length must equal it, and an LZ4 block must
+    overflow a ``size - 1`` buffer (c-blosc compares
+    ``LZ4_decompress_safe``'s count the same way).  libzstd checks the
+    size itself.  Every decode failure raises ``ValueError``."""
+    if cname == "zstd":
+        # libzstd reports a foreign first frame only as a size error
+        magic = int.from_bytes(payload[:4], "little")
+        if magic != _ZSTD_MAGIC and magic & 0xFFFFFFF0 != _SKIPPABLE_MAGIC:
+            raise ValueError(f"not a zstd frame: bad magic {payload[:4].hex()}")
+    if cname == "snappy" and (declared := _snappy_length(payload)) != size:
+        raise ValueError(f"snappy block declares {declared} bytes, expected {size}")
+    codec = pa.Codec(_ARROW_CODECS[cname])
+    try:
+        if cname == "lz4" and size:
+            try:
+                codec.decompress(payload, decompressed_size=size - 1)
+            except OSError:
+                pass  # the block does not fit in size - 1 bytes
+            else:
+                raise ValueError(f"LZ4 block decodes to fewer than {size} bytes")
+        return codec.decompress(payload, decompressed_size=size, asbytes=True)
+    except (OSError, pa.ArrowInvalid) as e:
+        raise ValueError(f"corrupt {cname} stream: {e}") from None
+
+
+def native_compress(cname: str, buf: bytes) -> bytes:
+    """Encode ``buf`` as one raw LZ4 block, raw snappy block or zstd frame
+    with pyarrow's bundled library at its default level."""
+    return pa.Codec(_ARROW_CODECS[cname]).compress(buf, asbytes=True)
 
 
 # ---------------------------------------------------------------------------
@@ -264,25 +151,13 @@ def _decode_stream(codec: int, payload: bytes, raw_size: int) -> bytes:
     if len(payload) == raw_size:
         # stored verbatim (compressor gave up on this stream)
         return payload
-    if codec == _LZ4:
-        return lz4_decompress(payload, raw_size)
     if codec == _ZLIB:
         out = zlib.decompress(payload)
         if len(out) != raw_size:
             raise ValueError("zlib stream decoded to unexpected size")
         return out
-    if codec == _ZSTD:
-        from spatialdata_spark.sources.zstd import zstd_decompress
-
-        out = zstd_decompress(payload)
-        if len(out) != raw_size:
-            raise ValueError("zstd stream decoded to unexpected size")
-        return out
-    if codec == _SNAPPY:
-        out = snappy_decompress(payload)
-        if len(out) != raw_size:
-            raise ValueError("snappy stream decoded to unexpected size")
-        return out
+    if codec in (_LZ4, _SNAPPY, _ZSTD):
+        return native_decompress(_CODEC_NAMES[codec], payload, raw_size)
     raise ValueError(
         f"unsupported blosc inner codec {_CODEC_NAMES.get(codec, codec)!r}: "
         "lz4/zlib/zstd/snappy/raw streams decode in this environment; "
@@ -365,7 +240,7 @@ def _walk_streams(chunk: bytes, start: int, end: int, nstreams: int, neblock: in
 
 
 # ---------------------------------------------------------------------------
-# blosc chunk encode (valid format; trivial lz4 literal streams)
+# blosc chunk encode
 # ---------------------------------------------------------------------------
 
 
@@ -378,11 +253,10 @@ def blosc_compress(
 ) -> bytes:
     """Encode raw bytes as a spec-conformant blosc v1 chunk.
 
-    ``shuffle``: 0 none, 1 byte-shuffle (numcodecs constants).  lz4 /
-    zstd / snappy streams are literal-only (zlib really deflates), so
-    output may be bigger than input — the point is *format* interop
-    (real blosc reads it back), used for fixtures and for writing
-    stores foreign readers expect.
+    ``shuffle``: 0 none, 1 byte-shuffle (numcodecs constants).  Streams
+    are compressed with pyarrow's bundled lz4/zstd/snappy (zlib from the
+    stdlib); a stream that does not shrink is stored verbatim, as
+    c-blosc does.
     """
     codecs = {"lz4": _LZ4, "zlib": _ZLIB, "zstd": _ZSTD, "snappy": _SNAPPY}
     if cname not in codecs:
@@ -417,16 +291,7 @@ def blosc_compress(
         enc = bytearray()
         for s in range(nstreams):
             stream = block[s * per : (s + 1) * per]
-            if codec == _LZ4:
-                payload = lz4_compress(stream)
-            elif codec == _ZLIB:
-                payload = zlib.compress(stream)
-            elif codec == _ZSTD:
-                from spatialdata_spark.sources.zstd import zstd_compress
-
-                payload = zstd_compress(stream)
-            else:
-                payload = snappy_compress(stream)
+            payload = zlib.compress(stream) if codec == _ZLIB else native_compress(cname, stream)
             if len(payload) >= per and per > 0:
                 payload = stream  # store verbatim: csize == raw size
             enc += struct.pack("<I", len(payload)) + payload

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from spatialdata_spark.models.schemas import get_model
 
@@ -78,6 +79,46 @@ def read_events_stream(spark: SparkSession, path: str, schema) -> DataFrame:
     return spark.readStream.schema(schema).parquet(path)
 
 
+_META_SCHEMA = T.StructType(
+    [
+        T.StructField("kind", T.StringType()),
+        T.StructField("minx", T.DoubleType()),
+        T.StructField("miny", T.DoubleType()),
+        T.StructField("maxx", T.DoubleType()),
+        T.StructField("maxy", T.DoubleType()),
+    ]
+)
+
+
+# module-level: a pandas_udf created inside the reader re-pickles and
+# re-registers the function on every call
+@F.pandas_udf(_META_SCHEMA)
+def _meta(wkb_s, radius_s):
+    import numpy as np
+    import pandas as pd
+
+    from spatialdata_spark.geometry import wkb as W
+
+    rows = []
+    for buf, radius in zip(wkb_s, radius_s):
+        kind, geom = W.decode(bytes(buf))
+        if kind == "point":
+            r = float(radius or 0.0)
+            rows.append(("point", geom[0] - r, geom[1] - r, geom[0] + r, geom[1] + r))
+        else:
+            pts = geom[0] if kind == "polygon" else np.vstack([rings[0] for rings in geom])
+            rows.append(
+                (
+                    kind,
+                    float(pts[:, 0].min()),
+                    float(pts[:, 1].min()),
+                    float(pts[:, 0].max()),
+                    float(pts[:, 1].max()),
+                )
+            )
+    return pd.DataFrame(rows, columns=["kind", "minx", "miny", "maxx", "maxy"])
+
+
 def shapes_from_geoparquet(df: DataFrame, id_col: str | None = None) -> DataFrame:
     """Normalize a GeoParquet-style shapes table — a ``geometry`` WKB
     column plus optional ``radius`` — into this repo's denormalized
@@ -90,10 +131,6 @@ def shapes_from_geoparquet(df: DataFrame, id_col: str | None = None) -> DataFram
     Arrow-batched pass; everything downstream (grid joins, spatial
     queries) then works unchanged.
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     geom_col = "geometry" if "geometry" in df.columns else "wkb"
     if id_col is None:
         for cand in ("shape_id", "__index_level_0__", "index"):
@@ -105,43 +142,6 @@ def shapes_from_geoparquet(df: DataFrame, id_col: str | None = None) -> DataFram
         # re-reads of an unsorted source — persist an index upstream)
         df = df.withColumn("shape_id", F.monotonically_increasing_id())
         id_col = "shape_id"
-
-    meta_schema = T.StructType(
-        [
-            T.StructField("kind", T.StringType()),
-            T.StructField("minx", T.DoubleType()),
-            T.StructField("miny", T.DoubleType()),
-            T.StructField("maxx", T.DoubleType()),
-            T.StructField("maxy", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(meta_schema)
-    def _meta(wkb_s, radius_s):
-        from spatialdata_spark.geometry import wkb as W
-
-        rows = []
-        for buf, radius in zip(wkb_s, radius_s):
-            kind, geom = W.decode(bytes(buf))
-            if kind == "point":
-                r = float(radius or 0.0)
-                rows.append(("point", geom[0] - r, geom[1] - r, geom[0] + r, geom[1] + r))
-            else:
-                pts = (
-                    geom[0]
-                    if kind == "polygon"
-                    else __import__("numpy").vstack([rings[0] for rings in geom])
-                )
-                rows.append(
-                    (
-                        kind,
-                        float(pts[:, 0].min()),
-                        float(pts[:, 1].min()),
-                        float(pts[:, 0].max()),
-                        float(pts[:, 1].max()),
-                    )
-                )
-        return pd.DataFrame(rows, columns=["kind", "minx", "miny", "maxx", "maxy"])
 
     radius = F.col("radius") if "radius" in df.columns else F.lit(None).cast("double")
     out = df.withColumn("__m", _meta(F.col(geom_col), radius))

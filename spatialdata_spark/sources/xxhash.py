@@ -1,9 +1,9 @@
 """Pure-Python XXH64 (the public xxHash algorithm, Yann Collet's
 spec at github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md).
 
-Needed for zstd frame content checksums (RFC 8878 §3.1.1: the
-Content_Checksum is the low 32 bits of XXH64(content, seed=0)), which
-the decoder previously skipped.
+Needed to stamp a Content_Checksum on the zstd chunks the zarr writer
+emits (RFC 8878 §3.1.1: the low 32 bits of XXH64(content, seed=0)),
+since pyarrow's libzstd writes frames without one.
 
 Pinned in tests against the JVM reference implementation Spark itself
 ships — ``F.xxhash64`` on a binary column hashes the raw bytes with

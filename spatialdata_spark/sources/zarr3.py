@@ -12,8 +12,8 @@ implements the public Zarr v3 core spec surface the stores need:
   ``codecs`` chain (``bytes`` + optional ``gzip``/``blosc``).
 
 Chunk payload compression reuses the v2 module's codecs (stdlib zlib/
-gzip, pure-python blosc-lz4), so executors decode v2 and v3 chunks with
-the same code path.
+gzip; blosc and zstd through pyarrow's bundled codecs), so executors
+decode v2 and v3 chunks with the same code path.
 """
 
 from __future__ import annotations
@@ -90,7 +90,7 @@ def codec_of_chain(codecs: list[dict]) -> str | None:
         elif c["name"] == "gzip":
             return "gzip"
         elif c["name"] == "zstd":
-            # bare zstd frames: pure-Python RFC 8878 decoder
+            # bare zstd frames: pyarrow's bundled libzstd
             return "zstd"
         elif c["name"] == "blosc":
             return "blosc"

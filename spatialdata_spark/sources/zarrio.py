@@ -15,9 +15,10 @@ group dispatch, selection, on_bad_files) and ``_io/io_raster.py``
   rows — the Spark analog of dask's lazy per-chunk graph.  Writing
   reverses it: each executor encodes and writes its own tiles; the
   driver writes only JSON metadata.
-* **Codecs**: raw, zlib and gzip (stdlib).  Blosc — the zarr-python
-  default — needs the C blosc library; stores using it fail with a
-  clear error naming the missing codec rather than garbage data.
+* **Codecs**: raw, zlib, gzip and bz2 (stdlib); blosc — the
+  zarr-python default — and bare zstd through pyarrow's bundled codecs
+  (``sources/blosc.py``).  Any other compressor fails with a clear
+  error naming it rather than garbage data.
 * **Points / shapes / tables** live as parquet inside the store
   (matching the reference's V02+ formats: ``points.parquet`` /
   ``shapes.parquet``), readable by any Spark/DuckDB/pandas directly.
@@ -65,17 +66,23 @@ def _compress(codec: str | None, buf: bytes, typesize: int = 1) -> bytes:
 
         return blosc_compress(buf, typesize=typesize, cname="lz4", shuffle=1 if typesize > 1 else 0)
     if codec == "zstd":
-        # real compression: greedy-LZ + predefined-FSE frames any real
-        # zstd reads (sources/zstd.py, pinned against libzstd in tests);
-        # Content_Checksum on every written chunk — chunk corruption at
-        # rest surfaces as a decode error, not silent bad pixels
-        from spatialdata_spark.sources.zstd import zstd_compress
+        # one frame from pyarrow's bundled libzstd, which writes no
+        # Content_Checksum; stamp one on (descriptor bit 2, then the low
+        # 32 bits of XXH64(content, 0) after the last block) so chunk
+        # corruption at rest surfaces as a decode error, not silent bad
+        # pixels
+        from spatialdata_spark.sources.blosc import native_compress
+        from spatialdata_spark.sources.xxhash import xxh64
 
-        return zstd_compress(buf, checksum=True)
+        frame = bytearray(native_compress("zstd", buf))
+        frame[4] |= 0x04
+        return bytes(frame) + (xxh64(buf) & 0xFFFFFFFF).to_bytes(4, "little")
     raise ValueError(f"unsupported zarr codec {codec!r}")
 
 
-def _decompress(codec: str | None, buf: bytes) -> bytes:
+def _decompress(codec: str | None, buf: bytes, size: int) -> bytes:
+    """Decode one chunk; ``size`` is its raw byte count (chunk shape ×
+    itemsize — zarr pads edge chunks, so it is exact)."""
     if codec is None:
         return buf
     if codec == "zlib":
@@ -85,18 +92,17 @@ def _decompress(codec: str | None, buf: bytes) -> bytes:
     if codec == "bz2":
         return bz2.decompress(buf)
     if codec == "blosc":
-        # pure-Python blosc chunk decode (lz4/zlib/zstd/snappy inner
-        # streams) — the reference's default compressor
-        # (_io/io_raster.py:350-384)
+        # the reference's default compressor (_io/io_raster.py:350-384);
+        # the inner lz4/zstd/snappy streams go to pyarrow's bundled codecs
         from spatialdata_spark.sources.blosc import blosc_decompress
 
         return blosc_decompress(buf)
     if codec == "zstd":
-        # bare zstd frame (numcodecs.Zstd / zarr v3 zstd codec):
-        # pure-Python RFC 8878 decoder
-        from spatialdata_spark.sources.zstd import zstd_decompress
+        # bare zstd frames (numcodecs.Zstd / zarr v3 zstd codec) through
+        # pyarrow's bundled libzstd, which verifies every Content_Checksum
+        from spatialdata_spark.sources.blosc import native_decompress
 
-        return zstd_decompress(buf)
+        return native_decompress("zstd", buf, size)
     raise ValueError(
         f"unsupported zarr compressor {codec!r}: this store needs a codec "
         "library not present in this environment; re-write the store with "
@@ -339,7 +345,8 @@ def zarr_read_array(path: str) -> np.ndarray:
         raw = fetcher.get(keyfn(key))
         if raw is None:
             continue  # missing chunk = fill_value
-        block = np.frombuffer(_decompress(codec, raw), dtype=dtype).reshape(chunks)
+        raw = _decompress(codec, raw, int(np.prod(chunks)) * dtype.itemsize)
+        block = np.frombuffer(raw, dtype=dtype).reshape(chunks)
         sl = tuple(slice(k * c, min((k + 1) * c, s)) for k, c, s in zip(key, chunks, shape))
         out[sl] = block[tuple(slice(0, s.stop - s.start) for s in sl)]
     return out
@@ -636,7 +643,8 @@ def read_zarr_tiles(
             rows = {"scale": [], "c": [], "ty": [], "tx": [], "tile": []}
 
             def emit(c, ty, tx, payload):
-                a = np.frombuffer(_decompress(codec, payload), dtype=src_dtype).reshape(ts, ts)
+                payload = _decompress(codec, payload, ts * ts * src_dtype.itemsize)
+                a = np.frombuffer(payload, dtype=src_dtype).reshape(ts, ts)
                 rows["scale"].append(scale)
                 rows["c"].append(int(c))
                 rows["ty"].append(int(ty))
@@ -1232,7 +1240,8 @@ def read_zarr_tiles_3d(spark: SparkSession, path: str, scale: int = 0):
                 raw = fetcher.get(row.chunk)
                 if raw is None:
                     continue
-                a = np.frombuffer(_decompress(codec, raw), dtype=src_dtype).reshape(ts, ts)
+                raw = _decompress(codec, raw, ts * ts * src_dtype.itemsize)
+                a = np.frombuffer(raw, dtype=src_dtype).reshape(ts, ts)
                 rows["scale"].append(scale)
                 rows["c"].append(int(row.c))
                 rows["z"].append(int(row.z))

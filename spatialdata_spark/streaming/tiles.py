@@ -84,7 +84,8 @@ def streaming_tile_ingest(
                     c, t_y, t_x = nums
                 else:
                     continue
-                a = np.frombuffer(_decompress(codec, bytes(content)), dtype=dtype).reshape(ts, ts)
+                raw = _decompress(codec, bytes(content), ts * ts * dtype.itemsize)
+                a = np.frombuffer(raw, dtype=dtype).reshape(ts, ts)
                 rows["scale"].append(scale)
                 rows["c"].append(int(c))
                 rows["ty"].append(int(t_y))

@@ -2,10 +2,13 @@
 
 Run from the repo root: ``python tests/fixtures/make_zstd_fixture.py``.
 The ``.zst`` / ``.snappy`` payloads are produced by pyarrow's bundled
-*real* libzstd / snappy, then committed — so the pure-Python decoders
-in ``sources/zstd.py`` / ``sources/blosc.py`` are pinned against fixed
-reference-compressor bytes (a decoder bug can't silently co-evolve
-with an encoder we also wrote).
+*real* libzstd / snappy, then committed — so the chunk read paths
+(``sources/blosc.py``'s size, magic and error checks around pyarrow's
+codecs, and the blosc container walk) are pinned against fixed
+reference-compressor bytes.  Chunk 0.1.1 of ``zstd_store`` was
+committed when ``blosc_compress`` used a pure-Python zstd encoder; a
+re-run writes a libzstd stream there, so that chunk's bytes would
+change.
 
 Layout produced::
 
@@ -28,7 +31,6 @@ import numpy as np
 import pyarrow as pa
 
 from spatialdata_spark.sources import blosc as B
-from spatialdata_spark.sources.zstd import zstd_decompress
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 
@@ -94,13 +96,13 @@ def main() -> None:
     os.makedirs(fixdir)
     for name, (raw, level) in cases().items():
         comp = pa.Codec("zstd", compression_level=level).compress(raw, asbytes=True)
-        assert zstd_decompress(comp) == raw, name
+        assert B.native_decompress("zstd", comp, len(raw)) == raw, name
         with open(os.path.join(fixdir, f"{name}.raw"), "wb") as f:
             f.write(raw)
         with open(os.path.join(fixdir, f"{name}.zst"), "wb") as f:
             f.write(comp)
         snap = pa.Codec("snappy").compress(raw, asbytes=True)
-        assert B.snappy_decompress(snap) == raw, name
+        assert B.native_decompress("snappy", snap, len(raw)) == raw, name
         with open(os.path.join(fixdir, f"{name}.snappy"), "wb") as f:
             f.write(snap)
 

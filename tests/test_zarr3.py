@@ -43,7 +43,7 @@ def test_v3_chunk_keys_are_c_prefixed(tmp_path):
 
 
 def test_v3_meta_parse_rejects_unknown():
-    # zstd is now a supported standalone v3 codec (sources/zstd.py)
+    # zstd is a supported standalone v3 codec (pyarrow's bundled libzstd)
     assert codec_of_chain([{"name": "bytes"}, {"name": "zstd", "configuration": {}}]) == "zstd"
     with pytest.raises(ValueError, match="lzma"):
         codec_of_chain([{"name": "bytes"}, {"name": "lzma", "configuration": {}}])

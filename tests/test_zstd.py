@@ -1,11 +1,12 @@
-"""Pure-Python zstd / snappy decoder tests.
+"""zstd / snappy chunk decode and zstd chunk write tests.
 
-Two layers of pinning: (1) committed fixtures produced by pyarrow's
-bundled *real* libzstd / snappy (``fixtures/make_zstd_fixture.py``) so
-the decoders are checked against fixed reference-compressor bytes with
-no compressor in the loop at test time; (2) live pyarrow round-trips
-across compression levels and data shapes, so coverage isn't limited
-to whatever the fixtures happened to exercise."""
+The codecs are pyarrow's bundled libzstd and snappy; these tests pin the
+layer around them: the exact-size and magic checks, the ``ValueError``
+contract, and the Content_Checksum the zarr writer stamps on.  Two
+layers of pinning: (1) committed fixtures produced by real libzstd /
+snappy (``fixtures/make_zstd_fixture.py``), fixed bytes with no
+compressor in the loop at test time; (2) live pyarrow round-trips across
+compression levels and data shapes."""
 
 from __future__ import annotations
 
@@ -14,20 +15,23 @@ import os
 import struct
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from spatialdata_spark.sources import blosc as B
-from spatialdata_spark.sources.zstd import zstd_compress_stored, zstd_decompress
+from spatialdata_spark.sources.zarrio import _compress, _decompress
 
 FIXDIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "zstd")
 
-try:
-    import pyarrow as pa
 
-    pa.Codec("zstd")
-    HAVE_PA = True
-except Exception:  # pragma: no cover
-    HAVE_PA = False
+def zstd_decompress(comp: bytes, size: int) -> bytes:
+    """The bare-zstd chunk read path of the zarr readers."""
+    return _decompress("zstd", comp, size)
+
+
+def zstd_compress(data: bytes) -> bytes:
+    """The ``compressor="zstd"`` chunk write path of the zarr writers."""
+    return _compress("zstd", data)
 
 
 # ---------------------------------------------------------------------------
@@ -47,7 +51,7 @@ def test_zstd_committed_fixtures(name):
         raw = f.read()
     with open(os.path.join(FIXDIR, f"{name}.zst"), "rb") as f:
         comp = f.read()
-    assert zstd_decompress(comp) == raw
+    assert zstd_decompress(comp, len(raw)) == raw
 
 
 @pytest.mark.parametrize("name", _fixture_names())
@@ -56,7 +60,7 @@ def test_snappy_committed_fixtures(name):
         raw = f.read()
     with open(os.path.join(FIXDIR, f"{name}.snappy"), "rb") as f:
         comp = f.read()
-    assert B.snappy_decompress(comp) == raw
+    assert B.native_decompress("snappy", comp, len(raw)) == raw
 
 
 # ---------------------------------------------------------------------------
@@ -80,47 +84,44 @@ def _live_cases():
     }
 
 
-@pytest.mark.skipif(not HAVE_PA, reason="pyarrow codecs unavailable")
 @pytest.mark.parametrize("level", [1, 3, 9, 19])
 def test_zstd_decodes_real_libzstd(level):
     for name, data in _live_cases().items():
         comp = pa.Codec("zstd", compression_level=level).compress(data, asbytes=True)
-        assert zstd_decompress(comp) == data, (name, level)
+        assert zstd_decompress(comp, len(data)) == data, (name, level)
 
 
-@pytest.mark.skipif(not HAVE_PA, reason="pyarrow codecs unavailable")
 def test_zstd_concatenated_frames():
     c = pa.Codec("zstd")
     a, b = b"left" * 500, np.arange(999, dtype=np.int16).tobytes()
-    assert zstd_decompress(c.compress(a, asbytes=True) + c.compress(b, asbytes=True)) == a + b
+    assert zstd_decompress(c.compress(a, asbytes=True) + c.compress(b, asbytes=True), len(a + b)) == a + b
 
 
-@pytest.mark.skipif(not HAVE_PA, reason="pyarrow codecs unavailable")
 def test_zstd_skippable_frame_is_skipped():
     c = pa.Codec("zstd")
     skip = struct.pack("<II", 0x184D2A50, 5) + b"extra"
     body = b"payload" * 100
-    assert zstd_decompress(skip + c.compress(body, asbytes=True)) == body
+    assert zstd_decompress(skip + c.compress(body, asbytes=True), len(body)) == body
 
 
-@pytest.mark.skipif(not HAVE_PA, reason="pyarrow codecs unavailable")
 def test_stored_encoders_read_by_reference_impls():
+    """Every ``compressor="zstd"`` chunk carries the Content_Checksum flag
+    (frame header descriptor bit 2) and plain libzstd decodes it, so the
+    checksum is verified; blosc chunks with snappy streams decode too."""
     for data in (b"", b"q", b"chunk" * 5000, np.arange(60000, dtype=np.int32).tobytes()):
-        st = zstd_compress_stored(data)
-        assert zstd_decompress(st) == data
+        st = zstd_compress(data)
+        assert st[4] & 0x04
+        assert zstd_decompress(st, len(data)) == data
         got = pa.Codec("zstd").decompress(st, decompressed_size=len(data), asbytes=True)
         assert got == data
-        sn = B.snappy_compress(data)
-        assert B.snappy_decompress(sn) == data
-        got = pa.Codec("snappy").decompress(sn, decompressed_size=len(data), asbytes=True)
-        assert got == data
+        sn = B.blosc_compress(data, cname="snappy", shuffle=0)
+        assert B.blosc_decompress(sn) == data
 
 
-@pytest.mark.skipif(not HAVE_PA, reason="pyarrow codecs unavailable")
 def test_snappy_decodes_real_snappy():
     for name, data in _live_cases().items():
         comp = pa.Codec("snappy").compress(data, asbytes=True)
-        assert B.snappy_decompress(comp) == data, name
+        assert B.native_decompress("snappy", comp, len(data)) == data, name
 
 
 # ---------------------------------------------------------------------------
@@ -130,21 +131,23 @@ def test_snappy_decodes_real_snappy():
 
 def test_zstd_bad_magic_raises():
     with pytest.raises(ValueError, match="magic"):
-        zstd_decompress(b"\x00\x01\x02\x03rest")
+        zstd_decompress(b"\x00\x01\x02\x03rest", 8)
 
 
 def test_zstd_truncated_raises():
     with open(os.path.join(FIXDIR, "text_lvl3.zst"), "rb") as f:
         comp = f.read()
-    with pytest.raises((ValueError, IndexError)):
-        zstd_decompress(comp[: len(comp) // 2])
+    with open(os.path.join(FIXDIR, "text_lvl3.raw"), "rb") as f:
+        size = len(f.read())
+    with pytest.raises(ValueError):
+        zstd_decompress(comp[: len(comp) // 2], size)
 
 
 def test_snappy_bad_offset_raises():
     # copy element with offset past the start of the output
     bad = bytes([4, 0x01 | (2 << 2), 0xFF])
     with pytest.raises(ValueError):
-        B.snappy_decompress(bad)
+        B.native_decompress("snappy", bad, 4)
 
 
 # ---------------------------------------------------------------------------
@@ -161,12 +164,10 @@ def test_blosc_compress_zstd_snappy_roundtrip():
             assert B.blosc_decompress(c) == raw, (cname, shuffle)
 
 
-@pytest.mark.skipif(not HAVE_PA, reason="pyarrow codecs unavailable")
 def test_bare_zstd_zarr_store(spark, tmp_path):
     """zarr v2 store with a numcodecs-style ``{"id": "zstd"}`` compressor
     (bare zstd frames, produced here by real libzstd) reads through the
-    tile reader; the write path emits real greedy-LZ frames any zstd
-    accepts."""
+    tile reader."""
     import json
 
     from spatialdata_spark.sources.zarrio import read_zarr_tiles
@@ -222,30 +223,23 @@ def test_blosc_zstd_store_fixture(spark):
         assert np.array_equal(got[k], exp[k]), k
 
 
-@pytest.mark.skipif(not HAVE_PA, reason="pyarrow codecs unavailable")
 def test_real_compressor_read_by_reference_impl():
-    """zstd_compress (greedy LZ + predefined-FSE sequences) round-trips
-    through BOTH this module's decoder and real libzstd, and actually
-    compresses repetitive data."""
-    from spatialdata_spark.sources.zstd import zstd_compress
-
+    """The zstd chunk writer round-trips through BOTH the chunk read
+    path and plain libzstd, and actually compresses repetitive data."""
     rng = np.random.default_rng(12)
     text = (b"the quick brown spark zarr chunk " * 3000)
     cases = [b"", b"q", text, rng.bytes(5000), b"\0" * 50000,
              text + rng.bytes(20000) + text]
     for data in cases:
         enc = zstd_compress(data)
-        assert zstd_decompress(enc) == data
+        assert zstd_decompress(enc, len(data)) == data
         got = pa.Codec("zstd").decompress(enc, decompressed_size=len(data), asbytes=True)
         assert got == data
     assert len(zstd_compress(text)) < len(text) // 10  # really compresses
 
 
-@pytest.mark.skipif(not HAVE_PA, reason="pyarrow codecs unavailable")
 def test_real_compressor_fuzz_vs_libzstd():
     import random
-
-    from spatialdata_spark.sources.zstd import zstd_compress
 
     random.seed(4)
     words = [b"aaaa", b"bbbb", b"cc", b"dddddd", b"\x00\x00\x00\x00"]
@@ -253,144 +247,35 @@ def test_real_compressor_fuzz_vs_libzstd():
         data = b"".join(random.choice(words) for _ in range(random.randint(0, 40)))
         data += bytes(random.randint(0, 255) for _ in range(random.randint(0, 12)))
         enc = zstd_compress(data)
-        assert zstd_decompress(enc) == data
+        assert zstd_decompress(enc, len(data)) == data
         assert pa.Codec("zstd").decompress(enc, decompressed_size=len(data), asbytes=True) == data
 
 
-def test_fse_encoder_roundtrips_default_tables():
-    """Single-channel FSE encode/decode round-trip over the three
-    predefined distributions (the encoder mirror of the decode tables)."""
-    import random
-
-    from spatialdata_spark.sources.zstd import (
-        _ML_DEFAULTS,
-        _LL_DEFAULTS,
-        _OF_DEFAULTS,
-        _BackwardBits,
-        _BitWriter,
-        _FseEncTable,
-        _FseTable,
-    )
-
-    random.seed(2)
-    for counts, acc in [(_LL_DEFAULTS, 6), (_ML_DEFAULTS, 6), (_OF_DEFAULTS, 5)]:
-        enc = _FseEncTable(counts, acc)
-        dec = _FseTable(counts, acc)
-        alphabet = [s for s, c in enumerate(counts) if c != 0]
-        for _ in range(200):
-            syms = [random.choice(alphabet) for _ in range(random.randint(1, 30))]
-            w = _BitWriter()
-            state = enc.init_state(syms[-1])
-            for s in reversed(syms[:-1]):
-                state = enc.encode(state, s, w)
-            enc.flush(state, w)
-            bits = _BackwardBits(w.close())
-            st = bits.read(acc)
-            out = []
-            for i in range(len(syms)):
-                out.append(dec.symbols[st])
-                if i + 1 < len(syms):
-                    st = dec.base[st] + bits.read(dec.nb_bits[st])
-            assert out == syms
-
-
-@pytest.mark.skipif(not HAVE_PA, reason="pyarrow codecs unavailable")
 def test_huffman_literals_compress_and_decode_by_libzstd():
-    """ASCII-alphabet blocks get Huffman-coded literals (package-merge
-    length-limited canonical codes, direct-weight header) — verified by
-    real libzstd decoding the output."""
+    """Skewed-alphabet chunks are entropy-coded by the zstd chunk writer,
+    on both sides of the 1024-literal single/four-stream boundary, and
+    real libzstd decodes the output."""
     import random
-
-    from spatialdata_spark.sources.zstd import zstd_compress
 
     random.seed(6)
     skewed = bytes(random.choice(b"aaaaaaabbbc") for _ in range(20000))
     enc = zstd_compress(skewed)
     assert len(enc) < len(skewed) * 0.6  # really entropy-coded
-    assert zstd_decompress(enc) == skewed
+    assert zstd_decompress(enc, len(skewed)) == skewed
     assert pa.Codec("zstd").decompress(enc, decompressed_size=len(skewed), asbytes=True) == skewed
-    # > 1023 literals exercises the 4-stream path; < 1024 the 1-stream path
-    small = bytes(random.choice(b"xxyyz") for _ in range(600)) + b"\xff" * 0
-    enc2 = zstd_compress(small + np.random.default_rng(0).bytes(3))
-    assert zstd_decompress(enc2) == small + np.random.default_rng(0).bytes(3)
+    small = bytes(random.choice(b"xxyyz") for _ in range(600)) + np.random.default_rng(0).bytes(3)
+    assert zstd_decompress(zstd_compress(small), len(small)) == small
 
 
-def test_package_merge_kraft_equality():
-    import random
-
-    from spatialdata_spark.sources.zstd import _package_merge
-
-    random.seed(8)
-    for _ in range(200):
-        n = random.randint(2, 100)
-        freqs = {s: random.randint(1, 10000) for s in range(n)}
-        lens = _package_merge(freqs, 11)
-        assert max(lens.values()) <= 11
-        assert sum(2 ** (11 - l) for l in lens.values()) == 2**11  # complete code
-
-
-@pytest.mark.skipif(not HAVE_PA, reason="pyarrow codecs unavailable")
 def test_fse_weight_descriptions_full_alphabet():
-    """Alphabets with symbols >= 128 use FSE-compressed Huffman weight
-    descriptions; real libzstd decodes the result (float64 data now
-    entropy-codes at libzstd-3 parity)."""
-    from spatialdata_spark.sources.zstd import zstd_compress
-
+    """Full-alphabet float64 chunks (bytes >= 128, few LZ matches) still
+    compress through the zstd chunk writer, and real libzstd decodes
+    the result."""
     data = (np.sin(np.arange(30000)) * 1000).astype(np.float64).tobytes()
     enc = zstd_compress(data)
     assert len(enc) < len(data)  # really compresses despite no LZ matches
-    assert zstd_decompress(enc) == data
+    assert zstd_decompress(enc, len(data)) == data
     assert pa.Codec("zstd").decompress(enc, decompressed_size=len(data), asbytes=True) == data
-
-
-def test_ncount_writer_roundtrips_reader():
-    import random
-
-    from spatialdata_spark.sources.zstd import (
-        _ForwardBits,
-        _fse_read_ncount,
-        _fse_write_ncount,
-        _normalize_counts,
-    )
-
-    random.seed(3)
-    for _ in range(300):
-        nsym = random.randint(2, 13)
-        hist = {s: random.randint(1, 1000) for s in random.sample(range(13), nsym)}
-        counts = _normalize_counts(hist, 6, max(hist))
-        data = _fse_write_ncount(counts, 6)
-        got, acc = _fse_read_ncount(_ForwardBits(data), 255)
-        strip = lambda xs: xs[: len(xs) - next((i for i, v in enumerate(reversed(xs)) if v), len(xs))]
-        assert acc == 6 and strip(got) == strip(counts)
-
-
-def test_fse_weight_stream_roundtrip():
-    import random
-
-    from spatialdata_spark.sources.zstd import (
-        _BackwardBits,
-        _ForwardBits,
-        _FseTable,
-        _fse_compress_weights,
-        _fse_decompress_interleaved,
-        _fse_read_ncount,
-    )
-
-    random.seed(4)
-    for _ in range(300):
-        nw = random.randint(2, 255)
-        weights = [random.randint(0, 11) for _ in range(nw)]
-        if all(w == weights[0] for w in weights):
-            weights[0] = (weights[0] + 1) % 12
-        comp = _fse_compress_weights(weights)
-        if comp is None:
-            continue
-        fwd = _ForwardBits(comp)
-        counts, acc = _fse_read_ncount(fwd, 255)
-        got = _fse_decompress_interleaved(
-            _FseTable(counts, acc), _BackwardBits(comp[fwd.bytes_consumed():]), 255
-        )
-        assert got == weights
 
 
 def test_match_offset_cannot_reach_previous_frame():
@@ -404,8 +289,6 @@ def test_match_offset_cannot_reach_previous_frame():
     (ll=0 -> lit_len 0; ml=0 -> match_len 3; of=3 -> offset_value
     8+read(3)=8 -> offset 5) — valid standalone structure, but offset 5
     with zero bytes of frame-local history."""
-    from spatialdata_spark.sources.zstd import zstd_decompress
-
     frame1 = (
         b"\x28\xb5\x2f\xfd"  # magic
         + b"\x20\x05"        # single-segment, content size 5
@@ -429,8 +312,8 @@ def test_match_offset_cannot_reach_previous_frame():
         + bytes([1 | (2 << 1) | (len(block) << 3), 0x00, 0x00])
         + block
     )
-    with pytest.raises(ValueError, match="frame start"):
-        zstd_decompress(frame1 + frame2)
+    with pytest.raises(ValueError):
+        zstd_decompress(frame1 + frame2, 8)
     # the same offset is fine when the frame itself has the history
     frame_ok = (
         b"\x28\xb5\x2f\xfd"
@@ -440,7 +323,7 @@ def test_match_offset_cannot_reach_previous_frame():
         + bytes([1 | (2 << 1) | (len(block) << 3), 0x00, 0x00])
         + block
     )
-    assert zstd_decompress(frame_ok) == b"HELLOHEL"
+    assert zstd_decompress(frame_ok, 8) == b"HELLOHEL"
 
 
 # ---------------------------------------------------------------------------
@@ -474,32 +357,35 @@ def test_xxh64_canonical_and_spark_pin(spark):
         assert got[i] == signed, f"len {len(b)}"
 
 
-@pytest.mark.skipif(not HAVE_PA, reason="pyarrow codecs unavailable")
 def test_zstd_checksummed_frames_verified_by_libzstd_and_us():
-    """checksum=True frames must satisfy REAL libzstd (which verifies
+    """Written chunks must satisfy REAL libzstd (which verifies
     Content_Checksum itself — a wrong XXH64 would make pyarrow raise),
-    and our decoder must verify too: a flipped payload byte or a
-    flipped stored checksum raises instead of returning bytes."""
-    import pyarrow as pa
-
-    from spatialdata_spark.sources.zstd import zstd_compress
-
+    and the chunk read path must verify too: a flipped stored checksum
+    raises instead of returning bytes."""
     codec = pa.Codec("zstd")
     data = bytes(range(256)) * 41 + b"tail" + b"\x00" * 999
-    comp = zstd_compress(data, checksum=True)
+    comp = zstd_compress(data)
     assert codec.decompress(comp, decompressed_size=len(data)).to_pybytes() == data
-    assert zstd_decompress(comp) == data
+    assert zstd_decompress(comp, len(data)) == data
 
     bad = bytearray(comp)
     bad[-1] ^= 0xFF  # stored checksum corrupted
     with pytest.raises(ValueError, match="checksum"):
-        zstd_decompress(bytes(bad))
+        zstd_decompress(bytes(bad), len(data))
 
 
 def test_zstd_checksum_detects_tamper_roundtrip():
-    from spatialdata_spark.sources.zstd import zstd_compress
-
     data = b"the quick brown fox " * 200
-    comp = zstd_compress(data, checksum=True)
-    assert zstd_decompress(comp) == data
-    assert zstd_decompress(zstd_compress(data)) == data  # default: no checksum
+    comp = zstd_compress(data)
+    assert zstd_decompress(comp, len(data)) == data
+    # incompressible data is stored in a raw block: a flipped content byte
+    # still parses, and only the checksum catches it
+    noise = np.random.default_rng(1).bytes(4000)
+    bad = bytearray(zstd_compress(noise))
+    bad[len(bad) // 2] ^= 0x01
+    with pytest.raises(ValueError, match="checksum"):
+        zstd_decompress(bytes(bad), len(noise))
+    # frames without a checksum (pyarrow's own output) still read
+    plain = pa.Codec("zstd").compress(data, asbytes=True)
+    assert not plain[4] & 0x04
+    assert zstd_decompress(plain, len(data)) == data
