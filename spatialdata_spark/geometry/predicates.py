@@ -62,10 +62,6 @@ def polygon_centroid(rings: list[np.ndarray]) -> tuple[float, float]:
     return num_x / den, num_y / den
 
 
-def ring_bounds(ring: np.ndarray) -> tuple[float, float, float, float]:
-    return float(ring[:, 0].min()), float(ring[:, 1].min()), float(ring[:, 0].max()), float(ring[:, 1].max())
-
-
 def points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
     """Vectorized even-odd (ray casting) point-in-polygon over many points.
 

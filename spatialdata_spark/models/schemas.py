@@ -27,13 +27,9 @@ Representations:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from spatialdata_spark.transformations import BaseTransformation, Identity
 
 NUMERIC_TYPES = (
     T.IntegerType,
@@ -82,14 +78,6 @@ class _ModelBase:
     @classmethod
     def validate(cls, df: DataFrame) -> None:
         raise NotImplementedError
-
-
-@dataclass
-class _ElementMeta:
-    """Driver-side metadata attached to an element in the catalog."""
-
-    transformations: dict[str, BaseTransformation] = field(default_factory=lambda: {"global": Identity()})
-    attrs: dict = field(default_factory=dict)
 
 
 class PointsModel(_ModelBase):

@@ -31,15 +31,12 @@ regroup is semantically required.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
-from functools import lru_cache
+from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.util import PythonEvalType
 
 TILE_SCHEMA = T.StructType(
     [
@@ -76,52 +73,8 @@ class RasterMeta:
         return (-(-self.height // f), -(-self.width // f))
 
 
-# ---------------------------------------------------------------------------
-# cached Arrow-kernel application
-# ---------------------------------------------------------------------------
-#
-# df.mapInPandas / gd.applyInPandas wrap the Python function in a FRESH
-# pandas_udf on every call: the function is re-pickled and re-registered
-# with the JVM per plan construction (~30-50 ms each — r14/r15 driver
-# profile; these kernels sit in every rt_*/rv_* query).  The helpers
-# below mirror the two mixin bodies exactly (pyspark 4.x
-# PandasMapOpsMixin.mapInPandas / PandasGroupedOpsMixin.applyInPandas)
-# but take an ALREADY-BUILT udf, so a keyed lru_cache factory pays the
-# pickle+registration once per (closure parameters) per process.  The
-# produced plan node is identical (MapInPandas /
-# FlatMapGroupsInPandas).  Like every module-level pandas_udf in this
-# library, a cached wrapper holds a JVM handle for the session that
-# first used it — one SparkSession per process (the tests/bench/driver
-# contract).
-
-
-def _map_in_pandas_cached(df: DataFrame, udf) -> DataFrame:
-    udf_column = udf(*[df[col] for col in df.columns])
-    jdf = df._jdf.mapInPandas(udf_column._jc, False, None)
-    return DataFrame(jdf, df.sparkSession)
-
-
-def _apply_in_pandas_cached(grouped, udf) -> DataFrame:
-    df = grouped._df
-    udf_column = udf(*[df[col] for col in df.columns])
-    jdf = grouped._jgd.flatMapGroupsInPandas(udf_column._jc)
-    return DataFrame(jdf, grouped.session)
-
-
-def _map_udf(func, schema):
-    return pandas_udf(func, returnType=schema, functionType=PythonEvalType.SQL_MAP_PANDAS_ITER_UDF)
-
-
-def _grouped_udf(func, schema):
-    return pandas_udf(func, returnType=schema, functionType=PythonEvalType.SQL_GROUPED_MAP_PANDAS_UDF)
-
-
 def _buf(arr: np.ndarray) -> bytes:
     return np.ascontiguousarray(arr).tobytes()
-
-
-def _arr(buf: bytes, meta: RasterMeta) -> np.ndarray:
-    return np.frombuffer(buf, dtype=np.dtype(meta.dtype)).reshape(meta.tile, meta.tile)
 
 
 # ---------------------------------------------------------------------------
@@ -129,8 +82,7 @@ def _arr(buf: bytes, meta: RasterMeta) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-@lru_cache(maxsize=128)
-def _pack_udf(ts: int, dtype: str):
+def _pack_kernel(ts: int, dtype: str):
     def _pack(pdf):
         import pandas as pd
 
@@ -146,7 +98,7 @@ def _pack_udf(ts: int, dtype: str):
             }
         )
 
-    return _grouped_udf(_pack, TILE_SCHEMA)
+    return _pack
 
 
 def long_to_tiles(df_long: DataFrame, meta: RasterMeta, value_col: str = "value") -> DataFrame:
@@ -168,20 +120,10 @@ def long_to_tiles(df_long: DataFrame, meta: RasterMeta, value_col: str = "value"
         f"CAST(FLOOR(x / {ts}) AS BIGINT) AS tx",
         f"`{value_col}` AS value",
     )
-    return _apply_in_pandas_cached(keyed.groupBy("c", "ty", "tx"), _pack_udf(ts, meta.dtype))
+    return keyed.groupBy("c", "ty", "tx").applyInPandas(_pack_kernel(ts, meta.dtype), TILE_SCHEMA)
 
 
-@lru_cache(maxsize=128)
-def _unpack_udf(ts: int, dtype: str, h: int, w: int, keep_zeros: bool):
-    out_schema = T.StructType(
-        [
-            T.StructField("c", T.IntegerType()),
-            T.StructField("y", T.LongType()),
-            T.StructField("x", T.LongType()),
-            T.StructField("value", T.DoubleType() if dtype.startswith("f") else T.LongType()),
-        ]
-    )
-
+def _unpack_kernel(ts: int, dtype: str, h: int, w: int, keep_zeros: bool):
     def _unpack(iterator):
         import pandas as pd
 
@@ -201,16 +143,23 @@ def _unpack_udf(ts: int, dtype: str, h: int, w: int, keep_zeros: bool):
                     {"c": int(row.c), "y": ay[m], "x": ax[m], "value": vv[m]}
                 )
 
-    return _map_udf(_unpack, out_schema)
+    return _unpack
 
 
 def tiles_to_long(tiles: DataFrame, meta: RasterMeta, keep_zeros: bool = False, scale: int = 0) -> DataFrame:
     """Unpack tiles to long form ``(c, y, x, value)``.  Sparse by
     default (zeros dropped) — the COO view used by zonal stats."""
     h, w = meta.shape_at(scale)
-    return _map_in_pandas_cached(
-        tiles.filter(F.col("scale") == scale),
-        _unpack_udf(meta.tile, meta.dtype, h, w, keep_zeros),
+    schema = T.StructType(
+        [
+            T.StructField("c", T.IntegerType()),
+            T.StructField("y", T.LongType()),
+            T.StructField("x", T.LongType()),
+            T.StructField("value", T.DoubleType() if meta.dtype.startswith("f") else T.LongType()),
+        ]
+    )
+    return tiles.filter(F.col("scale") == scale).mapInPandas(
+        _unpack_kernel(meta.tile, meta.dtype, h, w, keep_zeros), schema
     )
 
 
@@ -219,8 +168,7 @@ def tiles_to_long(tiles: DataFrame, meta: RasterMeta, keep_zeros: bool = False, 
 # ---------------------------------------------------------------------------
 
 
-@lru_cache(maxsize=128)
-def _map_tiles_udf(fn, ts: int, dtype: str, out_dtype: str):
+def _map_tiles_kernel(fn, ts: int, dtype: str, out_dtype: str):
     def _apply(iterator):
         for pdf in iterator:
             out = []
@@ -231,17 +179,15 @@ def _map_tiles_udf(fn, ts: int, dtype: str, out_dtype: str):
             pdf["tile"] = out
             yield pdf
 
-    return _map_udf(_apply, TILE_SCHEMA)
+    return _apply
 
 
 def map_tiles(tiles: DataFrame, fn, meta: RasterMeta, out_dtype: str | None = None) -> DataFrame:
     """``map_raster(func)`` without overlap (reference: map.py:22-156,
     map_blocks path): embarrassingly parallel, shuffle-free — fn is
-    applied tile-wise inside ``mapInPandas``.  The kernel UDF is cached
-    per (fn, tile, dtypes) — pass a module-level fn (not a fresh
-    lambda) to amortize its pickle+registration across calls."""
-    return _map_in_pandas_cached(
-        tiles, _map_tiles_udf(fn, meta.tile, meta.dtype, out_dtype or meta.dtype)
+    applied tile-wise inside ``mapInPandas``."""
+    return tiles.mapInPandas(
+        _map_tiles_kernel(fn, meta.tile, meta.dtype, out_dtype or meta.dtype), TILE_SCHEMA
     )
 
 
@@ -281,14 +227,12 @@ def map_tiles_with_halo(tiles: DataFrame, fn, meta: RasterMeta, halo: int, out_d
         )
         .filter((F.col("gty") >= 0) & (F.col("gtx") >= 0))
     )
-    return _apply_in_pandas_cached(
-        contrib.groupBy("scale", "c", "gty", "gtx"),
-        _halo_assemble_udf(fn, ts, halo, meta.dtype, out_dtype or meta.dtype),
+    return contrib.groupBy("scale", "c", "gty", "gtx").applyInPandas(
+        _halo_assemble_kernel(fn, ts, halo, meta.dtype, out_dtype or meta.dtype), TILE_SCHEMA
     )
 
 
-@lru_cache(maxsize=128)
-def _halo_assemble_udf(fn, ts: int, halo: int, dtype: str, out_dtype: str):
+def _halo_assemble_kernel(fn, ts: int, halo: int, dtype: str, out_dtype: str):
     def _assemble(key, pdf):
         import pandas as pd
 
@@ -318,7 +262,7 @@ def _halo_assemble_udf(fn, ts: int, halo: int, dtype: str, out_dtype: str):
             {"scale": [scale], "c": [c], "ty": [gty], "tx": [gtx], "tile": [_buf(cropped)]}
         )
 
-    return _grouped_udf(_assemble, TILE_SCHEMA)
+    return _assemble
 
 
 # ---------------------------------------------------------------------------
@@ -346,11 +290,10 @@ def bounding_box_query_tiles(
         & (F.col("tx") <= (x1 - 1) // ts)
     )
 
-    return _map_in_pandas_cached(pruned, _bbox_crop_udf(ts, meta.dtype, y0, x0, y1, x1))
+    return pruned.mapInPandas(_bbox_crop_kernel(ts, meta.dtype, y0, x0, y1, x1), TILE_SCHEMA)
 
 
-@lru_cache(maxsize=256)
-def _bbox_crop_udf(ts: int, dtype: str, y0: int, x0: int, y1: int, x1: int):
+def _bbox_crop_kernel(ts: int, dtype: str, y0: int, x0: int, y1: int, x1: int):
     def _crop(iterator):
         import pandas as pd
 
@@ -369,7 +312,7 @@ def _bbox_crop_udf(ts: int, dtype: str, y0: int, x0: int, y1: int, x1: int):
                 rows["tile"].append(_buf(a))
             yield pd.DataFrame(rows)
 
-    return _map_udf(_crop, TILE_SCHEMA)
+    return _crop
 
 
 def unpad_raster(tiles: DataFrame, meta: RasterMeta) -> tuple[DataFrame, tuple[int, int, int, int]]:
@@ -379,7 +322,8 @@ def unpad_raster(tiles: DataFrame, meta: RasterMeta) -> tuple[DataFrame, tuple[i
     """
     ts = meta.tile
     row = (
-        _map_in_pandas_cached(tiles.filter(F.col("scale") == 0), _extent_udf(ts, meta.dtype))
+        tiles.filter(F.col("scale") == 0)
+        .mapInPandas(_extent_kernel(ts, meta.dtype), _EXTENT_SCHEMA)
         .agg(F.min("miny"), F.min("minx"), F.max("maxy"), F.max("maxx"))
         .first()
     )
@@ -389,17 +333,17 @@ def unpad_raster(tiles: DataFrame, meta: RasterMeta) -> tuple[DataFrame, tuple[i
     return bounding_box_query_tiles(tiles, meta, y0, x0, y1, x1), (y0, x0, y1, x1)
 
 
-@lru_cache(maxsize=128)
-def _extent_udf(ts: int, dtype: str):
-    ext_schema = T.StructType(
-        [
-            T.StructField("miny", T.LongType()),
-            T.StructField("minx", T.LongType()),
-            T.StructField("maxy", T.LongType()),
-            T.StructField("maxx", T.LongType()),
-        ]
-    )
+_EXTENT_SCHEMA = T.StructType(
+    [
+        T.StructField("miny", T.LongType()),
+        T.StructField("minx", T.LongType()),
+        T.StructField("maxy", T.LongType()),
+        T.StructField("maxx", T.LongType()),
+    ]
+)
 
+
+def _extent_kernel(ts: int, dtype: str):
     def _extent(iterator):
         import pandas as pd
 
@@ -414,7 +358,7 @@ def _extent_udf(ts: int, dtype: str):
                 rows.append((int(yy.min()) + oy, int(xx.min()) + ox, int(yy.max()) + oy, int(xx.max()) + ox))
             yield pd.DataFrame(rows, columns=["miny", "minx", "maxy", "maxx"])
 
-    return _map_udf(_extent, ext_schema)
+    return _extent
 
 
 def downsample_tiles(tiles: DataFrame, meta: RasterMeta, scale: int = 0, reduction: str = "sum") -> DataFrame:
@@ -431,8 +375,8 @@ def downsample_tiles(tiles: DataFrame, meta: RasterMeta, scale: int = 0, reducti
     if ts % 2:
         raise ValueError("tile size must be even for factor-2 pyramid")
 
-    pooled = _map_in_pandas_cached(
-        tiles.filter(F.col("scale") == scale), _pool_udf(ts, meta.dtype, reduction)
+    pooled = tiles.filter(F.col("scale") == scale).mapInPandas(
+        _pool_kernel(ts, meta.dtype, reduction), TILE_SCHEMA
     )
     # regroup 2x2 pooled half-tiles into full coarse tiles
     quad = pooled.select(
@@ -445,13 +389,12 @@ def downsample_tiles(tiles: DataFrame, meta: RasterMeta, scale: int = 0, reducti
         "tile",
     )
 
-    return _apply_in_pandas_cached(
-        quad.groupBy("scale", "c", "gty", "gtx"), _regroup_udf(ts, meta.dtype)
+    return quad.groupBy("scale", "c", "gty", "gtx").applyInPandas(
+        _regroup_kernel(ts, meta.dtype), TILE_SCHEMA
     )
 
 
-@lru_cache(maxsize=128)
-def _pool_udf(ts: int, dtype: str, reduction: str):
+def _pool_kernel(ts: int, dtype: str, reduction: str):
     half = ts // 2
 
     def _pool(iterator):
@@ -470,11 +413,10 @@ def _pool_udf(ts: int, dtype: str, reduction: str):
             pdf["tile"] = out
             yield pdf
 
-    return _map_udf(_pool, TILE_SCHEMA)
+    return _pool
 
 
-@lru_cache(maxsize=128)
-def _regroup_udf(ts: int, dtype: str):
+def _regroup_kernel(ts: int, dtype: str):
     half = ts // 2
 
     def _regroup(key, pdf):
@@ -488,7 +430,7 @@ def _regroup_udf(ts: int, dtype: str):
             a[y0 : y0 + half, x0 : x0 + half] = q
         return pd.DataFrame({"scale": [scale_], "c": [c], "ty": [gty], "tx": [gtx], "tile": [_buf(a)]})
 
-    return _grouped_udf(_regroup, TILE_SCHEMA)
+    return _regroup
 
 
 def build_pyramid(tiles: DataFrame, meta: RasterMeta, n_scales: int, reduction: str = "sum") -> DataFrame:
@@ -588,9 +530,7 @@ def zonal_stats_tiles(
         lab, (F.col("ty") == F.col("lty")) & (F.col("tx") == F.col("ltx"))
     )
 
-    partials = _map_in_pandas_cached(
-        joined, _zonal_udf(meta.tile, meta.dtype, label_meta.dtype)
-    )
+    partials = joined.mapInPandas(_zonal_kernel(meta.tile, meta.dtype, label_meta.dtype), _ZONAL_SCHEMA)
     return partials.groupBy("label", "c").agg(
         F.sum("sum_value").alias("sum_value"),
         F.sum("n").alias("n"),
@@ -598,17 +538,17 @@ def zonal_stats_tiles(
     )
 
 
-@lru_cache(maxsize=128)
-def _zonal_udf(ts: int, dtype: str, label_dtype: str):
-    out_schema = T.StructType(
-        [
-            T.StructField("label", T.LongType()),
-            T.StructField("c", T.IntegerType()),
-            T.StructField("sum_value", T.DoubleType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
+_ZONAL_SCHEMA = T.StructType(
+    [
+        T.StructField("label", T.LongType()),
+        T.StructField("c", T.IntegerType()),
+        T.StructField("sum_value", T.DoubleType()),
+        T.StructField("n", T.LongType()),
+    ]
+)
 
+
+def _zonal_kernel(ts: int, dtype: str, label_dtype: str):
     def _zonal(iterator):
         import pandas as pd
 
@@ -636,7 +576,7 @@ def _zonal_udf(ts: int, dtype: str, label_dtype: str):
             if frames:
                 yield pd.concat(frames)
 
-    return _map_udf(_zonal, out_schema)
+    return _zonal
 
 
 # ---------------------------------------------------------------------------
@@ -719,17 +659,16 @@ def transform_raster_tiles(
         .select("oty", "otx", "ty", "tx")
     )
     joined = cover.join(tiles.filter(F.col("scale") == scale), ["ty", "tx"])
-    return _apply_in_pandas_cached(
-        joined.groupBy("oty", "otx", "c"),
-        _resample_udf(
+    return joined.groupBy("oty", "otx", "c").applyInPandas(
+        _resample_kernel(
             float(a00), float(a01), float(b0), float(a10), float(a11), float(b1),
             ts, ots, order, meta.dtype, out_meta.dtype,
         ),
+        TILE_SCHEMA,
     )
 
 
-@lru_cache(maxsize=128)
-def _resample_udf(
+def _resample_kernel(
     a00: float, a01: float, b0: float, a10: float, a11: float, b1: float,
     ts: int, ots: int, order: int, dtype: str, out_dtype: str,
 ):
@@ -783,7 +722,7 @@ def _resample_udf(
             {"scale": [0], "c": [c], "ty": [oty], "tx": [otx], "tile": [_buf(out)]}
         )
 
-    return _grouped_udf(_resample, TILE_SCHEMA)
+    return _resample
 
 
 # ---------------------------------------------------------------------------
@@ -821,23 +760,23 @@ def export_region_tiles(
         .withColumn("tx", F.explode(F.sequence(F.floor(F.col("x0") / ts), F.floor((F.col("x0") + tile_px - 1) / ts))))
     )
     joined = cover.join(tiles.filter(F.col("scale") == scale), ["ty", "tx"])
-    return _apply_in_pandas_cached(
-        joined.groupBy("region_id", "c"), _region_crop_udf(ts, meta.dtype, tile_px)
+    return joined.groupBy("region_id", "c").applyInPandas(
+        _region_crop_kernel(ts, meta.dtype, tile_px), _REGION_CROP_SCHEMA
     )
 
 
-@lru_cache(maxsize=128)
-def _region_crop_udf(ts: int, dtype: str, tile_px: int):
-    out_schema = T.StructType(
-        [
-            T.StructField("region_id", T.LongType()),
-            T.StructField("c", T.IntegerType()),
-            T.StructField("y0", T.LongType()),
-            T.StructField("x0", T.LongType()),
-            T.StructField("data", T.BinaryType()),
-        ]
-    )
+_REGION_CROP_SCHEMA = T.StructType(
+    [
+        T.StructField("region_id", T.LongType()),
+        T.StructField("c", T.IntegerType()),
+        T.StructField("y0", T.LongType()),
+        T.StructField("x0", T.LongType()),
+        T.StructField("data", T.BinaryType()),
+    ]
+)
 
+
+def _region_crop_kernel(ts: int, dtype: str, tile_px: int):
     def _crop(key, pdf):
         import pandas as pd
 
@@ -859,7 +798,7 @@ def _region_crop_udf(ts: int, dtype: str, tile_px: int):
             {"region_id": [region_id], "c": [c], "y0": [y0], "x0": [x0], "data": [_buf(out)]}
         )
 
-    return _grouped_udf(_crop, out_schema)
+    return _crop
 
 
 # ---------------------------------------------------------------------------
@@ -909,13 +848,12 @@ def long3d_to_tiles(df_long: DataFrame, meta: RasterMeta, value_col: str = "valu
         F.col(value_col).alias("value"),
     )
 
-    return _apply_in_pandas_cached(
-        keyed.groupBy("c", "z", "ty", "tx"), _pack3d_udf(ts, meta.dtype)
+    return keyed.groupBy("c", "z", "ty", "tx").applyInPandas(
+        _pack3d_kernel(ts, meta.dtype), TILE3D_SCHEMA
     )
 
 
-@lru_cache(maxsize=128)
-def _pack3d_udf(ts: int, dtype: str):
+def _pack3d_kernel(ts: int, dtype: str):
     def _pack(key, pdf):
         import pandas as pd
 
@@ -926,30 +864,27 @@ def _pack3d_udf(ts: int, dtype: str):
             {"scale": [0], "c": [c], "z": [z], "ty": [ty], "tx": [tx], "tile": [_buf(a)]}
         )
 
-    return _grouped_udf(_pack, TILE3D_SCHEMA)
+    return _pack
 
 
 def tiles3d_to_long(tiles: DataFrame, meta: RasterMeta, keep_zeros: bool = False, scale: int = 0) -> DataFrame:
     """Unpack z-plane tiles to long form ``(c, z, y, x, value)``."""
     h, w = meta.shape_at(scale)
-    return _map_in_pandas_cached(
-        tiles.filter(F.col("scale") == scale),
-        _unpack3d_udf(meta.tile, meta.dtype, h, w, keep_zeros),
-    )
-
-
-@lru_cache(maxsize=128)
-def _unpack3d_udf(ts: int, dtype: str, h: int, w: int, keep_zeros: bool):
-    out_schema = T.StructType(
+    schema = T.StructType(
         [
             T.StructField("c", T.IntegerType()),
             T.StructField("z", T.LongType()),
             T.StructField("y", T.LongType()),
             T.StructField("x", T.LongType()),
-            T.StructField("value", T.DoubleType() if dtype.startswith("f") else T.LongType()),
+            T.StructField("value", T.DoubleType() if meta.dtype.startswith("f") else T.LongType()),
         ]
     )
+    return tiles.filter(F.col("scale") == scale).mapInPandas(
+        _unpack3d_kernel(meta.tile, meta.dtype, h, w, keep_zeros), schema
+    )
 
+
+def _unpack3d_kernel(ts: int, dtype: str, h: int, w: int, keep_zeros: bool):
     def _unpack(iterator):
         import pandas as pd
 
@@ -969,7 +904,7 @@ def _unpack3d_udf(ts: int, dtype: str, h: int, w: int, keep_zeros: bool):
                     {"c": int(row.c), "z": int(row.z), "y": ay[m], "x": ax[m], "value": vv[m]}
                 )
 
-    return _map_udf(_unpack, out_schema)
+    return _unpack
 
 
 def bounding_box_query_tiles_3d(
@@ -998,11 +933,10 @@ def bounding_box_query_tiles_3d(
         & (F.col("tx") <= (x1 - 1) // ts)
     )
 
-    return _map_in_pandas_cached(pruned, _bbox_crop3d_udf(ts, meta.dtype, y0, x0, y1, x1))
+    return pruned.mapInPandas(_bbox_crop3d_kernel(ts, meta.dtype, y0, x0, y1, x1), TILE3D_SCHEMA)
 
 
-@lru_cache(maxsize=256)
-def _bbox_crop3d_udf(ts: int, dtype: str, y0: int, x0: int, y1: int, x1: int):
+def _bbox_crop3d_kernel(ts: int, dtype: str, y0: int, x0: int, y1: int, x1: int):
     def _crop(iterator):
         for pdf in iterator:
             out = []
@@ -1017,11 +951,10 @@ def _bbox_crop3d_udf(ts: int, dtype: str, y0: int, x0: int, y1: int, x1: int):
             pdf["tile"] = out
             yield pdf
 
-    return _map_udf(_crop, TILE3D_SCHEMA)
+    return _crop
 
 
-@lru_cache(maxsize=128)
-def _map_tiles3d_udf(fn, ts: int, dtype: str, out_dtype: str):
+def _map_tiles3d_kernel(fn, ts: int, dtype: str, out_dtype: str):
     def _apply(iterator):
         for pdf in iterator:
             out = []
@@ -1032,14 +965,14 @@ def _map_tiles3d_udf(fn, ts: int, dtype: str, out_dtype: str):
             pdf["tile"] = out
             yield pdf
 
-    return _map_udf(_apply, TILE3D_SCHEMA)
+    return _apply
 
 
 def map_tiles_3d(tiles: DataFrame, fn, meta: RasterMeta, out_dtype: str | None = None) -> DataFrame:
     """Per-z-plane ``map_raster`` over a volume: shuffle-free, fn runs
     tile-wise exactly as in :func:`map_tiles`."""
-    return _map_in_pandas_cached(
-        tiles, _map_tiles3d_udf(fn, meta.tile, meta.dtype, out_dtype or meta.dtype)
+    return tiles.mapInPandas(
+        _map_tiles3d_kernel(fn, meta.tile, meta.dtype, out_dtype or meta.dtype), TILE3D_SCHEMA
     )
 
 

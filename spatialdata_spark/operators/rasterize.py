@@ -14,10 +14,9 @@ scale-correct representation for 100 TB of transcripts.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 _REDUCTIONS = ("count", "sum", "mean", "first", "max", "min")
@@ -80,26 +79,6 @@ def rasterize_points_categorical(
     return long.groupBy("py", "px").pivot("category").agg(F.first("n")).na.fill(0)
 
 
-def rasterize_labels_from_shapes_centroid(
-    shapes: DataFrame, x0: float, y0: float, resolution: float
-) -> DataFrame:
-    """Labels raster from shapes via center binning ('first' reduction with
-    shape_id value, the label path of rasterize.py:616-743 for points-like
-    geometry).  Full fills: rasterize_circles_fill (expressions) and
-    rasterize_polygons_fill (scanline mapInPandas) below."""
-    cx = (F.col("minx") + F.col("maxx")) / 2
-    cy = (F.col("miny") + F.col("maxy")) / 2
-    return (
-        shapes.select(
-            F.floor((cy - F.lit(float(y0))) / F.lit(float(resolution))).alias("py"),
-            F.floor((cx - F.lit(float(x0))) / F.lit(float(resolution))).alias("px"),
-            F.col("shape_id"),
-        )
-        .groupBy("py", "px")
-        .agg(F.min("shape_id").alias("label"))
-    )
-
-
 def rasterize_circles_fill(circles: DataFrame) -> DataFrame:
     """Full-disk rasterization of circles — pure Catalyst expressions.
 
@@ -146,74 +125,64 @@ def rasterize_polygons_fill(shapes: DataFrame) -> DataFrame:
 
     Reference: rasterize.py:616-743 (datashader ``cnv.polygons``).
     """
-    from spatialdata_spark.operators.raster import _map_in_pandas_cached
-
     cols = ["shape_id", "kind", "wkb", "minx", "miny", "maxx", "maxy", "radius"]
-    return _map_in_pandas_cached(shapes.select(*cols), _fill_udf())
+    return shapes.select(*cols).mapInPandas(_fill, _FILL_SCHEMA)
 
 
-@lru_cache(maxsize=1)
-def _fill_udf():
+_FILL_SCHEMA = T.StructType(
+    [
+        T.StructField("y", T.LongType()),
+        T.StructField("x", T.LongType()),
+        T.StructField("label", T.LongType()),
+    ]
+)
+
+
+def _fill(batches):
     import numpy as np
-    from pyspark.sql import types as T
+    import pandas as pd
 
-    schema = T.StructType(
-        [
-            T.StructField("y", T.LongType()),
-            T.StructField("x", T.LongType()),
-            T.StructField("label", T.LongType()),
-        ]
-    )
+    from spatialdata_spark.geometry import predicates as P
+    from spatialdata_spark.geometry import wkb as W
 
-    def _fill(batches):
-        import pandas as pd
-
-        from spatialdata_spark.geometry import predicates as P
-        from spatialdata_spark.geometry import wkb as W
-
-        for pdf in batches:
-            ys_out: list[np.ndarray] = []
-            xs_out: list[np.ndarray] = []
-            ls_out: list[np.ndarray] = []
-            for row in pdf.itertuples(index=False):
-                buf = row.wkb
-                if buf is None:
-                    continue
-                kind, geom = W.decode(bytes(buf))
-                y0 = int(np.ceil(row.miny))
-                y1 = int(np.floor(row.maxy))
-                x0 = int(np.ceil(row.minx))
-                x1 = int(np.floor(row.maxx))
-                if y1 < y0 or x1 < x0:
-                    continue
-                gy, gx = np.mgrid[y0 : y1 + 1, x0 : x1 + 1]
-                fy = gy.ravel().astype(float)
-                fx = gx.ravel().astype(float)
-                if kind == "polygon":
-                    mask = P.points_in_polygon(fx, fy, geom)
-                elif kind == "multipolygon":
-                    mask = P.points_in_multipolygon(fx, fy, geom)
-                else:  # circle row in a mixed table
-                    ccx = (row.minx + row.maxx) / 2.0
-                    ccy = (row.miny + row.maxy) / 2.0
-                    rr = float(row.radius)
-                    mask = (fx - ccx) ** 2 + (fy - ccy) ** 2 <= rr * rr
-                ys_out.append(gy.ravel()[mask])
-                xs_out.append(gx.ravel()[mask])
-                ls_out.append(np.full(int(mask.sum()), int(row.shape_id), dtype=np.int64))
-            if ys_out:
-                yield pd.DataFrame(
-                    {
-                        "y": np.concatenate(ys_out),
-                        "x": np.concatenate(xs_out),
-                        "label": np.concatenate(ls_out),
-                    }
-                )
-
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.util import PythonEvalType
-
-    return pandas_udf(_fill, returnType=schema, functionType=PythonEvalType.SQL_MAP_PANDAS_ITER_UDF)
+    for pdf in batches:
+        ys_out: list[np.ndarray] = []
+        xs_out: list[np.ndarray] = []
+        ls_out: list[np.ndarray] = []
+        for row in pdf.itertuples(index=False):
+            buf = row.wkb
+            if buf is None:
+                continue
+            kind, geom = W.decode(bytes(buf))
+            y0 = int(np.ceil(row.miny))
+            y1 = int(np.floor(row.maxy))
+            x0 = int(np.ceil(row.minx))
+            x1 = int(np.floor(row.maxx))
+            if y1 < y0 or x1 < x0:
+                continue
+            gy, gx = np.mgrid[y0 : y1 + 1, x0 : x1 + 1]
+            fy = gy.ravel().astype(float)
+            fx = gx.ravel().astype(float)
+            if kind == "polygon":
+                mask = P.points_in_polygon(fx, fy, geom)
+            elif kind == "multipolygon":
+                mask = P.points_in_multipolygon(fx, fy, geom)
+            else:  # circle row in a mixed table
+                ccx = (row.minx + row.maxx) / 2.0
+                ccy = (row.miny + row.maxy) / 2.0
+                rr = float(row.radius)
+                mask = (fx - ccx) ** 2 + (fy - ccy) ** 2 <= rr * rr
+            ys_out.append(gy.ravel()[mask])
+            xs_out.append(gx.ravel()[mask])
+            ls_out.append(np.full(int(mask.sum()), int(row.shape_id), dtype=np.int64))
+        if ys_out:
+            yield pd.DataFrame(
+                {
+                    "y": np.concatenate(ys_out),
+                    "x": np.concatenate(xs_out),
+                    "label": np.concatenate(ls_out),
+                }
+            )
 
 
 def rasterize_bins(

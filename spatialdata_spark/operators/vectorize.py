@@ -216,10 +216,8 @@ def labels_tiles_to_polygons(label_tiles: DataFrame, meta) -> DataFrame:
         .where("(gty >= 0) AND (gtx >= 0)")
     )
 
-    from spatialdata_spark.operators.raster import _apply_in_pandas_cached
-
-    edges = _apply_in_pandas_cached(contrib.groupBy("gty", "gtx"), _edges_udf(ts, dtype))
-    return _apply_in_pandas_cached(edges.groupBy("label"), _tile_assemble_udf())
+    edges = contrib.groupBy("gty", "gtx").applyInPandas(_edges_kernel(ts, dtype), _EDGE_SCHEMA)
+    return edges.groupBy("label").applyInPandas(_assemble, _SHAPES_SCHEMA)
 
 
 _EDGE_SCHEMA = T.StructType(
@@ -233,8 +231,7 @@ _EDGE_SCHEMA = T.StructType(
 )
 
 
-@lru_cache(maxsize=64)
-def _edges_udf(ts: int, dtype: str):
+def _edges_kernel(ts: int, dtype: str):
     def _edges(key, pdf):
         import numpy as np
         import pandas as pd
@@ -282,10 +279,7 @@ def _edges_udf(ts: int, dtype: str):
             return pd.DataFrame(columns=["label", "x0", "y0", "x1", "y1"])
         return pd.concat(frames)
 
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.util import PythonEvalType
-
-    return pandas_udf(_edges, returnType=_EDGE_SCHEMA, functionType=PythonEvalType.SQL_GROUPED_MAP_PANDAS_UDF)
+    return _edges
 
 
 _SHAPES_SCHEMA = T.StructType(
@@ -342,70 +336,64 @@ def _walk_rings(ex0, ey0, ex1, ey1):
                 rings.append(np.array(ring, dtype=float))
         return rings
 
-@lru_cache(maxsize=1)
-def _tile_assemble_udf():
-    def _assemble(key, pdf):
-        import numpy as np
-        import pandas as pd
 
-        from spatialdata_spark.geometry import predicates as P
-        from spatialdata_spark.geometry import wkb as W
+def _assemble(key, pdf):
+    import numpy as np
+    import pandas as pd
 
-        label = int(key[0])
-        rings = _walk_rings(
-            pdf["x0"].to_numpy(), pdf["y0"].to_numpy(), pdf["x1"].to_numpy(), pdf["y1"].to_numpy()
-        )
-        exteriors = []  # (ring, area)
-        holes = []
-        for r in rings:
-            a = P.ring_area(r)
-            (exteriors if a > 0 else holes).append((r, abs(a)))
-        # nest each hole into the smallest containing exterior
-        polys: list[list[np.ndarray]] = [[r] for r, _ in exteriors]
-        for hr, _ in holes:
-            # probe point: center of the first edge, offset a half unit
-            # to the interior-left (a pixel center of the label region)
-            p0, p1 = hr[0], hr[1]
-            mid = (p0 + p1) / 2.0
-            d = p1 - p0
-            probe = mid + np.array([-d[1], d[0]]) * 0.5
-            best = None
-            best_area = None
-            for i, (er, ea) in enumerate(exteriors):
-                if P.points_in_ring(np.array([probe[0]]), np.array([probe[1]]), er)[0]:
-                    if best is None or ea < best_area:
-                        best, best_area = i, ea
-            if best is not None:
-                polys[best].append(hr)
-        if not polys:
-            return pd.DataFrame(columns=[f.name for f in _SHAPES_SCHEMA.fields])
-        if len(polys) == 1:
-            buf = W.encode_polygon(polys[0])
-            kind = "polygon"
-        else:
-            buf = W.encode_multipolygon(polys)
-            kind = "multipolygon"
-        allv = np.vstack([r for poly in polys for r in poly])
-        return pd.DataFrame(
-            [
-                (
-                    label,
-                    kind,
-                    buf,
-                    float(allv[:, 0].min()),
-                    float(allv[:, 1].min()),
-                    float(allv[:, 0].max()),
-                    float(allv[:, 1].max()),
-                    None,
-                )
-            ],
-            columns=[f.name for f in _SHAPES_SCHEMA.fields],
-        )
+    from spatialdata_spark.geometry import predicates as P
+    from spatialdata_spark.geometry import wkb as W
 
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.util import PythonEvalType
-
-    return pandas_udf(_assemble, returnType=_SHAPES_SCHEMA, functionType=PythonEvalType.SQL_GROUPED_MAP_PANDAS_UDF)
+    label = int(key[0])
+    rings = _walk_rings(
+        pdf["x0"].to_numpy(), pdf["y0"].to_numpy(), pdf["x1"].to_numpy(), pdf["y1"].to_numpy()
+    )
+    exteriors = []  # (ring, area)
+    holes = []
+    for r in rings:
+        a = P.ring_area(r)
+        (exteriors if a > 0 else holes).append((r, abs(a)))
+    # nest each hole into the smallest containing exterior
+    polys: list[list[np.ndarray]] = [[r] for r, _ in exteriors]
+    for hr, _ in holes:
+        # probe point: center of the first edge, offset a half unit
+        # to the interior-left (a pixel center of the label region)
+        p0, p1 = hr[0], hr[1]
+        mid = (p0 + p1) / 2.0
+        d = p1 - p0
+        probe = mid + np.array([-d[1], d[0]]) * 0.5
+        best = None
+        best_area = None
+        for i, (er, ea) in enumerate(exteriors):
+            if P.points_in_ring(np.array([probe[0]]), np.array([probe[1]]), er)[0]:
+                if best is None or ea < best_area:
+                    best, best_area = i, ea
+        if best is not None:
+            polys[best].append(hr)
+    if not polys:
+        return pd.DataFrame(columns=[f.name for f in _SHAPES_SCHEMA.fields])
+    if len(polys) == 1:
+        buf = W.encode_polygon(polys[0])
+        kind = "polygon"
+    else:
+        buf = W.encode_multipolygon(polys)
+        kind = "multipolygon"
+    allv = np.vstack([r for poly in polys for r in poly])
+    return pd.DataFrame(
+        [
+            (
+                label,
+                kind,
+                buf,
+                float(allv[:, 0].min()),
+                float(allv[:, 1].min()),
+                float(allv[:, 0].max()),
+                float(allv[:, 1].max()),
+                None,
+            )
+        ],
+        columns=[f.name for f in _SHAPES_SCHEMA.fields],
+    )
 
 
 def labels_to_polygons(labels_long: DataFrame) -> DataFrame:
@@ -418,57 +406,46 @@ def labels_to_polygons(labels_long: DataFrame) -> DataFrame:
     the label's pixel-union outline as a rectilinear hull; exact
     marching squares lands with the raster tile layer.
     """
-    from spatialdata_spark.operators.raster import _apply_in_pandas_cached
+    return labels_long.filter(F.col("label") != 0).groupBy("label").applyInPandas(_outline, _SHAPES_SCHEMA)
 
-    return _apply_in_pandas_cached(
-        labels_long.filter(F.col("label") != 0).groupBy("label"), _outline_udf()
+
+def _outline(pdf):
+    import numpy as np
+    import pandas as pd
+
+    from spatialdata_spark.geometry import wkb as W
+
+    label = int(pdf["label"].iloc[0])
+    xs = pdf["x"].to_numpy()
+    ys = pdf["y"].to_numpy()
+    minx, maxx = float(xs.min()), float(xs.max() + 1)
+    miny, maxy = float(ys.min()), float(ys.max() + 1)
+    # rectilinear hull: per-pixel-row x-extent, stair-stepped so each
+    # row contributes its full unit height (exact for row-convex
+    # regions, conservative otherwise)
+    rows = []
+    for y in np.unique(ys):
+        m = ys == y
+        rows.append((float(y), float(xs[m].min()), float(xs[m].max() + 1)))
+    left = []
+    right = []
+    for y, x0, x1 in rows:  # ascending y up the left side
+        left += [(x0, y), (x0, y + 1)]
+    for y, x0, x1 in reversed(rows):  # descending y down the right side
+        right += [(x1, y + 1), (x1, y)]
+    ring = np.array(left + right)
+    return pd.DataFrame(
+        [
+            (
+                label,
+                "polygon",
+                W.encode_polygon([ring]),
+                minx,
+                miny,
+                maxx,
+                maxy,
+                None,
+            )
+        ],
+        columns=["shape_id", "kind", "wkb", "minx", "miny", "maxx", "maxy", "radius"],
     )
-
-
-@lru_cache(maxsize=1)
-def _outline_udf():
-    def _outline(pdf):
-        import numpy as np
-        import pandas as pd
-
-        from spatialdata_spark.geometry import wkb as W
-
-        label = int(pdf["label"].iloc[0])
-        xs = pdf["x"].to_numpy()
-        ys = pdf["y"].to_numpy()
-        minx, maxx = float(xs.min()), float(xs.max() + 1)
-        miny, maxy = float(ys.min()), float(ys.max() + 1)
-        # rectilinear hull: per-pixel-row x-extent, stair-stepped so each
-        # row contributes its full unit height (exact for row-convex
-        # regions, conservative otherwise)
-        rows = []
-        for y in np.unique(ys):
-            m = ys == y
-            rows.append((float(y), float(xs[m].min()), float(xs[m].max() + 1)))
-        left = []
-        right = []
-        for y, x0, x1 in rows:  # ascending y up the left side
-            left += [(x0, y), (x0, y + 1)]
-        for y, x0, x1 in reversed(rows):  # descending y down the right side
-            right += [(x1, y + 1), (x1, y)]
-        ring = np.array(left + right)
-        return pd.DataFrame(
-            [
-                (
-                    label,
-                    "polygon",
-                    W.encode_polygon([ring]),
-                    minx,
-                    miny,
-                    maxx,
-                    maxy,
-                    None,
-                )
-            ],
-            columns=["shape_id", "kind", "wkb", "minx", "miny", "maxx", "maxy", "radius"],
-        )
-
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.util import PythonEvalType
-
-    return pandas_udf(_outline, returnType=_SHAPES_SCHEMA, functionType=PythonEvalType.SQL_GROUPED_MAP_PANDAS_UDF)

@@ -115,19 +115,6 @@ def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     return scored.select(F.col(id_col), pred.alias("lang_pred"))
 
 
-def doc_fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Deterministic 64-bit rolling-hash fingerprint (content-defined):
-    xxhash64 of the normalized text + first/last 64 chars — expressions
-    only."""
-    norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    return docs.select(
-        F.col(id_col),
-        F.xxhash64(norm).alias("fingerprint"),
-        F.xxhash64(F.substring(norm, 1, 64)).alias("prefix_fp"),
-        F.xxhash64(F.substring(F.reverse(norm), 1, 64)).alias("suffix_fp"),
-    )
-
-
 def vocab_topk(
     docs: DataFrame,
     k: int = 100,

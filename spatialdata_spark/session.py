@@ -40,7 +40,7 @@ def broadcast_if_single_host(df: DataFrame) -> DataFrame:
 def get_spark(app_name: str = "spatialdata-spark", cores: int | None = None) -> SparkSession:
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    spark = (
+    return (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cores))
@@ -77,8 +77,6 @@ def get_spark(app_name: str = "spatialdata-spark", cores: int | None = None) -> 
         .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
         .getOrCreate()
     )
-    _invalidate_udf_caches_on_new_context(spark)
-    return spark
 
 
 def _worker_pythonpath() -> str:
@@ -88,43 +86,3 @@ def _worker_pythonpath() -> str:
     user = os.environ.get("PYTHONPATH", "")
     return os.pathsep.join(p for p in (user, root) if p)
 
-
-# SparkContext id the keyed-factory UDF caches were built against.
-_UDF_CACHE_CTX: list = [None]
-
-
-def _invalidate_udf_caches_on_new_context(spark: SparkSession) -> None:
-    """The lru_cache'd Arrow-kernel factories (raster/transform/
-    vectorize/aggregate/spatial_query) memoize pandas_udf wrappers, and
-    the module-level ``@pandas_udf`` constants cache a ``_judf``
-    handle, both bound to the session that first used them; after a
-    stop()/restart in the same process the stale JVM handle raises py4j
-    errors.  When a DIFFERENT SparkContext appears: sweep every factory
-    cache (kernels rebuild + re-register), and reset each module-level
-    UDF constant's ``_judf_placeholder`` (the ``UserDefinedFunction``
-    lives in the wrapper's closure; clearing the placeholder makes
-    pyspark re-create the JVM UDF against the live session on next
-    use)."""
-    ctx = spark.sparkContext
-    if _UDF_CACHE_CTX[0] is ctx:
-        return
-    if _UDF_CACHE_CTX[0] is not None:
-        import sys
-
-        for mod_name, mod in list(sys.modules.items()):
-            if not mod_name.startswith("spatialdata_spark") and mod_name != "__spark_entry__":
-                continue
-            for obj in vars(mod).values():
-                clear = getattr(obj, "cache_clear", None)
-                if callable(clear):
-                    clear()
-                    continue
-                if callable(obj) and getattr(obj, "evalType", None) is not None:
-                    for cell in getattr(obj, "__closure__", None) or ():
-                        try:
-                            v = cell.cell_contents
-                        except ValueError:
-                            continue
-                        if hasattr(v, "_judf_placeholder"):
-                            v._judf_placeholder = None
-    _UDF_CACHE_CTX[0] = ctx

@@ -71,7 +71,7 @@ def codecs_doc(codec: str | None, typesize: int) -> list[dict]:
             }
         )
     elif codec == "zstd":
-        chain.append({"name": "zstd", "configuration": {"level": 0, "checksum": False}})
+        chain.append({"name": "zstd", "configuration": {"level": 1, "checksum": True}})
     else:
         raise ValueError(f"no zarr v3 codec mapping for {codec!r}")
     return chain

@@ -231,11 +231,6 @@ def write_group(path: str, attrs: dict | None = None, zarr_format: int = 2) -> N
         _write_json(os.path.join(path, ".zattrs"), attrs)
 
 
-def read_attrs(path: str) -> dict:
-    p = os.path.join(path, ".zattrs")
-    return _read_json(p) if os.path.exists(p) else {}
-
-
 # ---------------------------------------------------------------------------
 # driver-side array read/write (small arrays, metadata, tests)
 # ---------------------------------------------------------------------------

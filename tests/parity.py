@@ -137,6 +137,12 @@ def run_parity(sf_dir: str, only: list[str] | None = None, float_tol: float = 0.
         ok, msg = compare(sdf, odf, float_tol)
         return name, (ok, f"{msg} ({len(sdf)} rows)")
 
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    # no construction or execution may leave a temp view in the
+    # session catalog (operators bind inputs via spark.sql kwargs)
+    views_before = temp_views()
     futures = []
     with ThreadPoolExecutor(max_workers=workers) as pool:
         for name, fn in qs.items():
@@ -166,6 +172,9 @@ def run_parity(sf_dir: str, only: list[str] | None = None, float_tol: float = 0.
         for fut in futures:
             name, res = fut.result()
             results[name] = res
+    leaked = temp_views() - views_before
+    if leaked:
+        results["<catalog>"] = (False, f"temp views left behind: {sorted(leaked)}")
     return results
 
 

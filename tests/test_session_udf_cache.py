@@ -1,78 +1,66 @@
-"""The keyed-factory Arrow-kernel caches must be swept when get_spark
-sees a NEW SparkContext: a pandas_udf memoized by an lru_cache factory
-binds its JVM registration to the session that first used it, and a
-stop()/restart in the same process would otherwise hand every consumer
-a stale handle (r15 ADVICE item)."""
+"""Session lifecycle: the library keeps working across a SparkSession
+stop and restart in one process, and ``get_spark`` hands the Python
+workers the library root without dropping the caller's own path."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
+
+import pytest
 
 import spatialdata_spark.session as S
-from spatialdata_spark.operators import raster
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_SF_DIR = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
+
+# One query per kind of Python code a plan can carry: a mapInPandas
+# raster kernel, an applyInPandas grouped kernel, a module-level
+# @pandas_udf (``aggregate._pip``) and a cached scalar-UDF factory
+# (``spatial_query._ring_pip_udf``).
+_RESTART_QUERIES = ["rt_affine_resample", "rt_halo_boxsum", "ag_fractions", "sq_polygon_concave"]
+
+_RESTART_SCRIPT = """
+import json, sys
+repo, sf_dir, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+sys.path[:0] = [repo, repo + "/tests"]
+import __spark_entry__ as entry
+from parity import compare, duckdb_conn
+from spatialdata_spark.session import get_spark
+
+con = duckdb_conn(sf_dir)
+qs, oracles = entry.queries(), entry.oracle_sql()
+out = []
+for run in (0, 1):
+    spark = get_spark("restart-check", cores=2)
+    spark.sparkContext.setLogLevel("ERROR")
+    for name in names:
+        ok, msg = compare(qs[name](spark, sf_dir).toPandas(), con.execute(oracles[name]).fetchdf())
+        out.append([run, name, bool(ok), msg])
+    spark.stop()
+print(json.dumps(out))
+"""
 
 
-class _FakeCache:
-    def __init__(self, calls):
-        self._calls = calls
-
-    def cache_clear(self):
-        self._calls.append(1)
-
-
-class _Ctx:
-    pass
-
-
-class _FakeSpark:
-    def __init__(self, ctx):
-        self.sparkContext = ctx
-
-
-def test_udf_cache_sweep_on_context_change():
-    calls: list[int] = []
-    raster._test_fake_cache = _FakeCache(calls)
-    saved = S._UDF_CACHE_CTX[0]
-    try:
-        c1, c2 = _Ctx(), _Ctx()
-        S._UDF_CACHE_CTX[0] = None
-        S._invalidate_udf_caches_on_new_context(_FakeSpark(c1))
-        assert not calls, "first context must not sweep (nothing was built)"
-        S._invalidate_udf_caches_on_new_context(_FakeSpark(c1))
-        assert not calls, "same context must not sweep"
-        S._invalidate_udf_caches_on_new_context(_FakeSpark(c2))
-        assert calls, "a different context must sweep every factory cache"
-    finally:
-        del raster._test_fake_cache
-        S._UDF_CACHE_CTX[0] = saved
-
-
-def test_module_level_udf_placeholder_reset_on_context_change():
-    """Module-level @pandas_udf constants cache a _judf JVM handle in
-    the UserDefinedFunction inside the wrapper's closure; the sweep must
-    reset it so a restarted session re-creates the JVM UDF."""
-    from spatialdata_spark.operators.aggregate import _pip
-
-    udf_obj = None
-    for cell in _pip.__closure__ or ():
-        v = cell.cell_contents
-        if hasattr(v, "_judf_placeholder"):
-            udf_obj = v
-    assert udf_obj is not None, "_pip wrapper must expose its UserDefinedFunction"
-
-    saved = S._UDF_CACHE_CTX[0]
-    sentinel = object()
-    udf_obj._judf_placeholder = sentinel
-    try:
-        c1, c2 = _Ctx(), _Ctx()
-        S._UDF_CACHE_CTX[0] = c1
-        S._invalidate_udf_caches_on_new_context(_FakeSpark(c2))
-        assert udf_obj._judf_placeholder is None, (
-            "sweep must clear the stale _judf handle of module-level UDFs"
-        )
-    finally:
-        udf_obj._judf_placeholder = None
-        S._UDF_CACHE_CTX[0] = saved
+@pytest.mark.skipif(not os.path.isdir(_SF_DIR), reason="testdata not present")
+def test_queries_match_oracle_across_session_restart():
+    """Runs in a subprocess: stopping the session here would stop the
+    suite's shared one."""
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT, _REPO, _SF_DIR, *_RESTART_QUERIES],
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    results = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert [(run, name) for run, name, _, _ in results] == [
+        (run, name) for run in (0, 1) for name in _RESTART_QUERIES
+    ]
+    failures = [r for r in results if not r[2]]
+    assert not failures, failures
 
 
 def test_worker_pythonpath_keeps_user_entries(monkeypatch):

@@ -34,6 +34,25 @@ def test_v3_array_roundtrip_codecs(tmp_path, codec):
     np.testing.assert_array_equal(zarr_read_array(p), a)
 
 
+def test_v3_zstd_config_matches_written_frames(tmp_path):
+    """The zstd codec configuration in zarr.json describes the frames
+    the writer emits: libzstd's default level and a Content_Checksum
+    flag (frame-header descriptor byte 4, bit 2) on every chunk."""
+    import pyarrow as pa
+
+    a = np.arange(64 * 64, dtype=np.uint16).reshape(64, 64)
+    p = str(tmp_path / "a")
+    zarr_write_array(p, a, chunks=(32, 32), compressor="zstd", zarr_format=3)
+    doc = json.load(open(os.path.join(p, "zarr.json")))
+    (cfg,) = [c["configuration"] for c in doc["codecs"] if c["name"] == "zstd"]
+    assert cfg["level"] == pa.Codec.default_compression_level("zstd")
+    for key in ("0/0", "0/1", "1/0", "1/1"):
+        frame = open(os.path.join(p, "c", *key.split("/")), "rb").read()
+        assert frame[:4] == b"\x28\xb5\x2f\xfd"
+        assert bool(frame[4] & 0x04) is cfg["checksum"]
+    np.testing.assert_array_equal(zarr_read_array(p), a)
+
+
 def test_v3_chunk_keys_are_c_prefixed(tmp_path):
     a = np.ones((8, 8), dtype=np.int64)
     p = str(tmp_path / "a")

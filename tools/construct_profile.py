@@ -3,14 +3,15 @@
     python tools/construct_profile.py [--reps N] [--cprofile QUERY] [q1 q2 ...]
 
 Constructs each query's DataFrame repeatedly (after one warm construct
-so schema memos / UDF registrations are primed) and reports seconds per
-construction.  With --cprofile, dumps the top cumulative entries for
-one query's construction loop instead.
+so schema memos / UDF registrations are primed) and reports the min and
+median milliseconds per construction.  With --cprofile, dumps the top
+cumulative entries for one query's construction loop instead.
 """
 
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 import time
 
@@ -64,13 +65,15 @@ def main() -> None:
     for name in names:
         fn = qs[name]
         fn(spark, sf_dir)  # warm (schema memo, UDF registration)
-        best = None
+        times = []
         for _ in range(reps):
             t0 = time.perf_counter()
             fn(spark, sf_dir)
-            dt = time.perf_counter() - t0
-            best = dt if best is None or dt < best else best
-        print(f"{name:32s} {best*1000:8.1f} ms/construct")
+            times.append(time.perf_counter() - t0)
+        print(
+            f"{name:32s} {min(times)*1000:8.1f} ms/construct min"
+            f" {statistics.median(times)*1000:8.1f} median"
+        )
     spark.stop()
 
 
