@@ -50,39 +50,6 @@ def morton_code(
     return code
 
 
-def morton_code_3d(
-    x: Column,
-    y: Column,
-    z: Column,
-    extent: dict[str, tuple[float, float]],
-    bits: int = 10,
-) -> Column:
-    """Three-axis interleaved Morton code (3*bits result bits) for 3D
-    point clouds — same pruning story with a z predicate in play."""
-    if bits < 1 or bits > 20:
-        raise ValueError("bits must be in [1, 20] for 3 axes")
-    scale = (1 << bits) - 1
-
-    def q(col, lo, hi):
-        return F.least(
-            F.lit(scale),
-            F.greatest(F.lit(0), ((col - F.lit(lo)) / F.lit(hi - lo) * scale).cast("long")),
-        )
-
-    xi = q(x, *extent["x"])
-    yi = q(y, *extent["y"])
-    zi = q(z, *extent["z"])
-    code = F.lit(0).cast("long")
-    for b in range(bits):
-        code = (
-            code
-            + F.shiftleft(F.shiftright(xi, b).bitwiseAND(F.lit(1)), 3 * b)
-            + F.shiftleft(F.shiftright(yi, b).bitwiseAND(F.lit(1)), 3 * b + 1)
-            + F.shiftleft(F.shiftright(zi, b).bitwiseAND(F.lit(1)), 3 * b + 2)
-        )
-    return code
-
-
 def write_points_zordered(
     df: DataFrame,
     path: str,

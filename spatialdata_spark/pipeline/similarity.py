@@ -92,28 +92,6 @@ LIMIT {int(k)}""",
     )
 
 
-def cosine_self_join_topk(
-    embeddings: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_threshold: int = 20000,
-) -> DataFrame:
-    """All-pairs brute-force top-k neighbors (small corpora / oracle
-    baseline).  Guarded: refuses corpora above ``block_threshold`` —
-    use :func:`lsh_bucketed_topk` at scale."""
-    n = embeddings.count()
-    if n > block_threshold:
-        raise ValueError(f"{n} rows: brute-force all-pairs is O(n^2); use lsh_bucketed_topk")
-    a = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).cast("array<double>").alias("va"))
-    b = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).cast("array<double>").alias("vb"))
-    pairs = a.join(b, F.col("id_a") != F.col("id_b"))
-    sim = _dot_expr(F.col("va"), F.col("vb")) / (_norm_expr(F.col("va")) * _norm_expr(F.col("vb")))
-    scored = pairs.select("id_a", "id_b", sim.alias("cosine"))
-    w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.col("id_b"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).drop("rank")
-
-
 def random_hyperplane_buckets(
     embeddings: DataFrame,
     num_planes: int = 8,
@@ -651,103 +629,6 @@ def random_hyperplane_buckets_arrow(
             )
 
     return embeddings.select(id_col, vec_col).mapInPandas(gen, schema)
-
-
-def multiprobe_hyperplane_buckets(
-    embeddings: DataFrame,
-    num_planes: int = 8,
-    n_probes: int = 2,
-    dim: int | None = None,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes=None,
-) -> DataFrame:
-    """Multi-probe LSH (Lv et al., VLDB 2007): besides its home bucket,
-    each vector also lands in the buckets reached by flipping its
-    lowest-|margin| sign bits — the planes it was closest to.  Recall
-    rises like adding hash tables, at the cost of ``n_probes`` rows per
-    vector instead of a second full table.
-
-    Arrow GEMM path: projections, margin ranking and bit flips are one
-    numpy pass; output has ``n_probes`` rows per vector (probe 0 = home
-    bucket).  Join shapes downstream are unchanged — still a bucket
-    equi-join, work Σ bucket² over the enlarged assignment.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    if planes is not None:
-        planes = np.asarray(planes, dtype=float)
-        num_planes = len(planes)
-    else:
-        if dim is None:
-            first = embeddings.select(F.size(vec_col).alias("d")).first()
-            dim = int(first["d"])
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((num_planes, dim))
-    if not (1 <= n_probes <= num_planes + 1):
-        raise ValueError("need 1 <= n_probes <= num_planes + 1")
-    pt = planes.T.copy()
-    weights = (1 << np.arange(num_planes)).astype(np.int64)
-    schema = T.StructType(
-        [f for f in embeddings.schema.fields if f.name in (id_col, vec_col)]
-        + [T.StructField("probe", T.IntegerType()), T.StructField("bucket", T.IntegerType())]
-    )
-
-    def gen(iterator):
-        for pdf in iterator:
-            v = np.array([np.asarray(x, dtype=float) for x in pdf[vec_col]])
-            n = len(v)
-            if n == 0:
-                yield pd.DataFrame({id_col: [], vec_col: [], "probe": [], "bucket": []})
-                continue
-            proj = v @ pt
-            home = ((proj > 0) @ weights).astype(np.int64)
-            # planes ranked by |margin| ascending: the flips most likely
-            # to recover a near neighbor on the other side
-            order = np.argsort(np.abs(proj), axis=1)
-            ids = np.repeat(pdf[id_col].to_numpy(), n_probes)
-            vecs = [x for x in pdf[vec_col] for _ in range(n_probes)]
-            probes = np.tile(np.arange(n_probes), n)
-            buckets = np.empty(n * n_probes, dtype=np.int64)
-            buckets[0::n_probes] = home
-            for p in range(1, n_probes):
-                buckets[p::n_probes] = home ^ weights[order[:, p - 1]]
-            yield pd.DataFrame(
-                {id_col: ids, vec_col: vecs, "probe": probes.astype("int32"),
-                 "bucket": buckets.astype("int32")}
-            )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(gen, schema)
-
-
-def multiprobe_topk(
-    embeddings: DataFrame,
-    k: int = 5,
-    num_planes: int = 8,
-    n_probes: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes=None,
-) -> DataFrame:
-    """Approximate all-pairs top-k over the multi-probe assignment:
-    candidates are pairs sharing ANY probed bucket (distinct-ed before
-    scoring so a pair is scored once), then per-id window top-k —
-    higher recall than single-probe at the same plane count."""
-    bucketed = multiprobe_hyperplane_buckets(
-        embeddings, num_planes, n_probes, None, seed, id_col, vec_col, planes
-    )
-    a = bucketed.select("bucket", F.col(id_col).alias("id_a"))
-    b = bucketed.select("bucket", F.col(id_col).alias("id_b"))
-    cand = a.join(b, "bucket").filter(F.col("id_a") != F.col("id_b")).select("id_a", "id_b").distinct()
-    va = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).cast("array<double>").alias("va"))
-    vb = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).cast("array<double>").alias("vb"))
-    sim = _dot_expr(F.col("va"), F.col("vb")) / (_norm_expr(F.col("va")) * _norm_expr(F.col("vb")))
-    scored = cand.join(va, "id_a").join(vb, "id_b").select("id_a", "id_b", sim.alias("cosine"))
-    w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.col("id_b"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).drop("rank")
 
 
 def centroid_cosine(

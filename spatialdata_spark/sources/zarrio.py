@@ -814,14 +814,6 @@ def consolidate_metadata(path: str) -> dict:
     return doc
 
 
-def read_consolidated_metadata(path: str) -> dict | None:
-    """Load ``.zmetadata`` if present: ``{key: document}`` for every
-    metadata document in the store, else None.  Accepts a local path or
-    http(s) URL."""
-    doc = read_consolidated_doc(path)
-    return None if doc is None else doc["metadata"]
-
-
 def read_consolidated_doc(path: str) -> dict | None:
     """The full ``.zmetadata`` document (metadata + file_manifest)."""
     from spatialdata_spark.sources.fetch import fetcher_for

@@ -1,14 +1,13 @@
-"""Streaming / event-time operators over the events table.
+"""Event-time window operators over the events table, batch only.
 
-Extension scope (the reference has none — SURVEY.md §2.9): tumbling /
-sliding / session windows with watermarks, expressible both as batch
-(for the oracle) and as Structured Streaming (readStream on the same
-parquet schema).
+Extension scope (the reference has no streaming — SURVEY.md §2.9):
+tumbling, sliding and session windows as batch DataFrame plans, each
+checked against a DuckDB oracle by the ``st_*`` registry rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -39,8 +38,7 @@ def sliding_window_agg(events: DataFrame, width: str = "1 hour", slide: str = "3
 
 
 def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Per-user sessionization via lag + cumulative gap counting — the
-    batch formulation (streaming uses session_window)."""
+    """Per-user sessionization via lag + cumulative gap counting."""
     gap = gap_minutes * 60
     w_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
     with_gap = events.withColumn(
@@ -63,667 +61,4 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
             F.unix_timestamp(F.min("ts")).alias("session_start"),
             F.unix_timestamp(F.max("ts")).alias("session_end"),
         )
-    )
-
-
-def streaming_sessionize_stateful(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    gap_minutes: int = 30,
-    watermark: str = "2 hours",
-    query_name: str = "sessions_stateful",
-):
-    """Custom stateful streaming sessionization via
-    ``applyInPandasWithState`` — the extension surface for operators
-    Spark's built-ins can't express (per-key custom state machines).
-
-    State per user: (session_start_epoch, last_seen_epoch, n_events).
-    A batch's events extend the open session or close it and open a new
-    one; closed sessions are emitted, the open session stays in state
-    (emitted on timeout in a live stream; with availableNow + stop we
-    emit only closed sessions — callers flush by sending a sentinel or
-    reading state later).  Timeouts use processing time for simplicity.
-    """
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("session_start", T.LongType()),
-            T.StructField("session_end", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("start", T.LongType()),
-            T.StructField("last", T.LongType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-    gap = gap_minutes * 60
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        user_id = int(key[0])
-        ts = []
-        for pdf in pdfs:
-            ts.extend(int(v.timestamp()) for v in pdf["ts"])
-        ts.sort()
-        if state.exists:
-            start, last, n = state.get
-        else:
-            start = last = None
-            n = 0
-        closed = []
-        for t in ts:
-            if last is None:
-                start, last, n = t, t, 1
-            elif t - last > gap:
-                closed.append((user_id, start, last, n))
-                start, last, n = t, t, 1
-            else:
-                last = t
-                n += 1
-        if last is not None:
-            state.update((start, last, n))
-        if closed:
-            yield pd.DataFrame(closed, columns=["user_id", "session_start", "session_end", "n_events"])
-
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    sessions = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.col("user_id"))
-        .applyInPandasWithState(fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout)
-    )
-    return (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_tumbling_query(spark: SparkSession, source_dir: str, schema, width: str = "1 hour",
-                             watermark: str = "10 minutes"):
-    """True Structured-Streaming variant: readStream over the parquet
-    directory, watermarked tumbling agg, memory sink.  Returns the
-    started query (caller: processAllAvailable() then read the sink)."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-    # complete mode so finite test batches surface still-open windows;
-    # a production file/kafka sink would use append + the watermark
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("events_windowed")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_tumbling_append(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    width: str = "1 hour",
-    watermark: str = "10 minutes",
-    query_name: str = "events_windowed_append",
-):
-    """Append-mode watermarked tumbling windows: a window is emitted
-    exactly once, after the watermark passes its end; events arriving
-    later than the watermark are DROPPED (not re-aggregated).
-
-    ``maxFilesPerTrigger=1`` makes each source file its own micro-batch
-    so the watermark advances file-by-file — the shape a kafka-fed
-    production job has, testable from parquet.
-    """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "n")
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_dedup(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    id_col: str = "event_id",
-    watermark: str = "1 hour",
-    query_name: str = "events_deduped",
-):
-    """Exactly-once ingest dedup: watermarked ``dropDuplicates`` on the
-    event id — the Structured-Streaming pattern for at-least-once
-    sources feeding a training-data pipeline.  State for an id is kept
-    until the watermark passes, bounding memory; replays older than the
-    watermark are already outside the at-least-once window by contract.
-    """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    deduped = stream.withWatermark("ts", watermark).dropDuplicates([id_col, "ts"])
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_dedup_within_watermark(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    id_col: str = "event_id",
-    watermark: str = "1 hour",
-    query_name: str = "events_deduped_ww",
-):
-    """Ingest dedup by business key ONLY — ``dropDuplicatesWithinWatermark``
-    (Spark 3.5+), the variant for at-least-once sources whose retries
-    carry a DIFFERENT event time (a retried send gets restamped, so the
-    ``(id, ts)`` exact-match dedup of :func:`streaming_dedup` would pass
-    the replay through).  Two records with the same id dedup as long as
-    they arrive within the watermark delay of each other; state for an
-    id expires once the watermark passes its first sighting, bounding
-    memory exactly like the exact-match form.
-    """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    deduped = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        [id_col]
-    )
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_enrich(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    dim: DataFrame,
-    on: str,
-    query_name: str = "events_enriched",
-):
-    """Stream-static enrichment: each micro-batch broadcast-joins the
-    (static, slowly-changing) dimension table — the canonical "attach
-    user/document metadata on ingest" pipeline stage.  The static side
-    re-resolves per batch, so replacing the dim table's underlying files
-    picks up new attributes without restarting the stream; the join is
-    a broadcast hash join in every micro-batch, nothing stateful, so
-    throughput scales with the source alone."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    enriched = stream.join(F.broadcast(dim), on, "left")
-    return (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_interval_join(
-    spark: SparkSession,
-    left_dir: str,
-    left_schema,
-    right_dir: str,
-    right_schema,
-    key: str = "user_id",
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    within: str = "1 hour",
-    watermark: str = "10 minutes",
-    query_name: str = "stream_joined",
-    how: str = "inner",
-    max_files_per_trigger: int | None = None,
-):
-    """STREAM-STREAM interval join — the streaming twin of
-    ``operators.temporal.interval_join`` (whose batch semantics the
-    registry's ``st_interval_conversions`` oracles): match each left
-    event to right events of the same key whose timestamp falls in
-    ``[left_ts, left_ts + within]`` — attribution (click -> purchase
-    within the window) over two LIVE streams.
-
-    The Structured Streaming contract this encodes (the part the batch
-    twin doesn't need):
-
-    * BOTH sides carry a watermark, and the join condition bounds the
-      event-time gap in BOTH directions (equi-key + range) — that pair
-      is what lets the engine expire join state: a right row can be
-      evicted once the watermark passes ``right_ts`` (no earlier left
-      row may still arrive that matches), and symmetrically.  Without
-      the time bound the state store grows forever — Spark rejects
-      unbounded stream-stream inner joins without watermarks for
-      exactly this reason.
-    * State size is bounded by (events per key-window) x (watermark +
-      within) — per-key, per-executor constant at any corpus rate.
-    * Inner append-mode emission: a joined row emits as soon as both
-      sides have arrived (no window-close wait).
-    * ``how="left_outer"``: an UNMATCHED left row emits with NULL right
-      columns only once the watermark proves no match can still arrive
-      (left_ts + within + watermark has passed) — the attribution
-      report's "click that never converted" rows, produced by the
-      state-store timeout rather than a batch anti-join.
-
-    Returns the started query writing to the ``query_name`` memory
-    sink (tests); swap the sink for kafka/delta in production.
-    """
-    if how not in ("inner", "left_outer"):
-        raise ValueError(
-            f"streaming_interval_join: how must be inner|left_outer (got {how!r})"
-        )
-    # outer results emit in the micro-batch AFTER the watermark passes a
-    # row's horizon: a single availableNow batch would never emit them —
-    # pass max_files_per_trigger=1 so file sources advance the watermark
-    # batch-by-batch (the kafka-fed production shape, testable on files)
-    def _src(dir_, schema_):
-        r = spark.readStream.schema(schema_)
-        if max_files_per_trigger:
-            r = r.option("maxFilesPerTrigger", int(max_files_per_trigger))
-        return r.parquet(dir_)
-    lt, rt = "__lts", "__rts"
-    left = (
-        _src(left_dir, left_schema)
-        .withColumnRenamed(left_ts, lt)
-        .withColumnRenamed(key, "__lkey")
-        .withWatermark(lt, watermark)
-    )
-    right = (
-        _src(right_dir, right_schema)
-        .withColumnRenamed(right_ts, rt)
-        .withColumnRenamed(key, "__rkey")
-        .withWatermark(rt, watermark)
-    )
-    # passthrough columns resolve via the side's DataFrame reference
-    # (never a bare name — a name both schemas carry, e.g. 'amount',
-    # would be ambiguous at plan time); a right column colliding with
-    # a left column or a reserved output name gets a right_ prefix
-    lcols = [c for c in left.columns if c not in ("__lkey", lt)]
-    rcols = [c for c in right.columns if c not in ("__rkey", rt)]
-    reserved = {key, "left_ts", "right_ts"}
-    lout, taken = [], set(reserved)
-    for c in lcols:
-        name = c
-        while name in taken:  # repeat until free: a schema may already
-            name = f"left_{name}"  # carry the prefixed name itself
-        lout.append(left[c].alias(name))
-        taken.add(name)
-    rout = []
-    for c in rcols:
-        name = c
-        while name in taken:
-            name = f"right_{name}"
-        rout.append(right[c].alias(name))
-        taken.add(name)
-    joined = left.join(
-        right,
-        F.expr(
-            f"__lkey = __rkey AND {rt} >= {lt} AND {rt} <= {lt} + interval {within}"
-        ),
-        how,
-    ).select(
-        F.col("__lkey").alias(key),
-        F.col(lt).alias("left_ts"),
-        F.col(rt).alias("right_ts"),
-        *lout,
-        *rout,
-    )
-    return (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_topk_rate(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    key_col: str = "event_type",
-    width: str = "1 hour",
-    watermark: str = "10 minutes",
-    query_name: str = "events_rates",
-):
-    """Windowed per-key event rates (count + mean value) — the
-    monitoring aggregate a training-data ingest runs alongside dedup.
-    Append mode: each (window, key) row is final once the watermark
-    passes, ready for an alerting sink."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), key_col)
-        .agg(F.count(F.lit(1)).alias("n"), F.avg("value").alias("mean_value"))
-        .select(F.col("w.start").alias("window_start"), key_col, "n", "mean_value")
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def approx_distinct_daily(events: DataFrame, rsd: float = 0.02) -> DataFrame:
-    """Daily unique users via the HyperLogLog++ sketch
-    (``approx_count_distinct``): fixed-size state per day regardless of
-    cardinality — the sketch path for dashboards where the exact
-    distinct's full shuffle of user ids isn't worth it.  ``rsd`` is the
-    target relative standard deviation (Spark sizes the sketch from
-    it).  Pair with the exact `st_distinct_users_daily` when
-    correctness gates the number."""
-    return (
-        events.groupBy(F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"))
-        .agg(F.approx_count_distinct("user_id", rsd).alias("approx_users"))
-    )
-
-
-def approx_value_quantiles(events: DataFrame, probs=(0.5, 0.9, 0.99), accuracy: int = 10000) -> DataFrame:
-    """Per-event-type value quantiles via the Greenwald-Khanna sketch
-    (``percentile_approx``): mergeable bounded-size state, the
-    streaming-compatible alternative to the exact sort-based
-    ``percentile``.  ``accuracy`` trades state size for rank error
-    (err <= 1/accuracy)."""
-    p_list = ", ".join(str(float(p)) for p in probs)
-    agg = F.expr(f"percentile_approx(value, array({p_list}), {int(accuracy)})")
-    out = events.groupBy("event_type").agg(agg.alias("__qs"))
-    cols = [F.col("__qs")[i].alias(f"p{int(p * 100)}") for i, p in enumerate(probs)]
-    return out.select("event_type", *cols)
-
-
-def streaming_sessionize_tws(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    gap_minutes: int = 30,
-    watermark: str = "2 hours",
-    query_name: str = "sessions_tws",
-):
-    """The same sessionization semantics as
-    :func:`streaming_sessionize_stateful`, on Spark 4's
-    ``transformWithStateInPandas`` — the successor stateful API
-    (StatefulProcessor + typed state handles + optional TTL/timers),
-    kept as a twin so both extension surfaces stay exercised.
-
-    Per-user ``ValueState`` holds (session_start, last_seen, n_events);
-    closed sessions emit, the open one stays in state.
-
-    Requires ``protobuf`` (the transformWithState state-API client
-    speaks protobuf to the JVM); environments without it get a clear
-    ImportError up front instead of an opaque mid-query worker crash —
-    use :func:`streaming_sessionize_stateful` there.
-    """
-    try:
-        from google.protobuf import descriptor as _descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas needs the protobuf package "
-            "(pyspark's stateful_processor_api_client); fall back to "
-            "streaming_sessionize_stateful (applyInPandasWithState)"
-        ) from e
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("session_start", T.LongType()),
-            T.StructField("session_end", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-        ]
-    )
-    gap = gap_minutes * 60
-
-    class _Sessionize(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._sess = handle.getValueState(
-                "sess", "start long, last long, n long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            user_id = int(key[0])
-            ts: list[int] = []
-            for pdf in rows:
-                ts.extend(int(v.timestamp()) for v in pdf["ts"])
-            ts.sort()
-            if self._sess.exists():
-                start, last, n = self._sess.get()
-            else:
-                start = last = None
-                n = 0
-            closed = []
-            for t in ts:
-                if last is None:
-                    start, last, n = t, t, 1
-                elif t - last > gap:
-                    closed.append((user_id, start, last, n))
-                    start, last, n = t, t, 1
-                else:
-                    last = t
-                    n += 1
-            if last is not None:
-                self._sess.update((start, last, n))
-            if closed:
-                yield pd.DataFrame(
-                    closed,
-                    columns=["user_id", "session_start", "session_end", "n_events"],
-                )
-
-        def close(self) -> None:
-            pass
-
-    # transformWithState requires the RocksDB state store provider
-    # (the HDFS-backed default does not implement its column families)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    sessions = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.col("user_id"))
-        .transformWithStateInPandas(
-            statefulProcessor=_Sessionize(),
-            outputStructType=out_schema,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-    return (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_hdr_buckets(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    value_col: str = "value",
-    scale: int = 1_000_000,
-    sub_bits: int = 5,
-    query_name: str = "hdr_buckets",
-):
-    """Structured-Streaming form of the HDR quantile sketch
-    (:func:`...textstats.hdr_quantiles`): the bucket state is a
-    fixed-size count table (<= 63 * 2^sub_bits rows), so the streaming
-    aggregation's state store is bounded FOREVER regardless of stream
-    volume — the property that makes the sketch the right quantile
-    primitive for an unbounded stream (an exact percentile would need
-    unbounded state).  Merge-on-arrival is plain count addition, the
-    same merge the batch sketch uses across partitions.
-
-    readStream over a parquet directory -> integer-only bucketization
-    (bit length via ``bin()``, shift via ``shiftright`` — identical to
-    the batch path, so streaming and batch sketches are bit-equal on
-    the same data) -> complete-mode memory sink of
-    ``(e, sub, sh, n)``.  Returns the started query.
-    """
-    stream = spark.readStream.schema(schema).parquet(source_dir).filter(
-        F.col(value_col).isNotNull()
-    )
-    m = F.floor(F.col(value_col) * F.lit(int(scale))).cast("long")
-    pos = F.when(m > 0, m).otherwise(F.lit(0))
-    e = F.when(pos > 0, F.length(F.bin(pos))).otherwise(F.lit(0))
-    shift = F.greatest(e - F.lit(1 + int(sub_bits)), F.lit(0))
-    staged = stream.select(
-        pos.alias("__pos"), e.alias("e"), shift.alias("sh")
-    ).select(
-        "e", F.expr("shiftright(__pos, cast(sh AS int))").alias("sub"), "sh"
-    )
-    agg = staged.groupBy("e", "sub", "sh").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    # no availableNow trigger: the sketch keeps absorbing new files for
-    # the life of the query (the unbounded-stream contract under test)
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-
-
-def streaming_psi_drift(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    baseline: DataFrame,
-    width: str = "1 day",
-    watermark: str = "10 minutes",
-    cat_col: str = "event_type",
-    ts_col: str = "ts",
-    query_name: str = "psi_windows",
-    max_files_per_trigger: int | None = 1,
-):
-    """Per-window PSI of the LIVE category mix against a STATIC
-    baseline — the streaming twin of ``operators.temporal.psi_drift``
-    (the before/after batch monitor): an ingest pipeline watches each
-    closed window's event mix for population shift (PSI < 0.1 stable,
-    > 0.25 shifted) without ever re-scanning history.
-
-    The Structured Streaming shape that makes this append-mode legal:
-    PSI needs per-category counts AND the window total, which naively
-    is two stateful aggregations (disallowed) or an agg-then-join.
-    Instead the baseline's category set (category-cardinality-sized,
-    the sanctioned model-sized driver collect) PIVOTS the counts into
-    ONE wide aggregation — a conditional sum per baseline category
-    plus the row count — so each window closes with everything PSI
-    needs in one row, and the score is a pure expression over that
-    row with the baseline fractions as literals.  One stateful agg,
-    no join, state = one wide row per open window.
-
-    NULL convention (the batch twin's): a window containing a category
-    ABSENT from the baseline (surfaced as ``n_other``), or a baseline
-    category absent from the window, reports NULL psi — substituting
-    an epsilon would fabricate mass; the smoothing decision is the
-    caller's.  NULL category/ts rows are dropped.
-
-    Output rows (append mode, one per CLOSED window):
-    ``(window_start, n_total, n_other, psi)``, psi 6 dp.
-
-    Gotcha shared by every watermarked op here: ``withWatermark``
-    requires TIMESTAMP (with timezone) — parquet written as
-    TIMESTAMP_NTZ fails analysis; cast ``ts`` on ingest.
-    """
-    brows = (
-        baseline.filter(F.col(cat_col).isNotNull())
-        .groupBy(F.col(cat_col).alias("c"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    if not brows:
-        raise ValueError(
-            "streaming_psi_drift: baseline has no non-NULL categories — "
-            "a silent empty baseline would NULL every window's psi"
-        )
-    cats = sorted(r["c"] for r in brows)
-    base_n = {r["c"]: r["n"] for r in brows}
-    tot_b = sum(base_n.values())
-
-    r = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = r.parquet(source_dir).filter(
-        F.col(cat_col).isNotNull() & F.col(ts_col).isNotNull()
-    )
-    aggs = [
-        F.sum(F.when(F.col(cat_col) == c, 1).otherwise(0))
-        .cast("long")
-        .alias(f"__n{i}")
-        for i, c in enumerate(cats)
-    ]
-    counts = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), width).alias("w"))
-        .agg(*aggs, F.count(F.lit(1)).cast("long").alias("n_total"))
-    )
-    n_other = F.col("n_total") - sum(F.col(f"__n{i}") for i in range(len(cats)))
-    defined = (F.col("__other") == 0) & F.lit(True)
-    psi_terms = []
-    for i, c in enumerate(cats):
-        p = F.col(f"__n{i}") / F.col("n_total")
-        q = F.lit(base_n[c] / tot_b)
-        psi_terms.append((p - q) * F.log(p / q))
-        defined = defined & (F.col(f"__n{i}") > 0)
-    out = counts.withColumn("__other", n_other).select(
-        F.col("w.start").alias("window_start"),
-        "n_total",
-        F.col("__other").alias("n_other"),
-        F.when(defined, F.round(sum(psi_terms), 6)).alias("psi"),
-    )
-    return (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
     )

@@ -105,9 +105,6 @@ class NgffCoordinateSystem:
         return f"NgffCoordinateSystem({self.name!r}, {self.axes})"
 
 
-_DEFAULT_UNITS = {"space": "unit"}
-
-
 def get_default_coordinate_system(dims: tuple[str, ...], name: str | None = None) -> NgffCoordinateSystem:
     """A CS over ``dims`` with spatial axes typed 'space' and 'c' typed
     'channel' (reference ngff/_utils.py:39)."""

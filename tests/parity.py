@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import decimal
 import math
+import os
 import sys
 
 import duckdb
@@ -99,7 +100,7 @@ def compare(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, float_tol: float 
 
 
 def run_parity(sf_dir: str, only: list[str] | None = None, float_tol: float = 0.0, workers: int = 6):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from concurrent.futures import ThreadPoolExecutor
 
     import __spark_entry__ as entrymod

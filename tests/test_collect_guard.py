@@ -15,8 +15,7 @@ Audited classes behind the pinned counts (round-11 census):
   (documented fixed-fraction sample), landmark pairs (user-provided,
   tiny by contract), zarr chunk-manifest rows (chunk-count-sized,
   pruned), distinct geometry kinds / scales / region keys
-  (cardinality-bounded metadata), streaming-PSI baseline categories,
-  HITS/pagerank per-round max-scalars
+  (cardinality-bounded metadata), HITS/pagerank per-round max-scalars
 - NO `.toPandas()` anywhere: Arrow batches flow through
   mapInPandas/pandas_udf inside the plan, never to the driver.
 - NO `.take()` anywhere (round-12 spelling-completion: the same
@@ -59,13 +58,12 @@ PINNED = {
     "spatialdata_spark/pipeline/bpe.py": (2, 0, 0, 0, 0),
     "spatialdata_spark/pipeline/classify.py": (0, 0, 1, 0, 0),
     "spatialdata_spark/pipeline/clustering.py": (6, 0, 0, 0, 0),
-    "spatialdata_spark/pipeline/dedup.py": (0, 0, 3, 0, 0),
+    "spatialdata_spark/pipeline/dedup.py": (0, 0, 2, 0, 0),
     "spatialdata_spark/pipeline/filters.py": (0, 0, 1, 0, 0),
     "spatialdata_spark/pipeline/graph.py": (2, 0, 0, 0, 0),
-    "spatialdata_spark/pipeline/similarity.py": (2, 0, 3, 0, 0),
+    "spatialdata_spark/pipeline/similarity.py": (2, 0, 2, 0, 0),
     "spatialdata_spark/pipeline/textstats.py": (0, 0, 1, 0, 0),
     "spatialdata_spark/sources/zarrio.py": (4, 0, 0, 0, 0),
-    "spatialdata_spark/streaming/windows.py": (1, 0, 0, 0, 0),
     "spatialdata_spark/transformations/landmarks.py": (1, 0, 0, 0, 0),
 }
 

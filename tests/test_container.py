@@ -1,5 +1,4 @@
-"""Container persistence, ordered matching, rasterize_bins, and the
-Structured-Streaming path."""
+"""Container persistence, ordered matching and rasterize_bins."""
 
 from __future__ import annotations
 
@@ -75,137 +74,6 @@ def test_rasterize_bins_exact_affine(spark):
         assert out[((i % 7) * 3 - 2, (i // 7) * 2 + 1)] == float(i)
 
 
-def test_streaming_sessionize_stateful(spark, tmp_path):
-    from spatialdata_spark.streaming.windows import streaming_sessionize_stateful
-
-    src = str(tmp_path / "sess_stream")
-    rows = [
-        # user 10: two sessions separated by > 30 min, second still open
-        ("2024-01-01 00:00:00", "click", 1.0, 1, 10),
-        ("2024-01-01 00:10:00", "click", 1.0, 2, 10),
-        ("2024-01-01 01:00:00", "view", 1.0, 3, 10),
-        # user 11: one open session only -> nothing emitted
-        ("2024-01-01 00:05:00", "click", 1.0, 4, 11),
-    ]
-    df = spark.createDataFrame(rows, ["ts_s", "event_type", "value", "event_id", "user_id"]).select(
-        F.to_timestamp("ts_s").alias("ts"), "event_type", "value", "event_id", "user_id"
-    )
-    df.write.mode("overwrite").parquet(src)
-    q = streaming_sessionize_stateful(spark, src, df.schema, gap_minutes=30)
-    q.processAllAvailable()
-    q.stop()
-    got = [
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql("SELECT * FROM sessions_stateful").collect()
-    ]
-    t0 = 1704067200  # 2024-01-01T00:00:00 UTC (session TZ pinned to UTC)
-    assert got == [(10, t0, t0 + 600, 2)]
-
-
-def test_streaming_tumbling(spark, tmp_path):
-    from spatialdata_spark.streaming.windows import streaming_tumbling_query
-
-    src = str(tmp_path / "events_stream")
-    rows = [
-        ("2024-01-01 00:05:00", "click", 1.0, 1, 10),
-        ("2024-01-01 00:55:00", "click", 2.0, 2, 11),
-        ("2024-01-01 01:10:00", "view", 3.0, 3, 12),
-    ]
-    df = spark.createDataFrame(rows, ["ts_s", "event_type", "value", "event_id", "user_id"]).select(
-        F.to_timestamp("ts_s").alias("ts"), "event_type", "value", "event_id", "user_id"
-    )
-    df.write.mode("overwrite").parquet(src)
-    q = streaming_tumbling_query(spark, src, df.schema)
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r["window_start"].isoformat(), r["event_type"]): r["n"]
-        for r in spark.sql("SELECT * FROM events_windowed").collect()
-    }
-    assert got == {("2024-01-01T00:00:00", "click"): 2, ("2024-01-01T01:00:00", "view"): 1}
-
-
-def test_streaming_watermark_drops_late_events(spark, tmp_path):
-    """Late-data semantics: while a window's state is live a late row
-    still merges (watermark lags one trigger); once the window has been
-    emitted and evicted, later arrivals are dropped instead of emitting
-    an append-mode duplicate."""
-    import os
-    import time as _time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import _parse_datatype_string
-
-    from spatialdata_spark.streaming.windows import streaming_tumbling_append
-
-    src = str(tmp_path / "wm_stream")
-    os.makedirs(src, exist_ok=True)
-    base = "2024-01-01 "
-
-    def write_file(name, ts_list):
-        df = spark.createDataFrame(
-            [(i, base + t) for i, t in enumerate(ts_list)], ["event_id", "ts_s"]
-        ).select("event_id", F.to_timestamp("ts_s").alias("ts"))
-        df.coalesce(1).write.mode("overwrite").parquet(f"{src}/{name}")
-        _time.sleep(1.1)  # distinct mtimes -> deterministic file order
-
-    write_file("f1", ["10:05:00", "10:20:00", "10:40:00"])  # 10:00 window
-    write_file("f2", ["13:00:00"])  # advances the watermark past 11:00
-    write_file("f3", ["13:30:00"])  # 10:00 window evicted+emitted this batch
-    write_file("f4", ["10:15:00"])  # late arrival after eviction -> dropped
-
-    q = streaming_tumbling_append(
-        spark,
-        f"{src}/*",
-        _parse_datatype_string("event_id long, ts timestamp"),
-        width="1 hour",
-        watermark="10 minutes",
-    )
-    q.processAllAvailable()
-    dropped = sum(
-        (p["stateOperators"][0].get("numRowsDroppedByWatermark", 0) if p["stateOperators"] else 0)
-        for p in q.recentProgress
-    )
-    q.stop()
-    rows = spark.sql("SELECT * FROM events_windowed_append").collect()
-    got = [(r["window_start"].strftime("%H:%M"), r["n"]) for r in rows]
-    # exactly one emission for the 10:00 window, and the post-eviction
-    # late row was dropped rather than re-emitted
-    assert got.count(("10:00", 3)) == 1
-    assert len([g for g in got if g[0] == "10:00"]) == 1
-    assert dropped == 1
-
-
-def test_streaming_dedup_drops_replays(spark, tmp_path):
-    import os
-    import time as _time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import _parse_datatype_string
-
-    from spatialdata_spark.streaming.windows import streaming_dedup
-
-    src = str(tmp_path / "dedup_stream")
-    os.makedirs(src, exist_ok=True)
-
-    def write_file(name, rows):
-        df = spark.createDataFrame(rows, ["event_id", "ts_s"]).select(
-            "event_id", F.to_timestamp("ts_s").alias("ts")
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(f"{src}/{name}")
-        _time.sleep(1.1)
-
-    write_file("f1", [(1, "2024-01-01 10:00:00"), (2, "2024-01-01 10:01:00")])
-    # f2 replays event 2 (same id+ts, at-least-once delivery) + new event 3
-    write_file("f2", [(2, "2024-01-01 10:01:00"), (3, "2024-01-01 10:02:00")])
-
-    q = streaming_dedup(spark, f"{src}/*", _parse_datatype_string("event_id long, ts timestamp"))
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(r["event_id"] for r in spark.sql("SELECT * FROM events_deduped").collect())
-    assert got == [1, 2, 3]  # replayed event 2 emitted once
-
-
 def test_raccoon_dataset(spark):
     """Demo-scene analog of reference datasets.py raccoon(): full label
     coverage, ~n_segments superpixels, the reference's 4 circles."""
@@ -232,263 +100,6 @@ def test_raccoon_dataset(spark):
     joined = a.join(b, ["y", "x"])
     frac_same = joined.agg(F.avg((F.col("label") == F.col("lab_r")).cast("double"))).first()[0]
     assert frac_same > 0.9
-
-
-def test_streaming_enrich_stream_static_join(spark, tmp_path):
-    """Stream-static enrichment: every micro-batch broadcast-joins the
-    static dim table; re-resolved per batch."""
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import _parse_datatype_string
-
-    from spatialdata_spark.streaming.windows import streaming_enrich
-
-    src = str(tmp_path / "enrich_stream")
-    os.makedirs(src, exist_ok=True)
-    events = spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00", 100), (2, "2024-01-01 10:01:00", 200), (3, "2024-01-01 10:02:00", 999)],
-        ["event_id", "ts_s", "user_id"],
-    ).select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
-    events.coalesce(1).write.parquet(f"{src}/f1")
-    dim = spark.createDataFrame([(100, "gold"), (200, "basic")], ["user_id", "tier"])
-    q = streaming_enrich(
-        spark,
-        f"{src}/*",
-        _parse_datatype_string("event_id long, ts timestamp, user_id long"),
-        dim,
-        on="user_id",
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {r["event_id"]: r["tier"] for r in spark.sql("SELECT * FROM events_enriched").collect()}
-    assert got == {1: "gold", 2: "basic", 3: None}  # left join keeps unmatched
-
-
-def test_streaming_interval_join_stream_stream(spark, tmp_path):
-    """Watermarked STREAM-STREAM interval join: clicks match purchases
-    of the same user within 1 hour AFTER the click; both sides live."""
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import _parse_datatype_string
-
-    from spatialdata_spark.streaming.windows import streaming_interval_join
-
-    lsrc = str(tmp_path / "clicks")
-    rsrc = str(tmp_path / "purchases")
-    os.makedirs(lsrc, exist_ok=True)
-    os.makedirs(rsrc, exist_ok=True)
-    clicks = spark.createDataFrame(
-        [
-            (1, "2024-01-01 10:00:00", 100),
-            (2, "2024-01-01 10:30:00", 200),
-            (3, "2024-01-01 12:00:00", 100),
-        ],
-        ["click_id", "ts_s", "user_id"],
-    ).select("click_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
-    clicks.coalesce(1).write.parquet(f"{lsrc}/f1")
-    purchases = spark.createDataFrame(
-        [
-            (11, "2024-01-01 10:40:00", 100),  # within 1h of click 1
-            (12, "2024-01-01 11:45:00", 200),  # >1h after click 2: no match
-            (13, "2024-01-01 12:10:00", 100),  # within 1h of click 3
-            (14, "2024-01-01 09:50:00", 100),  # BEFORE click 1: no match
-        ],
-        ["purchase_id", "ts_s", "user_id"],
-    ).select("purchase_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
-    purchases.coalesce(1).write.parquet(f"{rsrc}/f1")
-    q = streaming_interval_join(
-        spark,
-        f"{lsrc}/*",
-        _parse_datatype_string("click_id long, ts timestamp, user_id long"),
-        f"{rsrc}/*",
-        _parse_datatype_string("purchase_id long, ts timestamp, user_id long"),
-        key="user_id",
-        within="1 hour",
-        watermark="10 minutes",
-        query_name="clicks_purchases",
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r["click_id"], r["purchase_id"])
-        for r in spark.sql("SELECT * FROM clicks_purchases").collect()
-    }
-    assert got == {(1, 11), (3, 13)}
-    # batch twin agrees: operators.temporal.interval_join on the same
-    # rows yields the same (click, purchase) pairs
-    from spatialdata_spark.operators.temporal import interval_join
-
-    batch = interval_join(
-        clicks, purchases, keys=["user_id"], ts_col="ts", width_seconds=3600
-    )
-    pairs = {
-        (r["l_click_id"], r["r_purchase_id"])
-        for r in batch.collect()
-        if r["r_purchase_id"] is not None
-    }
-    assert pairs == got
-
-
-def test_streaming_interval_join_left_outer_emits_on_watermark(spark, tmp_path):
-    """left_outer: an unmatched click emits with NULL purchase columns
-    only after the watermark proves no purchase can still arrive —
-    driven by per-file micro-batches advancing the watermark."""
-    import os
-    import time as _time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import _parse_datatype_string
-
-    from spatialdata_spark.streaming.windows import streaming_interval_join
-
-    lsrc = str(tmp_path / "oclicks")
-    rsrc = str(tmp_path / "opurch")
-    os.makedirs(lsrc, exist_ok=True)
-    os.makedirs(rsrc, exist_ok=True)
-
-    def wfile(base, name, rows, cols):
-        df = spark.createDataFrame(rows, cols).select(
-            cols[0], F.to_timestamp("ts_s").alias("ts"), "user_id"
-        )
-        df.coalesce(1).write.parquet(f"{base}/{name}")
-        _time.sleep(1.1)  # distinct mtimes => deterministic file order
-
-    wfile(
-        lsrc,
-        "f1",
-        [(1, "2024-01-01 10:00:00", 100), (2, "2024-01-01 10:00:00", 200)],
-        ["click_id", "ts_s", "user_id"],
-    )
-    wfile(rsrc, "f1", [(11, "2024-01-01 10:30:00", 100)], ["purchase_id", "ts_s", "user_id"])
-    # watermark advancers on BOTH sides (global watermark = min of the
-    # two), far past click+within+watermark so user 200's click times out
-    wfile(lsrc, "f2", [(9, "2024-01-02 12:00:00", 999)], ["click_id", "ts_s", "user_id"])
-    wfile(rsrc, "f2", [(99, "2024-01-02 12:00:00", 999)], ["purchase_id", "ts_s", "user_id"])
-    q = streaming_interval_join(
-        spark,
-        f"{lsrc}/*",
-        _parse_datatype_string("click_id long, ts timestamp, user_id long"),
-        f"{rsrc}/*",
-        _parse_datatype_string("purchase_id long, ts timestamp, user_id long"),
-        key="user_id",
-        within="1 hour",
-        watermark="10 minutes",
-        query_name="clicks_outer",
-        how="left_outer",
-        max_files_per_trigger=1,
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        r["click_id"]: r["purchase_id"]
-        for r in spark.sql("SELECT * FROM clicks_outer").collect()
-    }
-    assert got[1] == 11  # matched pair emits normally
-    assert 2 in got and got[2] is None  # timed-out click emits with NULL
-    import pytest
-
-    with pytest.raises(ValueError, match="inner|left_outer"):
-        streaming_interval_join(
-            spark, f"{lsrc}/*", None, f"{rsrc}/*", None, how="full"
-        )
-
-
-def test_streaming_interval_join_shared_column_names(spark, tmp_path):
-    """Both stream schemas carrying the same passthrough name (here
-    'amount') must not make the output projection ambiguous at plan
-    time: the left side keeps the bare name, the colliding right-side
-    column emits as right_amount."""
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import _parse_datatype_string
-
-    from spatialdata_spark.streaming.windows import streaming_interval_join
-
-    lsrc = str(tmp_path / "sclicks")
-    rsrc = str(tmp_path / "spurch")
-    os.makedirs(lsrc, exist_ok=True)
-    os.makedirs(rsrc, exist_ok=True)
-    clicks = spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00", 100, 5)],
-        ["click_id", "ts_s", "user_id", "amount"],
-    ).select("click_id", F.to_timestamp("ts_s").alias("ts"), "user_id", "amount")
-    clicks.coalesce(1).write.parquet(f"{lsrc}/f1")
-    # the right side ALSO carries a literal `right_amount` column: the
-    # collision rename must re-check its candidate name (amount ->
-    # right_amount collides again -> right_right_amount for the
-    # original right_amount column, never two identical output names)
-    purchases = spark.createDataFrame(
-        [(11, "2024-01-01 10:30:00", 100, 42, 7)],
-        ["purchase_id", "ts_s", "user_id", "amount", "right_amount"],
-    ).select(
-        "purchase_id",
-        F.to_timestamp("ts_s").alias("ts"),
-        "user_id",
-        "amount",
-        "right_amount",
-    )
-    purchases.coalesce(1).write.parquet(f"{rsrc}/f1")
-    q = streaming_interval_join(
-        spark,
-        f"{lsrc}/*",
-        _parse_datatype_string("click_id long, ts timestamp, user_id long, amount long"),
-        f"{rsrc}/*",
-        _parse_datatype_string(
-            "purchase_id long, ts timestamp, user_id long, amount long, right_amount long"
-        ),
-        key="user_id",
-        within="1 hour",
-        watermark="10 minutes",
-        query_name="shared_cols",
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM shared_cols").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert len(set(r.asDict().keys())) == len(r.asDict())  # no dup names
-    assert r["click_id"] == 1 and r["purchase_id"] == 11
-    assert r["amount"] == 5 and r["right_amount"] == 42
-    assert r["right_right_amount"] == 7
-
-
-def test_streaming_topk_rate_appends_closed_windows(spark, tmp_path):
-    import os
-    import time as _time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import _parse_datatype_string
-
-    from spatialdata_spark.streaming.windows import streaming_topk_rate
-
-    src = str(tmp_path / "rate_stream")
-    os.makedirs(src, exist_ok=True)
-
-    def write_file(name, rows):
-        df = spark.createDataFrame(rows, ["event_id", "ts_s", "event_type", "value"]).select(
-            "event_id", F.to_timestamp("ts_s").alias("ts"), "event_type", "value"
-        )
-        df.coalesce(1).write.parquet(f"{src}/{name}")
-        _time.sleep(1.1)
-
-    write_file("f1", [(1, "2024-01-01 10:05:00", "click", 2.0), (2, "2024-01-01 10:25:00", "click", 4.0)])
-    write_file("f2", [(3, "2024-01-01 13:00:00", "view", 1.0)])   # advance watermark
-    write_file("f3", [(4, "2024-01-01 13:30:00", "view", 1.0)])   # 10:00 window closes
-    q = streaming_topk_rate(
-        spark,
-        f"{src}/*",
-        _parse_datatype_string("event_id long, ts timestamp, event_type string, value double"),
-        width="1 hour",
-        watermark="10 minutes",
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM events_rates").collect()
-    got = {(r["window_start"].strftime("%H:%M"), r["event_type"]): (r["n"], r["mean_value"]) for r in rows}
-    assert got[("10:00", "click")] == (2, 3.0)  # closed and emitted exactly once
 
 
 def test_class_surface_parity_methods(spark, tmp_path):
@@ -570,39 +181,6 @@ def test_channel_names_on_container(spark):
         ds.set_channel_names("nope", ["x"])
 
 
-def test_sketch_operators_error_bounds(spark):
-    """HLL++ distinct and GK quantile sketches must land within their
-    configured error of the exact answers on the real events table."""
-    from pyspark.sql import functions as F
-
-    from spatialdata_spark.streaming.windows import (
-        approx_distinct_daily,
-        approx_value_quantiles,
-    )
-
-    ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-    exact = {
-        r["day"]: r["n"]
-        for r in ev.groupBy(
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")
-        ).agg(F.countDistinct("user_id").alias("n")).collect()
-    }
-    approx = {r["day"]: r["approx_users"] for r in approx_distinct_daily(ev, rsd=0.02).collect()}
-    assert set(approx) == set(exact)
-    for day, n in exact.items():
-        assert abs(approx[day] - n) <= max(3, 0.1 * n)  # 5 sigma of rsd=2%
-
-    exact_q = {
-        r["event_type"]: r["m"]
-        for r in ev.groupBy("event_type").agg(F.expr("percentile(value, 0.5)").alias("m")).collect()
-    }
-    approx_q = {r["event_type"]: r["p50"] for r in approx_value_quantiles(ev).collect()}
-    spread = ev.agg(F.max("value") - F.min("value")).first()[0]
-    for et, m in exact_q.items():
-        # GK guarantees rank error; translate loosely to value space
-        assert abs(approx_q[et] - m) <= 0.05 * spread
-
-
 def test_container_dunder_protocol(spark):
     import pandas as pd
     import pytest as _pytest
@@ -632,163 +210,3 @@ def test_container_dunder_protocol(spark):
         ds.kind_of("pts")
     with _pytest.raises(ValueError):
         ds["bad"] = spark.createDataFrame(pd.DataFrame({"only": [1]}))
-
-
-def test_streaming_sessionize_transform_with_state(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas twin: identical output to
-    the applyInPandasWithState sessionizer on the same stream.  The
-    API's state client needs protobuf; without it the operator must
-    raise a CLEAR ImportError up front (covered below), and the live
-    path is exercised wherever protobuf exists."""
-    import pytest
-
-    from spatialdata_spark.streaming.windows import streaming_sessionize_tws
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        df0 = spark.range(1)
-        with pytest.raises(ImportError, match="protobuf"):
-            streaming_sessionize_tws(spark, str(tmp_path), df0.schema)
-        return
-
-    src = str(tmp_path / "sess_stream_tws")
-    rows = [
-        ("2024-01-01 00:00:00", "click", 1.0, 1, 10),
-        ("2024-01-01 00:10:00", "click", 1.0, 2, 10),
-        ("2024-01-01 01:00:00", "view", 1.0, 3, 10),
-        ("2024-01-01 00:05:00", "click", 1.0, 4, 11),
-    ]
-    df = spark.createDataFrame(rows, ["ts_s", "event_type", "value", "event_id", "user_id"]).select(
-        F.to_timestamp("ts_s").alias("ts"), "event_type", "value", "event_id", "user_id"
-    )
-    df.write.mode("overwrite").parquet(src)
-    q = streaming_sessionize_tws(spark, src, df.schema, gap_minutes=30)
-    q.processAllAvailable()
-    q.stop()
-    got = [
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql("SELECT * FROM sessions_tws").collect()
-    ]
-    t0 = 1704067200
-    assert got == [(10, t0, t0 + 600, 2)]
-
-
-def test_streaming_dedup_within_watermark_restamped_replay(spark, tmp_path):
-    import os
-    import time as _time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import _parse_datatype_string
-
-    from spatialdata_spark.streaming.windows import streaming_dedup_within_watermark
-
-    src = str(tmp_path / "dedup_ww_stream")
-    os.makedirs(src, exist_ok=True)
-
-    def write_file(name, rows):
-        df = spark.createDataFrame(rows, ["event_id", "ts_s"]).select(
-            "event_id", F.to_timestamp("ts_s").alias("ts")
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(f"{src}/{name}")
-        _time.sleep(1.1)
-
-    write_file("f1", [(1, "2024-01-01 10:00:00"), (2, "2024-01-01 10:01:00")])
-    # f2 replays event 2 RESTAMPED 90 s later (retry with a new event
-    # time — exact (id, ts) dedup would pass this through) + new event 3
-    write_file("f2", [(2, "2024-01-01 10:02:30"), (3, "2024-01-01 10:03:00")])
-
-    q = streaming_dedup_within_watermark(
-        spark, f"{src}/*", _parse_datatype_string("event_id long, ts timestamp")
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(
-        r["event_id"] for r in spark.sql("SELECT * FROM events_deduped_ww").collect()
-    )
-    assert got == [1, 2, 3]  # restamped replay of 2 emitted once
-
-
-def test_streaming_psi_drift_per_window(spark, tmp_path):
-    """Streaming PSI monitor: per-window category mix scored against a
-    static baseline in ONE stateful aggregation (pivoted conditional
-    counts — no second agg, no join, append-mode legal).  A window
-    matching the baseline mix scores ~0; a drifted window scores high;
-    a window containing a category unknown to the baseline reports
-    NULL psi with n_other > 0."""
-    import math
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import _parse_datatype_string
-
-    from spatialdata_spark.streaming.windows import streaming_psi_drift
-
-    src = str(tmp_path / "psi_events")
-    os.makedirs(src, exist_ok=True)
-
-    def wfile(name, rows):
-        df = spark.createDataFrame(rows, ["event_id", "ts_s", "event_type"]).select(
-            "event_id", F.to_timestamp("ts_s").alias("ts"), "event_type"
-        )
-        df.coalesce(1).write.parquet(f"{src}/{name}")
-
-    # day 1: the baseline mix exactly (6 click / 3 view / 1 purchase)
-    day1 = [(i, f"2024-01-01 0{i}:00:00", t) for i, t in enumerate(
-        ["click"] * 6 + ["view"] * 3 + ["purchase"]
-    )]
-    # day 2: all categories present but drifted hard toward purchase
-    day2 = [(100 + i, f"2024-01-02 0{i}:00:00", t) for i, t in enumerate(
-        ["click"] * 2 + ["view"] + ["purchase"] * 7
-    )]
-    # day 3: contains a category the baseline never saw
-    day3 = [(200 + i, f"2024-01-03 0{i}:00:00", t) for i, t in enumerate(
-        ["click"] * 5 + ["refund"] * 5
-    )]
-    # day 4: a baseline category (view) entirely absent from the window
-    day4 = [(300 + i, f"2024-01-04 0{i}:00:00", t) for i, t in enumerate(
-        ["click"] * 5 + ["purchase"] * 5
-    )]
-    wfile("f1", day1)
-    wfile("f2", day2)
-    wfile("f3", day3)
-    wfile("f3b", day4)
-    # watermark advancer far past day 4 so all windows close
-    wfile("f4", [(999, "2024-01-10 12:00:00", "click")])
-
-    baseline = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(["click"] * 6 + ["view"] * 3 + ["purchase"])],
-        ["row_id", "event_type"],
-    )
-    q = streaming_psi_drift(
-        spark,
-        f"{src}/*",
-        _parse_datatype_string("event_id long, ts timestamp, event_type string"),
-        baseline,
-        width="1 day",
-        watermark="1 hour",
-        query_name="psi_by_day",
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        str(r["window_start"])[:10]: r
-        for r in spark.sql("SELECT * FROM psi_by_day").collect()
-    }
-    assert set(got) >= {"2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04"}
-    # day 1 mirrors the baseline exactly: psi identically 0
-    assert got["2024-01-01"]["psi"] == 0.0 and got["2024-01-01"]["n_other"] == 0
-    # day 2: all categories present, heavy drift — exact 6dp replay
-    base = {"click": 0.6, "view": 0.3, "purchase": 0.1}
-    cur = {"click": 0.2, "view": 0.1, "purchase": 0.7}
-    exp = round(
-        sum((cur[c] - base[c]) * math.log(cur[c] / base[c]) for c in base), 6
-    )
-    assert abs(got["2024-01-02"]["psi"] - exp) < 1e-9
-    assert got["2024-01-02"]["psi"] > 0.25  # well past the "shifted" bar
-    # day 3: unknown category -> NULL psi, n_other counts it
-    assert got["2024-01-03"]["psi"] is None
-    assert got["2024-01-03"]["n_other"] == 5
-    # day 4: a baseline category absent from the window makes psi NULL
-    # (the batch twin's convention — an epsilon would fabricate mass)
-    assert got["2024-01-04"]["psi"] is None and got["2024-01-04"]["n_other"] == 0

@@ -19,36 +19,10 @@ def _docs(spark):
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
 
-def test_exact_dedup_keep(spark):
-    from spatialdata_spark.pipeline.dedup import exact_dedup_keep
-
-    out = exact_dedup_keep(_docs(spark))
-    ids = sorted(r["doc_id"] for r in out.collect())
-    assert ids == [1, 3, 4, 5]  # doc 2 dropped, representative is min id
-
-
-def test_minhash_dedup_pipeline(spark):
-    from spatialdata_spark.pipeline.dedup import minhash_dedup
-
-    out = minhash_dedup(_docs(spark), threshold=0.5, num_hashes=64, num_bands=16)
-    ids = sorted(r["doc_id"] for r in out.collect())
-    # 2 (exact dup) and 3 (near dup) cluster with 1 and are removed
-    assert 1 in ids and 2 not in ids and 4 in ids and 5 in ids
-
-
-def test_ngram_jaccard_pairs(spark):
-    from spatialdata_spark.pipeline.dedup import ngram_jaccard_pairs
-
-    pairs = spark.createDataFrame([(1, 2), (1, 4)], ["id_a", "id_b"])
-    out = {(r["id_a"], r["id_b"]): r["jaccard"] for r in ngram_jaccard_pairs(_docs(spark), pairs).collect()}
-    assert out[(1, 2)] == 1.0
-    assert out[(1, 4)] == 0.0
-
-
 def test_simhash_near_duplicates(spark):
-    from spatialdata_spark.pipeline.dedup import simhash_near_duplicates, simhash_signatures
+    from spatialdata_spark.pipeline.dedup import simhash_near_duplicates, simhash_signatures_sql
 
-    fps = simhash_signatures(_docs(spark))
+    fps = simhash_signatures_sql(_docs(spark))
     out = simhash_near_duplicates(fps, max_hamming=3)
     pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
     assert (1, 2) in pairs  # identical docs -> hamming 0
@@ -71,8 +45,23 @@ def test_embedding_cosine_dedup(spark):
     assert out == [1, 3]
 
 
+def cosine_self_join_topk(embeddings, k):
+    """All-pairs brute-force top-k neighbours by cosine, ``(id_a, id_b,
+    cosine)``: the truth that the blocked join must reproduce."""
+    from pyspark.sql.window import Window
+
+    from spatialdata_spark.pipeline.similarity import _dot_expr, _norm_expr
+
+    a = embeddings.select(F.col("vec_id").alias("id_a"), F.col("embedding").cast("array<double>").alias("va"))
+    b = embeddings.select(F.col("vec_id").alias("id_b"), F.col("embedding").cast("array<double>").alias("vb"))
+    sim = _dot_expr(F.col("va"), F.col("vb")) / (_norm_expr(F.col("va")) * _norm_expr(F.col("vb")))
+    scored = a.join(b, F.col("id_a") != F.col("id_b")).select("id_a", "id_b", sim.alias("cosine"))
+    w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.col("id_b"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).drop("rank")
+
+
 def test_cosine_self_join_topk_matches_blocked(spark):
-    from spatialdata_spark.pipeline.similarity import cosine_pairs_blocked, cosine_self_join_topk
+    from spatialdata_spark.pipeline.similarity import cosine_pairs_blocked
 
     rng = np.random.default_rng(5)
     rows = [(i, [float(v) for v in rng.standard_normal(8)]) for i in range(30)]
@@ -391,21 +380,6 @@ def test_connected_components_chain_and_random(spark):
     assert got == expected
 
 
-def test_minhash_dedup_transitive_chain(spark):
-    from spatialdata_spark.pipeline.dedup import minhash_dedup
-
-    # B overlaps A and C heavily; A and C differ more — a chain where the
-    # 1-hop representative pick would leave C alive
-    words = [f"tok{i}" for i in range(60)]
-    a = " ".join(words[0:40])
-    b = " ".join(words[5:45])
-    c = " ".join(words[10:50])
-    d = " ".join(f"zz{i}" for i in range(40))
-    docs = spark.createDataFrame([(1, a), (2, b), (3, c), (4, d)], ["doc_id", "text"])
-    out = sorted(r["doc_id"] for r in minhash_dedup(docs, threshold=0.5).collect())
-    assert out == [1, 4]
-
-
 def test_ivf_sampling_unbiased_on_sorted_input(spark):
     """k-means seeding must survive cluster-sorted storage: with the old
     limit().collect() sample the training set was 100% cluster 0 and
@@ -435,7 +409,11 @@ def test_ivf_sampling_unbiased_on_sorted_input(spark):
         .collect()
     )
     owned = {r["true_c"] for r in cells}
-    assert owned == {0, 1, 2}
+    # which true cluster center each returned centroid lies nearest to:
+    # a repeat (and a missing cluster) is the split-centroid layout
+    nearest = [int(((centers - c) ** 2).sum(axis=1).argmin()) for c in centroids]
+    layout = f"centroid -> nearest true center: {nearest}"
+    assert owned == {0, 1, 2}, layout
     q = [float(v) for v in centers[2] + 0.1]
     exact = [r["vec_id"] for r in cosine_topk_query(emb, q, k=10).collect()]
     one = [r["vec_id"] for r in ivf_topk_query(assigned, centroids, q, k=10, nprobe=1).collect()]
@@ -443,7 +421,7 @@ def test_ivf_sampling_unbiased_on_sorted_input(spark):
     # quantizer lands 6+ of 10 (8-9 typical; >= 5 leaves margin for the
     # k-means seeding's occasional split-centroid layout — observed
     # once as a full-suite-under-load flake, never in isolation)
-    assert len(set(one) & set(exact)) >= 5
+    assert len(set(one) & set(exact)) >= 5, f"{layout}; nprobe=1 top-10 {sorted(one)}, exact {sorted(exact)}"
 
 
 def test_shingle_numpy_matches_expression_bitwise(spark):
@@ -664,43 +642,6 @@ def test_corpus_stats(spark):
     r = corpus_stats(docs).first()
     assert (r["n_docs"], r["n_distinct"]) == (3, 2)
     assert abs(r["mean_tokens"] - 5 / 3) < 1e-12
-
-
-def test_multiprobe_improves_recall_over_single_probe(spark):
-    from spatialdata_spark.pipeline.similarity import (
-        cosine_self_join_topk,
-        lsh_bucketed_topk,
-        multiprobe_hyperplane_buckets,
-        multiprobe_topk,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    n = emb.count()
-    truth = {
-        (r["id_a"], r["id_b"])
-        for r in cosine_self_join_topk(emb, k=1).collect()
-    }
-
-    def recall(df):
-        got = {(r["id_a"], r["id_b"]) for r in df.collect()}
-        return len(got & truth) / len(truth)
-
-    r1 = recall(lsh_bucketed_topk(emb, k=1, num_planes=4))
-    r2 = recall(multiprobe_topk(emb, k=1, num_planes=4, n_probes=3))
-    assert r2 >= r1  # extra probes can only widen the candidate set
-    assert r2 > 0.5  # measured: 0.15 single -> 0.64 multi on this fixture
-
-    # home bucket of probe 0 must equal the single-probe assignment
-    from spatialdata_spark.pipeline.similarity import random_hyperplane_buckets_arrow
-
-    home = {r["vec_id"]: r["bucket"] for r in random_hyperplane_buckets_arrow(emb).collect()}
-    mp = {
-        r["vec_id"]: r["bucket"]
-        for r in multiprobe_hyperplane_buckets(emb, n_probes=2).filter("probe = 0").collect()
-    }
-    assert mp == home
-    rows_per_vec = multiprobe_hyperplane_buckets(emb, n_probes=3).count()
-    assert rows_per_vec == 3 * n
 
 
 def test_stratified_sample_deterministic_and_rated(spark):

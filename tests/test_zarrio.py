@@ -133,15 +133,17 @@ def test_container_store_roundtrip(spark, tmp_path):
 
 def test_consolidated_metadata(spark, tmp_path):
     from spatialdata_spark.catalog import SpatialDataset
-    from spatialdata_spark.sources.zarrio import read_consolidated_metadata, read_zarr_store
+    from spatialdata_spark.sources.zarrio import read_consolidated_doc, read_zarr_store
     from spatialdata_spark.transformations import Identity
 
     pts = spark.createDataFrame([(1, 2.0, 3.0)], "id long, x double, y double")
     ds = SpatialDataset(spark).add_points("pts", pts, {"global": Identity()})
     p = str(tmp_path / "store.zarr")
     ds.write_zarr(p)
-    meta = read_consolidated_metadata(p)
-    assert meta is not None and ".zgroup" in meta
+    doc = read_consolidated_doc(p)
+    assert doc is not None
+    meta = doc["metadata"]
+    assert ".zgroup" in meta
     assert "points/pts/.zattrs" in meta
     # reading resolves attrs from the consolidated doc even when the
     # per-group sidecar is gone

@@ -94,23 +94,3 @@ def test_zordered_scan_reads_fewer_bytes(spark, tmp_path, points_pdf):
                 break
     assert hit_files <= 4  # a 0.36% -area box touches a few compact files, not all 16
     assert q.count() > 0
-
-
-def test_morton_code_3d(spark):
-    from spatialdata_spark.functions.zorder import morton_code_3d
-
-    ext = {"x": (0.0, 8.0), "y": (0.0, 8.0), "z": (0.0, 8.0)}
-    df = spark.createDataFrame(
-        pd.DataFrame({"x": [0.0, 8.0], "y": [0.0, 8.0], "z": [0.0, 8.0]})
-    )
-    codes = [
-        r["c"]
-        for r in df.select(
-            morton_code_3d(F.col("x"), F.col("y"), F.col("z"), ext, bits=3).alias("c")
-        ).collect()
-    ]
-    assert codes[0] == 0 and codes[1] == (1 << 9) - 1
-    # interleave order: x bit 0 -> bit 0, y bit 0 -> bit 1, z bit 0 -> bit 2
-    one = spark.createDataFrame(pd.DataFrame({"x": [8.0 / 7], "y": [0.0], "z": [0.0]}))
-    c = one.select(morton_code_3d(F.col("x"), F.col("y"), F.col("z"), ext, bits=3).alias("c")).first()["c"]
-    assert c == 1

@@ -10,11 +10,12 @@ disagree in kind.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def kind(s: pd.Series) -> str:

@@ -425,45 +425,6 @@ def main(max_mult: int = 8, only: list[str] | None = None) -> None:
         docs_m = replicate(docs0.select("doc_id"), m, ["doc_id"])
         return entrymod._png_media_variants(spark, SF_DIR, docs=docs_m)
 
-    def _stream_interval(m, ev_m):
-        # the streaming state-bound check: watermarked left_outer
-        # stream-stream interval join driven batch-by-batch; user
-        # cardinality grows with the corpus, rows-per-key constant, so
-        # join state stays per-key bounded and wall time ~linear
-        import shutil
-        import tempfile
-
-        from pyspark.sql.types import _parse_datatype_string
-
-        from spatialdata_spark.streaming.windows import streaming_interval_join
-
-        base = tempfile.mkdtemp(prefix="smoke_sij_")
-        lsrc, rsrc = f"{base}/clicks", f"{base}/purch"
-        ev_m.filter(F.col("event_type") == "click").select(
-            "event_id", "ts", "user_id"
-        ).write.mode("overwrite").parquet(lsrc)
-        ev_m.filter(F.col("event_type") == "purchase").select(
-            "event_id", "ts", "user_id"
-        ).write.mode("overwrite").parquet(rsrc)
-        schema = _parse_datatype_string("event_id long, ts timestamp, user_id long")
-        q = streaming_interval_join(
-            spark,
-            lsrc,
-            schema,
-            rsrc,
-            schema,
-            key="user_id",
-            within="1 hour",
-            watermark="10 minutes",
-            query_name=f"smoke_sij_{m}",
-            how="left_outer",
-        )
-        q.processAllAvailable()
-        q.stop()
-        n = spark.sql(f"SELECT COUNT(*) AS c FROM smoke_sij_{m}").collect()[0]["c"]
-        shutil.rmtree(base, ignore_errors=True)
-        return n
-
     def _copart(fn):
         # force the cluster (co-partitioned frontier) path for one case
         single_host = session.single_host
@@ -920,10 +881,6 @@ def main(max_mult: int = 8, only: list[str] | None = None) -> None:
                 ),
                 k=20,
             ).collect(),
-            # watermarked left_outer stream-stream join end-to-end
-            # (write + ingest + join + timeout emission): user
-            # cardinality x mult, per-key state constant
-            "interval_join_stream": lambda m=mult: _stream_interval(m, ev),
             # the edge⋈edge co-partition contract: canonical edges
             # pre-partitioned by u, oriented cache co-partitioned by
             # the wedge apex — 1 oriented-table exchange, not 3
@@ -1045,7 +1002,7 @@ def main(max_mult: int = 8, only: list[str] | None = None) -> None:
                         (F.col("n_chars") >= 500).cast("string").alias("value"))
                 )
             ).collect(),
-            # digest-keyed agg + join-back (the exact_dedup_keep shape);
+            # digest-keyed agg + join-back;
             # self-union makes EVERY doc a duplicate — worst-case dup
             # mass, still digest-linear
             "dup_profile": lambda: duplication_profile(docs).collect(),
