@@ -244,9 +244,12 @@ def ivf_assign(
     # all one cluster and wreck the quantizer.  sample() draws uniformly
     # across partitions; the slight over-draw is trimmed driver-side
     # with a seeded shuffle so the result is unbiased and deterministic.
+    # fraction and seed go by keyword: pyspark reads a positional float
+    # as withReplacement and then shifts the arguments, so
+    # sample(frac, seed=seed) plans a random seed.
     total = embeddings.count()
     frac = min(1.0, (sample_size * 1.3 + 64) / max(total, 1))
-    rows = embeddings.select(F.col(vec_col).cast("array<double>")).sample(frac, seed=seed).collect()
+    rows = embeddings.select(F.col(vec_col).cast("array<double>")).sample(fraction=frac, seed=seed).collect()
     sample = np.array([r[0] for r in rows])
     if len(sample) > sample_size:
         sample = sample[rng.permutation(len(sample))[:sample_size]]

@@ -5,7 +5,9 @@ code runs unchanged on a multi-executor cluster: AQE on (runtime shuffle
 re-planning, skew-join splitting), shuffle partitions sized to cores
 locally (on a cluster you'd size to 2-3x total cores), Arrow enabled for
 the pandas-UDF paths, UTC timezone pinned so results are comparable with
-the DuckDB oracle (duckdb timestamps are UTC-naive).
+the DuckDB oracle (duckdb timestamps are UTC-naive), and a generated-code
+cache large enough to hold every plan shape the query registry compiles,
+so a repeated query reuses its compiled classes.
 """
 
 from __future__ import annotations
@@ -44,6 +46,16 @@ def get_spark(app_name: str = "spatialdata-spark", cores: int | None = None) -> 
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cores))
+        # Whole-stage codegen caches compiled classes keyed on their Java
+        # source (no data or file identity in it), LRU at 100 entries by
+        # default.  A perfbench `batch` round compiles ~200 classes and an
+        # `interactive` round ~110, so the default evicted each class
+        # before its next use: 112-177 Janino recompiles per `batch` round
+        # at sf0.01 (4 cores), each compiled again by the JIT.  Two passes
+        # over the 291-query registry at sf0.001 compile 5,125 then 4,543
+        # classes at 100 entries, and 3,523 then 216 at 8192 (2.3x
+        # headroom), for +24 MB metaspace and +25 MB JIT code heap.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
