@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spatialdata_spark.session import broadcast_if_single_host
+from spatialdata_spark.session import broadcast_if_single_host, local_frame
 
 # ---------------------------------------------------------------------------
 # shared synthetic spatial mapping (Spark + SQL must stay in lockstep)
@@ -1573,7 +1573,8 @@ def sq_multipart_shapes(spark, sf_dir):
                 None,
             )
         )
-    by = spark.createDataFrame(
+    by = local_frame(
+        spark,
         rows,
         "shape_id BIGINT, kind STRING, wkb BINARY, minx DOUBLE, miny DOUBLE, maxx DOUBLE, maxy DOUBLE, radius DOUBLE",
     )
@@ -1979,12 +1980,13 @@ def _vrect_shapes(spark, sf_dir):
 
 
 def _by_boxes_shapes(spark):
-    """The three fixed by-boxes as a shapes frame — plan memoized (the
-    3-row createDataFrame alone cost ~60 ms per construction)."""
+    """The three fixed by-boxes as a shapes frame, built once per session
+    (plan memoized)."""
     from spatialdata_spark.operators.vectorize import boxes_to_shapes
 
     def build():
-        by_rows = spark.createDataFrame(
+        by_rows = local_frame(
+            spark,
             [(int(b[0]), float(b[1]), float(b[2]), float(b[3]), float(b[4])) for b in _BY_BOXES],
             ["shape_id", "minx", "miny", "maxx", "maxy"],
         )
@@ -2047,7 +2049,8 @@ def ag_fractions_concave(spark, sf_dir):
                 None,
             )
         )
-    by = spark.createDataFrame(
+    by = local_frame(
+        spark,
         rows,
         "shape_id long, kind string, wkb binary, minx double, miny double, maxx double, maxy double, radius double",
     )
@@ -2105,7 +2108,8 @@ def ag_points_by_darts(spark, sf_dir):
                 None,
             )
         )
-    shapes = spark.createDataFrame(
+    shapes = local_frame(
+        spark,
         rows,
         "shape_id long, kind string, wkb binary, minx double, miny double, maxx double, maxy double, radius double",
     )
@@ -2906,7 +2910,7 @@ def rt_unpad_extent(spark, sf_dir):
 
     m = _img_meta()
     _, (y0, x0, y1, x1) = unpad_raster(_img_tiles(spark, sf_dir), m)
-    return spark.createDataFrame([(y0, x0, y1, x1)], ["y0", "x0", "y1", "x1"])
+    return local_frame(spark, [(y0, x0, y1, x1)], ["y0", "x0", "y1", "x1"])
 
 
 RT_UNPAD_SQL = f"""
@@ -6624,7 +6628,8 @@ def pl_vocab_coverage(spark, sf_dir):
         F.sum("tf").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
     )
     total = counts.agg(F.sum("tf").cast("long").alias("tot"))
-    targets = docs.sparkSession.createDataFrame(
+    targets = local_frame(
+        docs.sparkSession,
         [(0.5,), (0.9,), (0.99,)], "coverage double"
     )
     return (

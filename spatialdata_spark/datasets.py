@@ -11,6 +11,7 @@ from pyspark.sql import SparkSession
 from spatialdata_spark.catalog import SpatialDataset
 from spatialdata_spark.operators.raster import RasterMeta, long_to_tiles
 from spatialdata_spark.operators.vectorize import circles_to_shapes
+from spatialdata_spark.session import local_frame
 from spatialdata_spark.transformations import Identity
 
 
@@ -56,14 +57,17 @@ def blobs(
     lmeta = RasterMeta(height=length, width=length, tile=64, dtype="i8")
 
     iyy, ixx = np.nonzero(img)
-    img_df = spark.createDataFrame(
+    img_df = local_frame(
+        spark,
         [(int(y), int(x), float(img[y, x])) for y, x in zip(iyy, ixx)], ["y", "x", "value"]
     )
     lyy, lxx = np.nonzero(labels)
-    lab_df = spark.createDataFrame(
+    lab_df = local_frame(
+        spark,
         [(int(y), int(x), int(labels[y, x])) for y, x in zip(lyy, lxx)], ["y", "x", "label"]
     )
-    pts_df = spark.createDataFrame(
+    pts_df = local_frame(
+        spark,
         [
             (float(x), float(y), int(c) + 1, str(g))
             for (x, y), c, g in zip(pxy, cell_of_point, genes)
@@ -71,7 +75,8 @@ def blobs(
         ["x", "y", "instance_id", "gene"],
     )
     circles_df = circles_to_shapes(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (i + 1, float(cx), float(cy), float(r))
                 for i, ((cx, cy), r) in enumerate(zip(centers, radii))
@@ -79,7 +84,8 @@ def blobs(
             ["shape_id", "x", "y", "radius"],
         )
     )
-    table_df = spark.createDataFrame(
+    table_df = local_frame(
+        spark,
         [
             ("blobs_circles", i + 1, float(radii[i]), int((labels == i + 1).sum()))
             for i in range(n_cells)
@@ -158,7 +164,8 @@ def raccoon(
 
     coords = [(610.0, 450.0, 30.0), (730.0, 325.0, 30.0), (575.0, 300.0, 30.0), (480.0, 90.0, 50.0)]
     circles_df = circles_to_shapes(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(i + 1, cx, cy, r) for i, (cx, cy, r) in enumerate(coords)],
             ["shape_id", "x", "y", "radius"],
         )

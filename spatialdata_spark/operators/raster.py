@@ -146,9 +146,9 @@ def _unpack_kernel(ts: int, dtype: str, h: int, w: int, keep_zeros: bool):
     return _unpack
 
 
-def tiles_to_long(tiles: DataFrame, meta: RasterMeta, keep_zeros: bool = False, scale: int = 0) -> DataFrame:
-    """Unpack tiles to long form ``(c, y, x, value)``.  Sparse by
-    default (zeros dropped) — the COO view used by zonal stats."""
+def _unpack_plan(meta: RasterMeta, keep_zeros: bool = False, scale: int = 0):
+    """The unpack kernel of one pyramid level and its long-form schema
+    (a zarr read composes the kernel after its chunk decoder)."""
     h, w = meta.shape_at(scale)
     schema = T.StructType(
         [
@@ -158,9 +158,13 @@ def tiles_to_long(tiles: DataFrame, meta: RasterMeta, keep_zeros: bool = False, 
             T.StructField("value", T.DoubleType() if meta.dtype.startswith("f") else T.LongType()),
         ]
     )
-    return tiles.filter(F.col("scale") == scale).mapInPandas(
-        _unpack_kernel(meta.tile, meta.dtype, h, w, keep_zeros), schema
-    )
+    return _unpack_kernel(meta.tile, meta.dtype, h, w, keep_zeros), schema
+
+
+def tiles_to_long(tiles: DataFrame, meta: RasterMeta, keep_zeros: bool = False, scale: int = 0) -> DataFrame:
+    """Unpack tiles to long form ``(c, y, x, value)``.  Sparse by
+    default (zeros dropped) — the COO view used by zonal stats."""
+    return tiles.filter(F.col("scale") == scale).mapInPandas(*_unpack_plan(meta, keep_zeros, scale))
 
 
 # ---------------------------------------------------------------------------

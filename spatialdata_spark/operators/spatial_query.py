@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spatialdata_spark.functions.affine import affine_exprs
+from spatialdata_spark.session import local_frame
 from spatialdata_spark.transformations import BaseTransformation, Identity
 
 
@@ -153,7 +154,7 @@ def bounding_box_query_multibox(
         for i in range(len(mins)):
             lo, hi = _intrinsic_box(m_inv, mins[i], maxs[i])
             rows.append((i, *[float(v) for v in lo], *[float(v) for v in hi]))
-        boxes = spark.createDataFrame(rows, cols)
+        boxes = local_frame(spark, rows, cols)
         probe = {ax: F.col(ax) for ax in req_axes}
         joined = df.join(F.broadcast(boxes), _multibox_cond(req_axes, probe))
         return joined.drop(*[c for c in cols if c != "box_id"])
@@ -165,7 +166,7 @@ def bounding_box_query_multibox(
     rows = [
         (i, *[float(v) for v in mins[i]], *[float(v) for v in maxs[i]]) for i in range(len(mins))
     ]
-    boxes = spark.createDataFrame(rows, cols)
+    boxes = local_frame(spark, rows, cols)
     exprs = affine_exprs(m, req_axes, req_axes)
     proj = df.select("*", *[exprs[ax].alias(f"__t_{ax}") for ax in req_axes])
     probe = {ax: F.col(f"__t_{ax}") for ax in req_axes}

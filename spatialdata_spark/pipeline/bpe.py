@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spatialdata_spark.session import local_frame
+
 __all__ = ["bpe_word_table", "bpe_train", "bpe_token_counts", "bpe_fertility"]
 
 
@@ -254,7 +256,8 @@ def bpe_train(
             wf_base = _with_pending(wf_base).localCheckpoint()
             pending = []
     wf = _with_pending(wf_base)
-    merges_df = spark.createDataFrame(
+    merges_df = local_frame(
+        spark,
         merges, "rank INT, left STRING, right STRING, merged STRING, cnt BIGINT"
     )
     return merges_df, wf

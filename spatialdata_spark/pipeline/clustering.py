@@ -235,7 +235,7 @@ def _literalize(spark: SparkSession, centroids: DataFrame) -> DataFrame:
     as a literal frame: keeps every iteration's plan one join deep
     (metadata-sized collect — the same contract as the IVF sampler)."""
     rows = [(int(r["j"]), int(r["pos"]), int(r["cval"])) for r in centroids.collect()]
-    return spark.createDataFrame(rows, "j INT, pos INT, cval LONG")
+    return session.local_frame(spark, rows, "j INT, pos INT, cval LONG")
 
 
 def kmeans_lloyd(
@@ -274,7 +274,8 @@ def kmeans_lloyd(
             for r in pts.select("id").distinct().orderBy("id").limit(k).collect()
         ]
         # map seed ids -> dense 0..k-1 via a literal lookup (k rows)
-        lookup = spark.createDataFrame(
+        lookup = session.local_frame(
+            spark,
             [(int(v), int(j)) for j, v in enumerate(seed_ids)], "id LONG, j INT"
         )
         init = (
@@ -309,7 +310,7 @@ def kmeans_lloyd(
         for j in range(C.shape[0])
         for p in range(C.shape[1])
     ]
-    centroids = spark.createDataFrame(cent_rows, "j INT, pos INT, cval LONG")
+    centroids = session.local_frame(spark, cent_rows, "j INT, pos INT, cval LONG")
     return final, centroids
 
 

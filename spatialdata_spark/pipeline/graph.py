@@ -846,7 +846,8 @@ def hop_distances(
         .union(und.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
     )
     adj = _finalize_cache(_co_partition(adj, "node")) if not bcast else adj.persist()
-    seed_df = spark.createDataFrame(
+    seed_df = session.local_frame(
+        spark,
         [(int(s),) for s in seeds], ["seed"]
     ).select(F.col("seed").cast("long").alias("seed"))
     dist = seed_df.select(
@@ -1061,7 +1062,8 @@ def pagerank_weighted(
     if bad:
         raise ValueError(f"pagerank_weighted: {bad} non-positive/null weights")
     if seeds is not None:
-        seed_df = spark.createDataFrame(
+        seed_df = session.local_frame(
+            spark,
             [(int(s),) for s in seeds], ["node"]
         ).select(F.col("node").cast("long").alias("node"))
         n_tele = len(set(int(s) for s in seeds))

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spatialdata_spark.session import local_frame
+
 __all__ = [
     "inverted_index",
     "multi_phrase_search",
@@ -120,7 +122,8 @@ def multi_phrase_search(
         if not toks:
             raise ValueError(f"empty phrase at index {pid}")
         rows += [(pid, ph, i, t, len(toks)) for i, t in enumerate(toks)]
-    pat = spark.createDataFrame(
+    pat = local_frame(
+        spark,
         rows, ["phrase_id", "phrase", "offset", "token", "plen"]
     )
     post = inverted_index(docs, text_col=text_col, id_col=id_col)

@@ -518,8 +518,8 @@ def pq_adc_topk(
             c = list(r["code"])[j * dsub : (j + 1) * dsub]
             cb_data.append((j, kk, [int(x) for x in c]))
             qd_data.append((j, kk, int(sum((int(a) - int(b)) ** 2 for a, b in zip(q_j, c)))))
-    cb_df = spark.createDataFrame(cb_data, ["j", "k", "c"])
-    qd_df = spark.createDataFrame(qd_data, ["j", "k", "qd2"])
+    cb_df = session.local_frame(spark, cb_data, ["j", "k", "c"])
+    qd_df = session.local_frame(spark, qd_data, ["j", "k", "qd2"])
     subcodes = codes.filter(F.col(id_col) > ksub).select(
         F.col(id_col),
         F.explode(

@@ -1624,7 +1624,8 @@ def hdr_quantiles(
         "__lb", F.expr("shiftleft(__sub, cast(__sh AS int))")
     )
     tot = cum.agg(F.max("__cum").cast("long").alias("__n"))
-    qdf = df.sparkSession.createDataFrame(
+    qdf = session.local_frame(
+        df.sparkSession,
         [(float(q),) for q in quantiles], ["q"]
     )
     # smallest bucket whose cumulative count reaches ceil(q * n)

@@ -39,6 +39,36 @@ def broadcast_if_single_host(df: DataFrame) -> DataFrame:
     return F.broadcast(df) if single_host(df.sparkSession) else df
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A small driver-side table as a Spark local relation built from
+    Arrow columns.  ``spark.createDataFrame(list)`` plans a Python-RDD
+    scan (``Scan ExistingRDD``): each execution runs a Python-worker
+    stage for rows the driver already holds, and the optimizer sees a
+    default (huge) size.  From a pyarrow table the rows plan as a
+    ``LocalTableScan`` with their real size, in ``min(rows,
+    defaultParallelism)`` partitions.
+
+    ``schema`` is a DDL string or ``StructType``: each column is cast to
+    the field's Arrow type with a safe cast, so an overflow or a
+    truncated float raises.  Or it is a list of column names, and
+    pyarrow infers the types: Python int, float, str, bytes and list
+    give bigint, double, string, binary and array, as Spark infers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    rows = list(rows)
+    if isinstance(schema, (list, tuple)):
+        if not rows:
+            raise ValueError("local_frame: cannot infer column types from zero rows")
+        cols = [pa.array([r[i] for r in rows]) for i in range(len(schema))]
+        return spark.createDataFrame(pa.table(cols, names=list(schema)))
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = [pa.array([r[i] for r in rows]).cast(f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), struct)
+
+
 def get_spark(app_name: str = "spatialdata-spark", cores: int | None = None) -> SparkSession:
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))

@@ -38,10 +38,24 @@ import hmac
 import json
 import os
 import tempfile
+import threading
 import urllib.error
 import urllib.parse
 import urllib.request
 import xml.etree.ElementTree as ET
+
+
+_CACHE_DIR_LOCK = threading.Lock()
+
+
+def _cache_dir(fetcher, prefix: str) -> str:
+    """A remote fetcher's download directory, made on first use.  A store
+    read resolves its elements on several threads that share one
+    fetcher, so the check and the assignment happen under one lock."""
+    with _CACHE_DIR_LOCK:
+        if fetcher._cache_dir is None:
+            fetcher._cache_dir = tempfile.mkdtemp(prefix=prefix)
+        return fetcher._cache_dir
 
 
 class LocalFetcher:
@@ -167,10 +181,8 @@ class HttpFetcher:
                 f"remote parquet read of {self._u(rel)} needs the store's file "
                 "manifest (write with consolidate_metadata) to know part names"
             )
-        if self._cache_dir is None:
-            self._cache_dir = tempfile.mkdtemp(prefix="sdspark-httpcache-")
         tag = hashlib.sha1(f"{self.base_url}/{rel}".encode()).hexdigest()[:16]
-        d = os.path.join(self._cache_dir, tag)
+        d = os.path.join(_cache_dir(self, "sdspark-httpcache-"), tag)
         os.makedirs(d, exist_ok=True)
         for fn in files:
             dest = os.path.join(d, fn.replace("/", "_"))
@@ -435,10 +447,8 @@ class S3Fetcher:
             files = [k[len(prefix) :] for k in keys if k != prefix]
             if not files:
                 raise FileNotFoundError(f"s3://{self.bucket}/{key}: no objects under prefix")
-        if self._cache_dir is None:
-            self._cache_dir = tempfile.mkdtemp(prefix="sdspark-s3cache-")
         tag = hashlib.sha1(f"{self.endpoint}/{self.bucket}/{key}".encode()).hexdigest()[:16]
-        d = os.path.join(self._cache_dir, tag)
+        d = os.path.join(_cache_dir(self, "sdspark-s3cache-"), tag)
         os.makedirs(d, exist_ok=True)
         for fn in files:
             dest = os.path.join(d, fn.replace("/", "_"))
@@ -624,10 +634,8 @@ class GSFetcher:
             files = [k[len(prefix) :] for k in keys if k != prefix]
             if not files:
                 raise FileNotFoundError(f"gs://{self.bucket}/{key}: no objects under prefix")
-        if self._cache_dir is None:
-            self._cache_dir = tempfile.mkdtemp(prefix="sdspark-gscache-")
         tag = hashlib.sha1(f"{self.endpoint}/{self.bucket}/{key}".encode()).hexdigest()[:16]
-        d = os.path.join(self._cache_dir, tag)
+        d = os.path.join(_cache_dir(self, "sdspark-gscache-"), tag)
         os.makedirs(d, exist_ok=True)
         for fn in files:
             dest = os.path.join(d, fn.replace("/", "_"))

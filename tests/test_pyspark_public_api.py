@@ -44,3 +44,45 @@ def test_library_sample_calls_pass_fraction_by_keyword():
         and any(k.arg == "seed" for k in node.keywords)
     ]
     assert not hits, "positional arguments next to seed=:\n" + "\n".join(hits)
+
+
+def _calls_outside(path: Path, attr: str, allowed_def: str | None = None) -> list[str]:
+    """``<expr>.<attr>`` uses in one library file, except inside the
+    top-level function ``allowed_def``."""
+    tree = ast.parse(path.read_text())
+    skip = [
+        (d.lineno, d.end_lineno)
+        for d in tree.body
+        if isinstance(d, ast.FunctionDef) and d.name == allowed_def
+    ]
+    return [
+        f"{path.relative_to(_ROOT)}:{node.lineno}: {ast.unparse(node)}"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and node.attr == attr
+        and not any(a <= node.lineno <= b for a, b in skip)
+    ]
+
+
+def test_library_builds_local_frames_through_one_helper():
+    """``spark.createDataFrame(list)`` plans a Python-RDD scan (``Scan
+    ExistingRDD``), which runs a Python-worker stage on every execution
+    and carries no size statistics.  Driver-side rows become a frame
+    through ``session.local_frame`` (an Arrow local relation), the only
+    place the library calls ``createDataFrame``."""
+    hits = [
+        hit
+        for path in _LIBRARY
+        for hit in _calls_outside(
+            path, "createDataFrame", "local_frame" if path.name == "session.py" else None
+        )
+    ]
+    assert not hits, "createDataFrame outside session.local_frame:\n" + "\n".join(hits)
+
+
+def test_library_uses_no_rdd():
+    """``DataFrame.rdd`` turns Arrow/Tungsten rows into pickled Python
+    rows; the library's Python kernels run through ``mapInPandas`` and
+    ``applyInPandas`` instead."""
+    hits = [hit for path in _LIBRARY for hit in _calls_outside(path, "rdd")]
+    assert not hits, ".rdd in the library:\n" + "\n".join(hits)

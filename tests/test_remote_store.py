@@ -109,3 +109,44 @@ def test_remote_store_without_zmetadata_is_clear_error(spark, served):
     os.makedirs(os.path.join(root, "bare.zarr", "points"), exist_ok=True)
     with pytest.raises(IOError, match="zmetadata"):
         read_zarr_store(spark, f"{url}/bare.zarr")
+
+
+def test_fetcher_cache_dir_made_once_under_concurrent_downloads(monkeypatch):
+    """A store read downloads its parquet elements on several threads
+    that share one fetcher: the cache directory is made once, and every
+    thread gets the same one."""
+    import sys
+    import tempfile
+    import time
+
+    from spatialdata_spark.sources import fetch
+
+    made = []
+
+    def slow_mkdtemp(prefix=""):
+        time.sleep(0.01)  # widen the check-then-act window
+        made.append(prefix)
+        return f"/nonexistent/{prefix}{len(made)}"
+
+    monkeypatch.setattr(tempfile, "mkdtemp", slow_mkdtemp)
+    fetcher = HttpFetcher("http://127.0.0.1:9")
+    start = threading.Barrier(16)
+    got = []
+
+    def worker():
+        start.wait(timeout=10)
+        got.append(fetch._cache_dir(fetcher, "sdspark-httpcache-"))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(made) == 1
+    assert got == [got[0]] * 16

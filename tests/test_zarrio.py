@@ -312,3 +312,157 @@ def test_labels_written_2d_ngff_conformant(spark, tmp_path):
     back = read_zarr_store(spark, p)
     got = {(r["y"], r["x"]): r["label"] for r in back.labels["cells"].collect()}
     assert got == {(y, x): (y + x) % 4 + 1 for y in range(20) for x in range(20)}
+
+
+# ---------------------------------------------------------------------------
+# concurrent element IO
+# ---------------------------------------------------------------------------
+
+
+def test_failed_element_write_raises_after_every_job_finished(spark, tmp_path):
+    """One element's job raises: the write re-raises that error, writes
+    no kind-group documents and no ``.zmetadata``, and returns only after
+    the other element's slower job has finished."""
+    from spatialdata_spark.catalog import SpatialDataset
+
+    def _slow(batches):
+        import time
+
+        for pdf in batches:
+            time.sleep(1.0)
+            yield pdf
+
+    good = spark.range(4).selectExpr("id", "CAST(id AS DOUBLE) AS x", "CAST(id AS DOUBLE) AS y")
+    slow = good.repartition(1).mapInPandas(_slow, good.schema)
+    bad = good.select("id", "y", F.when(F.col("id") == 2, F.raise_error(F.lit("element boom"))).otherwise(F.col("x")).alias("x"))
+    ds = SpatialDataset(spark).add_points("slow", slow).add_points("bad", bad)
+    p = str(tmp_path / "store.zarr")
+    with pytest.raises(Exception, match="element boom"):
+        write_zarr_store(ds, p)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert os.path.exists(os.path.join(p, "points", "slow", "points.parquet", "_SUCCESS"))
+    assert not os.path.exists(os.path.join(p, ".zmetadata"))
+    assert not os.path.exists(os.path.join(p, "points", ".zgroup"))
+
+
+def test_missing_raster_meta_fails_before_anything_is_written(spark, tmp_path):
+    from spatialdata_spark.catalog import SpatialDataset
+
+    pts = spark.range(3).selectExpr("id", "CAST(id AS DOUBLE) AS x", "CAST(id AS DOUBLE) AS y")
+    labels = spark.range(4).selectExpr("id DIV 2 AS y", "id % 2 AS x", "id + 1 AS label")
+    ds = SpatialDataset(spark).add_points("pts", pts).add_labels("cells", labels)
+    p = str(tmp_path / "store.zarr")
+    with pytest.raises(ValueError, match="'cells' to zarr needs a RasterMeta"):
+        write_zarr_store(ds, p)
+    assert not os.path.exists(p)
+
+
+def test_store_jobs_inherit_the_callers_job_group(spark, tmp_path):
+    """Every job a store write and read start runs in the caller's job
+    group, also those started on the element threads (per-op tracing
+    keys on the group)."""
+    from spatialdata_spark.catalog import SpatialDataset
+    from spatialdata_spark.operators.raster import RasterMeta
+
+    sc = spark.sparkContext
+    pts = spark.range(10).selectExpr("id", "CAST(id AS DOUBLE) AS x", "CAST(id * 2 AS DOUBLE) AS y")
+    labels = spark.range(64).selectExpr("id DIV 8 AS y", "id % 8 AS x", "id % 3 + 1 AS label")
+    image = labels.selectExpr("0 AS c", "y", "x", "CAST(label AS DOUBLE) * 1.5D AS value")
+    ds = (
+        SpatialDataset(spark)
+        .add_points("pts", pts)
+        .add_labels("cells", labels)
+        .add_images("img", image)
+        .add_table("tab", pts.selectExpr("id AS instance_id", "'pts' AS region"), region="pts")
+    )
+    meta = {
+        "cells": RasterMeta(height=8, width=8, tile=4, dtype="i8"),
+        "img": RasterMeta(height=8, width=8, tile=4, dtype="f8"),
+    }
+    p = str(tmp_path / "store.zarr")
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("zarr-store-group", "store roundtrip")
+    try:
+        write_zarr_store(ds, p, raster_meta=meta)
+        back = read_zarr_store(spark, p)
+        for kind in ("points", "labels", "images", "tables"):
+            for df in back.elements[kind].values():
+                df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # subset, not equality: the status store drops its oldest finished
+    # jobs once it holds more than spark.ui.retainedJobs
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
+    # 4 element writes + 4 reads at the least
+    assert len(sc.statusTracker().getJobIdsForGroup("zarr-store-group")) >= 8
+
+
+def test_read_store_orders_elements_by_sorted_group_name(spark, tmp_path):
+    from spatialdata_spark.catalog import SpatialDataset
+    from spatialdata_spark.operators.raster import RasterMeta
+    from spatialdata_spark.operators.vectorize import circles_to_shapes
+
+    pts = spark.range(3).selectExpr("id", "CAST(id AS DOUBLE) AS x", "CAST(id AS DOUBLE) AS y")
+    circles = circles_to_shapes(pts.selectExpr("id AS shape_id", "x", "y", "1.0D AS radius"))
+    labels = spark.range(16).selectExpr("id DIV 4 AS y", "id % 4 AS x", "id + 1 AS label")
+    image = labels.selectExpr("0 AS c", "y", "x", "CAST(label AS DOUBLE) AS value")
+    table = pts.selectExpr("id AS instance_id", "'p_a' AS region")
+    ds = SpatialDataset(spark)
+    names = {
+        "points": ["p_b", "p_c", "p_a"],
+        "shapes": ["s_z", "s_m"],
+        "tables": ["t_y", "t_x"],
+        "labels": ["l_2", "l_10", "l_1"],
+        "images": ["i_b", "i_a"],
+    }
+    meta = {}
+    for n in names["points"]:
+        ds.add_points(n, pts)
+    for n in names["shapes"]:
+        ds.add_shapes(n, circles)
+    for n in names["tables"]:
+        ds.add_table(n, table, region="p_a")
+    for n in names["labels"]:
+        ds.add_labels(n, labels)
+        meta[n] = RasterMeta(height=4, width=4, tile=4, dtype="i8")
+    for n in names["images"]:
+        ds.add_images(n, image)
+        meta[n] = RasterMeta(height=4, width=4, tile=4, dtype="f8")
+    p = str(tmp_path / "store.zarr")
+    write_zarr_store(ds, p, raster_meta=meta)
+    back = read_zarr_store(spark, p)
+    for kind, written in names.items():
+        assert list(back.elements[kind]) == sorted(written), kind
+    assert back.labels["l_10"].count() == 16
+
+
+def test_store_roundtrip_3d_image_and_2d_labels(spark, tmp_path):
+    """A (c, z, y, x) image and (y, x) labels written and read in one
+    store call each: every chunk file is written once, and the read-back
+    pixels equal the written ones."""
+    from spatialdata_spark.catalog import SpatialDataset
+    from spatialdata_spark.operators.raster import RasterMeta
+
+    vol = spark.range(2 * 3 * 10 * 6).selectExpr(
+        "CAST(id DIV 180 AS INT) AS c", "id DIV 60 % 3 AS z", "id DIV 6 % 10 AS y", "id % 6 AS x",
+        "CAST(id % 7 AS DOUBLE) AS value",
+    )
+    labels = spark.range(60).selectExpr("id DIV 6 AS y", "id % 6 AS x", "id % 5 AS label")
+    ds = SpatialDataset(spark).add_images("vol", vol).add_labels("cells", labels)
+    meta = {
+        "vol": RasterMeta(height=10, width=6, tile=4, dtype="f8", n_channels=2, depth=3),
+        "cells": RasterMeta(height=10, width=6, tile=4, dtype="i8"),
+    }
+    p = str(tmp_path / "store.zarr")
+    write_zarr_store(ds, p, raster_meta=meta)
+    vol_chunks = [n for n in os.listdir(os.path.join(p, "images", "vol", "0")) if not n.startswith(".")]
+    assert len(vol_chunks) == 2 * 3 * 3 * 2  # c * z * ceil(10/4) * ceil(6/4)
+    back = read_zarr_store(spark, p)
+    got = {(r["c"], r["z"], r["y"], r["x"]): r["value"] for r in back.images["vol"].collect()}
+    want = {
+        (r["c"], r["z"], r["y"], r["x"]): r["value"] for r in vol.where("value != 0").collect()
+    }
+    assert got == want
+    got_labels = {(r["y"], r["x"]): r["label"] for r in back.labels["cells"].collect()}
+    assert got_labels == {(i // 6, i % 6): i % 5 for i in range(60) if i % 5}
